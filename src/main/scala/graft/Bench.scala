@@ -9,8 +9,7 @@ package graft
   * `noop` sink — `count()` alone would let Catalyst prune most of the
   * computed columns.
   *
-  * Task-metric attribution lives in [[TaskMetricsCensus]] (shared with
-  * the same-phase measurement tools).
+  * Task-metric attribution lives in [[TaskMetricsCensus]].
   */
 object Bench {
 
@@ -320,7 +319,9 @@ object Bench {
     println(compact)
     // sbt prefixes stdout with "[info] ", which breaks naive line-parsers —
     // also persist the JSON to a file so consumers never scrape logs.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_out.json")
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(out).toAbsolutePath.getParent)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     // Plan-shape sidecar: the formatted physical plan of the 5 most
     // expensive queries, written next to the bench artifact so a plan

@@ -78,7 +78,7 @@ object GraftSession {
       // materialization result stage — the memoized pair streams
       // (ngramJaccardCached / cosineNearDupPairsCached) therefore ran
       // their dedup + verify joins at the full initialPartitionNum (256)
-      // regardless of measured bytes: tools/JobCensus showed three
+      // regardless of measured bytes: a per-job census showed three
       // 256-task ~1 s stages per q27 call whose siblings outside the
       // cached subtree coalesced to ~30. Consumers of the cache re-derive
       // partitioning from the scan, so letting AQE size these stages by

@@ -16,8 +16,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * share each GC pause, so the sum reads as GC-pressure-weighted task
   * time (an upper bound on wall GC), not wall seconds.
   *
-  * Shared by [[Bench]] (the per-round artifact sidecars) and the
-  * same-phase measurement tools (`tools.PartitionPhase`), so every
+  * Used by [[Bench]] for its `.metrics.json` sidecar, so every
   * committed number is produced by the one census implementation.
   */
 private[graft] final class TaskMetricsCensus extends SparkListener {

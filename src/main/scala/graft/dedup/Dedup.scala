@@ -233,8 +233,8 @@ object Dedup {
     * (sorted hot array, sorted stop array). Exact, but WITHOUT the full
     * `explode → groupBy(shingle).count()` exchange the obvious form pays
     * (at sf100 that exchange moved ~350M partial rows and spilled its
-    * hash maps — 158 s of the dedup queries' time, measured by
-    * [[StageProbe]], to usually find NOTHING over the bound):
+    * hash maps — 158 s of the dedup queries' time, measured per
+    * stage, to usually find NOTHING over the bound):
     *
     *   1. Chunk-count pass, in-kernel: scan the cached arrays in chunks
     *      of `chunkSize` shingle occurrences, counting within the chunk
@@ -278,11 +278,11 @@ object Dedup {
     * [[ppjoinDocsKernel]]), so its approximation — S depends on chunk
     * boundaries, hence on partitioning — can change candidate volume but
     * never results. Exact-df sets (hot/stop) are unchanged. */
-  private[dedup] def hotStopFrequent(arrs: DataFrame, bound: Int,
-                                maxDf: Int,
-                                prefixTopK: Int,
-                                chunkSize: Int = 4 << 20,
-                                maxCandidates: Int = 16 << 20): (Array[Long], Array[Long], Array[Long]) = {
+  private def hotStopFrequent(arrs: DataFrame, bound: Int,
+                              maxDf: Int,
+                              prefixTopK: Int,
+                              chunkSize: Int = 4 << 20,
+                              maxCandidates: Int = 16 << 20): (Array[Long], Array[Long], Array[Long]) = {
     val b = math.min(bound, maxDf)
     val spark = arrs.sparkSession
     import spark.implicits._
@@ -383,9 +383,9 @@ object Dedup {
     * for NOT needing a df-attach join + per-doc regroup of the full
     * stream — two exchanges the round-5 shape paid. Cold prefix posting
     * lists stay ≤ the hot bound by construction. */
-  private[dedup] def ppjoinDocsKernel(arrs: DataFrame, id: String,
-                                      threshold: Double, hot: Array[Long],
-                                      stop: Array[Long]): DataFrame = {
+  private def ppjoinDocsKernel(arrs: DataFrame, id: String,
+                               threshold: Double, hot: Array[Long],
+                               stop: Array[Long]): DataFrame = {
     val idType = arrs.schema(id).dataType
     val outSchema = StructType(Seq(StructField(id, idType),
       StructField("arr", ArrayType(LongType, containsNull = false)),
@@ -513,7 +513,7 @@ object Dedup {
     * path — the generic Row path boxes every field access, measured as
     * a real fraction of the candidate stage at sf10. Both paths emit
     * identical pairs. */
-  private[dedup] def ppjoinCandidates(prefixed: DataFrame, idType: DataType,
+  private def ppjoinCandidates(prefixed: DataFrame, idType: DataType,
                                threshold: Double): DataFrame = idType match {
     case LongType => ppjoinCandidatesLong(prefixed, threshold)
     case _ => ppjoinCandidatesGeneric(prefixed, idType, threshold)
@@ -634,11 +634,17 @@ object Dedup {
                    maxDf: Int = DefaultMaxDf,
                    prefixHotDf: Int = 512,
                    prefixTopK: Int = 0): DataFrame = {
-    val (docs, cand) =
-      ppjoinDocsAndCandidates(df, id, text, n, threshold, maxDf,
-        prefixHotDf, prefixTopK)
+    val idType = df.schema(id).dataType
+    idOrdering(idType) // loud type validation up-front, both kernel paths
+    val arrs = docShingleArrays(df, id, text, n).cache()
+    val (hot, stop) = hotStopFrequent(arrs, prefixHotDf, maxDf, prefixTopK) match {
+      case (order, stopSet, _) => (order, stopSet)
+    }
+    val docs = ppjoinDocsKernel(arrs, id, threshold, hot, stop)
+    val prefixed = docs.select(col(id).as("__id"), col("sz"),
+      posexplode(col("pre")).as(Seq("pos", "shingle")))
     verifyJaccardArrays(docs.select(col(id), col("arr"), col("sz")),
-      id, cand, threshold)
+      id, ppjoinCandidates(prefixed, idType, threshold), threshold)
   }
 
   // ---- cross-operator reuse of the PPJoin pair stream ----
@@ -845,28 +851,6 @@ object Dedup {
       .filter(col("edit_sim") >= minEditSim)
       .select(col("id_a"), col("id_b"),
         round(col("jaccard"), 6).as("jaccard"), col("edit_sim"))
-  }
-
-  /** The PPJoin pipeline split at the candidate boundary: (per-doc
-    * shingle-array table, deduped candidate pair stream). Exactly
-    * [[ngramJaccard]] minus the verify join — exposed package-wide so
-    * `tools/NgramCensus` can count the candidates the verify stage pays
-    * for (scale-exponent attribution: candidate volume is a corpus
-    * property; verify cost is proportional to it). */
-  private[graft] def ppjoinDocsAndCandidates(df: DataFrame, id: String,
-      text: String, n: Int, threshold: Double,
-      maxDf: Int = DefaultMaxDf, prefixHotDf: Int = 512,
-      prefixTopK: Int = 0): (DataFrame, DataFrame) = {
-    val idType = df.schema(id).dataType
-    idOrdering(idType) // loud type validation up-front, both kernel paths
-    val arrs = docShingleArrays(df, id, text, n).cache()
-    val (hot, stop) = hotStopFrequent(arrs, prefixHotDf, maxDf, prefixTopK) match {
-      case (order, stopSet, _) => (order, stopSet)
-    }
-    val docs = ppjoinDocsKernel(arrs, id, threshold, hot, stop)
-    val prefixed = docs.select(col(id).as("__id"), col("sz"),
-      posexplode(col("pre")).as(Seq("pos", "shingle")))
-    (docs, ppjoinCandidates(prefixed, idType, threshold))
   }
 
   /** The round-5 DIRECT form of [[ngramJaccard]], kept as the parity
@@ -1190,13 +1174,13 @@ object Dedup {
     * to the two-level sub-segment split. Two measurements set the value
     * (60-bit/maxDist-3 on the ScaleUp corpora):
     *
-    *  - Work census (`tools/SimhashBucketCensus`): one-level scan work
+    *  - Work census: one-level scan work
     *    grows ×14.8/decade at 500k→5M docs (320M → 4.74G probe pairs —
     *    the expected random term 4·C(n,2)/2^15 ≈ 1.5G of the 4.74G)
     *    while the two-level keying stays linear (×9.6/decade, all
     *    output-inherent; random term ~3M). The asymptote alone says
     *    two-level past saturation.
-    *  - SAME-PHASE wall time (`tools/SimhashRoutePhase`): the two-level
+    *  - SAME-PHASE wall time: the two-level
     *    kernel already wins 2.4–3.6× at occupancy 15 (sf10full: 4.4/6.6
     *    vs 15.8/77.7 s) — the one-level kernel's per-bucket
     *    materialization (mean-17, max-2451-row groups) costs allocation

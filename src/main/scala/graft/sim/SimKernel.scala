@@ -76,11 +76,10 @@ object SimKernel {
     * against the same tick stream in ONE pass. Ticks repartition + sort
     * once; each scenario's rows buffer in executor memory and replay
     * through all variants back-to-back — so a G-point parameter sweep
-    * pays one shuffle of the data instead of G (the per-variant
-    * [[runScenariosOutcomes]] jobs of [[graft.sweep.Sweep.runSweep]] each
-    * re-shuffle the cached ticks). At cluster scale the shuffle IS the
-    * sweep's data cost; the in-memory replays are CPU-only and the
-    * kernel sustains millions of ticks/s (see `TickReplay`).
+    * pays one shuffle of the data instead of G (one
+    * [[runScenariosOutcomes]] job per variant would re-shuffle the ticks
+    * each time). At cluster scale the shuffle IS the sweep's data cost;
+    * the in-memory replays are CPU-only.
     *
     * Results are BIT-IDENTICAL to running each variant alone: `runOne`
     * is invoked with the ORIGINAL scenarioId (same latency seed, same

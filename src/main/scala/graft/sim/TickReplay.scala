@@ -97,22 +97,4 @@ object TickReplay {
       .map(_.stats)
       .toDF()
   }
-
-  /** Standalone benchmark main: prints ticks/s next to the reference's
-    * 90k baseline. Scale the workload with SPARK_GRAFT_REPLAY_SCENARIOS /
-    * SPARK_GRAFT_REPLAY_TICKS (defaults = the reference shape) — the
-    * kernel scales by adding scenarios, not per-scenario state. */
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val scenarios = sys.env.getOrElse("SPARK_GRAFT_REPLAY_SCENARIOS", Scenarios.toString).toInt
-    val totalTicks = sys.env.getOrElse("SPARK_GRAFT_REPLAY_TICKS",
-      ReferenceTotalTicks.toString).toLong
-    val t0 = System.nanoTime()
-    val stats = run(spark, scenarios, totalTicks).collect()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val ticks = stats.map(_.getAs[Long]("ticksTotal")).sum
-    val trades = stats.map(_.getAs[Long]("nTrades")).sum
-    println(f"""{"metric":"tick_replay","ticks":$ticks,"trades":$trades,"sec":$secs%.3f,"ticks_per_sec":${ticks / secs}%.0f,"reference_baseline":90000}""")
-    spark.stop()
-  }
 }

@@ -904,22 +904,6 @@ object Similarity {
     * col = dimension. Values are exactly [[planeComponent]] — computed
     * ONCE per task (tables·planes·d md5 calls total) instead of once per
     * (row, plane, dim), which at n rows would be n× that many digests. */
-  /** Dev-only census hook for tools/BucketProbe: (bucket, size) of the
-    * near-dup LSH signature stream at a given plane/table count. */
-  private[graft] def debugBucketSizes(df: DataFrame, id: String, vec: String,
-                                      nPlanes: Int, nTables: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    toVecs(df, id, vec).mapPartitions { it =>
-      var mat: Array[Array[Double]] = null
-      it.flatMap { a =>
-        if (mat == null || mat(0).length < a.v.length)
-          mat = planeMatrix(nTables * nPlanes, a.v.length)
-        (0 until nTables).iterator.map(t => signature(a.v, t, nPlanes, mat))
-      }
-    }.groupByKey(identity).count().toDF("bucket", "sz")
-  }
-
   private[graft] def planeMatrix(numPlanes: Int, d: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes, d)((plane, dim) => planeComponent(plane, dim))
 
@@ -1025,7 +1009,7 @@ object Similarity {
     // dedup rides the window's exchange + sort via lag() instead of a
     // `.distinct()` paying a second full shuffle of the scored pair
     // stream (r18, guide §2.4: operations keyed the same way share one
-    // exchange; before/after plans in plans/r18/q34_*). Both windows
+    // exchange: 10 exchanges became 8). Both windows
     // share one partitioning + sort; the row_number after the filter
     // re-ranks only surviving rows, exactly the old distinct-then-rank.
     val w = Window.partitionBy(col("id_a"))
@@ -1067,7 +1051,7 @@ object Similarity {
     * only on the per-cell shortlist). Labels are a MAJORITY vote over k
     * neighbors, so the audit verdict tolerates shortlist misses far
     * better than a top-k list does — the route-agreement evidence lives
-    * in `tools/KnnRoutePhase` and SimilarityAnnSpec. */
+    * in SimilarityAnnSpec. */
   def knnLabels(df: DataFrame, id: String, vec: String, label: String,
                 k: Int = 5, cells: Int = 0, probes: Int = 4,
                 pq: Boolean = false): DataFrame = {

@@ -17,28 +17,16 @@ import org.apache.spark.sql.streaming._
   */
 object BarsTws {
 
-  /** The per-batch fold shared by the cold and warm processors: same
-    * semantics as IncrementalBars.foldGroup, over a ValueState instead
-    * of GroupState (ticks event-time-ordered per key per batch). */
+  /** The per-batch fold shared by the cold and warm processors:
+    * IncrementalBars.foldGroup over a ValueState instead of GroupState
+    * (ticks event-time-ordered per key per batch). */
   private def foldRows(open: ValueState[IncrementalBars.OpenBar], barMs: Long,
                        key: String, rows: Iterator[IncrementalBars.Tick])
       : Iterator[IncrementalBars.Bar] = {
     val closed = scala.collection.mutable.ArrayBuffer.empty[IncrementalBars.Bar]
     var cur = if (open.exists()) open.get() else null
-    rows.foreach { t =>
-      val bs = t.tsMs - t.tsMs % barMs
-      if (cur == null) {
-        cur = IncrementalBars.OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-      } else if (bs == cur.barStartMs) {
-        cur = cur.copy(high = math.max(cur.high, t.price),
-          low = math.min(cur.low, t.price), close = t.price,
-          volume = cur.volume + t.volume, tickCount = cur.tickCount + 1)
-      } else {
-        closed += IncrementalBars.Bar(key, cur.barStartMs, cur.open, cur.high,
-          cur.low, cur.close, cur.volume, cur.tickCount)
-        cur = IncrementalBars.OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-      }
-    }
+    rows.foreach(t =>
+      cur = IncrementalBars.foldTick(cur, key, t.tsMs, t.price, t.volume, barMs)(closed += _))
     if (cur != null) open.update(cur)
     closed.iterator
   }

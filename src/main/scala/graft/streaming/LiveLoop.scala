@@ -53,9 +53,7 @@ object LiveLoop {
       val out = scala.collection.mutable.ArrayBuffer.empty[LoopEvent]
       var cur = if (open.exists()) open.get() else null
 
-      def close(): Unit = {
-        val bar = IncrementalBars.Bar(key, cur.barStartMs, cur.open, cur.high,
-          cur.low, cur.close, cur.volume, cur.tickCount)
+      def close(bar: IncrementalBars.Bar): Unit = {
         out += LoopEvent(key, bar.barStartMs, "bar", "", bar.close, bar.tickCount)
         // bounded history: append, trim to the strategy lookback
         val bars = (hist.get().toSeq :+ bar).takeRight(strategy.lookbackBars)
@@ -66,19 +64,8 @@ object LiveLoop {
         }
       }
 
-      rows.foreach { t =>
-        val bs = t.tsMs - t.tsMs % barMs
-        if (cur == null) {
-          cur = IncrementalBars.OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-        } else if (bs == cur.barStartMs) {
-          cur = cur.copy(high = math.max(cur.high, t.price),
-            low = math.min(cur.low, t.price), close = t.price,
-            volume = cur.volume + t.volume, tickCount = cur.tickCount + 1)
-        } else {
-          close()
-          cur = IncrementalBars.OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-        }
-      }
+      rows.foreach(t =>
+        cur = IncrementalBars.foldTick(cur, key, t.tsMs, t.price, t.volume, barMs)(close))
       if (cur != null) open.update(cur)
       out.iterator
     }
@@ -153,9 +140,7 @@ object LiveLoop {
           SignalView(s.tsMs, s.value, age, stale = age > maxSignalAgeMs)
         }
 
-      def close(nowMs: Long): Unit = {
-        val bar = IncrementalBars.Bar(key, cur.barStartMs, cur.open, cur.high,
-          cur.low, cur.close, cur.volume, cur.tickCount)
+      def close(nowMs: Long)(bar: IncrementalBars.Bar): Unit = {
         val v = view(nowMs)
         def ev(kind: String, action: String) = LoopEventS(key, bar.barStartMs,
           kind, action, bar.close, bar.tickCount,
@@ -172,18 +157,8 @@ object LiveLoop {
         if (e.kind == 0) { // signal: last-wins under the monotone clock
           if (sig == null || e.tsMs >= sig.tsMs)
             sig = StreamingAsOf.LastSignal(e.tsMs, e.signalValue)
-        } else {
-          val bs = e.tsMs - e.tsMs % barMs
-          if (cur == null) {
-            cur = IncrementalBars.OpenBar(bs, e.price, e.price, e.price, e.price, 0.0, 1L)
-          } else if (bs == cur.barStartMs) {
-            cur = cur.copy(high = math.max(cur.high, e.price),
-              low = math.min(cur.low, e.price), close = e.price,
-              tickCount = cur.tickCount + 1)
-          } else {
-            close(e.tsMs)
-            cur = IncrementalBars.OpenBar(bs, e.price, e.price, e.price, e.price, 0.0, 1L)
-          }
+        } else { // tick: the event feed carries no volume
+          cur = IncrementalBars.foldTick(cur, key, e.tsMs, e.price, 0.0, barMs)(close(e.tsMs))
         }
       }
       if (cur != null) open.update(cur)

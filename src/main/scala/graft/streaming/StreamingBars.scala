@@ -59,13 +59,26 @@ object IncrementalBars {
   case class OpenBar(barStartMs: Long, open: Double, high: Double, low: Double,
                      close: Double, volume: Double, tickCount: Long)
 
-  private def bucketStart(tsMs: Long, barMs: Long): Long = tsMs - tsMs % barMs
-
-  /** Fold one tick into the open bar (A2, `market_data_types.py:71-83`):
-    * open on first, high=max, low=min, close=last, volume+=, count++. */
-  private def update(b: OpenBar, t: Tick): OpenBar =
-    b.copy(high = math.max(b.high, t.price), low = math.min(b.low, t.price),
-      close = t.price, volume = b.volume + t.volume, tickCount = b.tickCount + 1)
+  /** Fold one tick into the forming bar `open` (null before the key's
+    * first tick) and return the new forming bar (A2,
+    * `market_data_types.py:71-83`): open on first, high=max, low=min,
+    * close=last, volume+=, count++. A tick in a later bucket first hands
+    * the forming bar to `onClose` as a completed [[Bar]] and starts a new
+    * one — gap buckets emit nothing (ST3). Every stateful renderer and
+    * both live loops fold ticks through this one function. */
+  private[streaming] def foldTick(open: OpenBar, key: String, tsMs: Long,
+      price: Double, volume: Double, barMs: Long)(onClose: Bar => Unit): OpenBar = {
+    val bs = tsMs - tsMs % barMs
+    if (open != null && bs == open.barStartMs)
+      open.copy(high = math.max(open.high, price), low = math.min(open.low, price),
+        close = price, volume = open.volume + volume, tickCount = open.tickCount + 1)
+    else {
+      if (open != null)
+        onClose(Bar(key, open.barStartMs, open.open, open.high, open.low,
+          open.close, open.volume, open.tickCount))
+      OpenBar(bs, price, price, price, price, volume, 1L)
+    }
+  }
 
   /** The per-group fold shared by cold and warm-started renders: fold
     * this micro-batch's ticks into the open-bar state, emitting each
@@ -75,20 +88,7 @@ object IncrementalBars {
       : Iterator[Bar] = {
     val closed = scala.collection.mutable.ArrayBuffer.empty[Bar]
     var open = state.getOption.orNull
-    it.foreach { t =>
-      val bs = bucketStart(t.tsMs, barMs)
-      if (open == null) {
-        open = OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-      } else if (bs == open.barStartMs) {
-        open = update(open, t)
-      } else {
-        // bucket advanced: close the forming bar (gap buckets emit
-        // nothing — ST3), start a new one
-        closed += Bar(key, open.barStartMs, open.open, open.high,
-          open.low, open.close, open.volume, open.tickCount)
-        open = OpenBar(bs, t.price, t.price, t.price, t.price, t.volume, 1L)
-      }
-    }
+    it.foreach(t => open = foldTick(open, key, t.tsMs, t.price, t.volume, barMs)(closed += _))
     if (open != null) state.update(open)
     closed.iterator
   }

@@ -2,7 +2,6 @@ package graft.sweep
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.sim._
 
 /** Parameter-sweep orchestration (SURVEY §3.4, J8, A16–A18).
@@ -10,9 +9,9 @@ import graft.sim._
   * - [[expandGrid]] — deterministic cartesian product of the parameter
   *   grid (`/root/reference/python/framework/optimization/grid_expander.py:16-28`):
   *   keys sorted, value order preserved, combination order reproducible.
-  * - [[runSweep]] — load-once/run-many: the tick Dataset is persisted
-  *   ONCE and every combination replays against the same cached
-  *   partitions — the Spark form of the reference's mount-identity reuse
+  * - [[runSweepFused]] — load-once/run-many: the ticks shuffle ONCE and
+  *   every combination replays against the same buffered scenario — the
+  *   Spark form of the reference's mount-identity reuse
   *   (`batch_orchestrator.py:656-695`: data identity excludes strategy
   *   params, so the mount is shared across the whole sweep).
   *
@@ -43,76 +42,19 @@ object Sweep {
       nTrades: Long, netPnl: Double, maxDrawdown: Double,
       error: String = "")
 
-  /** Run every combination against the same persisted tick data.
-    * `build` maps a combination to (config, strategy) — the reference's
-    * dotted-path parameter override collapses to ordinary function
-    * application here.
+  /** Run every combination of the grid against the same tick data in
+    * ONE repartition+sort pass ([[SimKernel.runScenariosMultiplexed]]):
+    * each scenario's rows buffer once and replay through every
+    * combination in memory, instead of one full shuffle of the tick data
+    * per combination. `build` maps a combination to (config, strategy) —
+    * the reference's dotted-path parameter override collapses to
+    * ordinary function application here.
     *
-    * Fully distributed: per-combo results map to stats-level `SweepRow`s
-    * ON THE EXECUTORS (the nested trade ledgers never reach the driver)
-    * and the per-combo Datasets union lazily into one ledger — the driver
-    * holds only the plan. Callers wanting the trades keep them by writing
-    * `SimKernel.runScenarios(...)` output to a table per combo instead. */
-  def runSweep(sweepId: String, ticks: Dataset[SimTick],
-               grid: Map[String, Seq[String]],
-               build: Map[String, String] => (SimConfig, DecisionLogic)): DataFrame =
-    runSweepWithHandle(sweepId, ticks, grid, build)._1
-
-  /** [[runSweep]] plus a release hook: call it AFTER materializing the
-    * ledger (the persisted tick partitions must stay alive while the plan
-    * executes). Callers that skip it rely on LRU block eviction. */
-  def runSweepWithHandle(sweepId: String, ticks: Dataset[SimTick],
-               grid: Map[String, Seq[String]],
-               build: Map[String, String] => (SimConfig, DecisionLogic))
-      : (DataFrame, () => Unit) = {
-    val spark = ticks.sparkSession
-    import spark.implicits._
-    val cached = ticks.persist(StorageLevel.MEMORY_AND_DISK)
-    val perCombo = expandGrid(grid).map { combo =>
-      try {
-        val (cfg, logic) = build(combo.params)
-        val (runId, params, start) = (combo.runId, combo.params, cfg.startBalance)
-        // Executor-side failures are captured PER SCENARIO inside the
-        // kernel (runScenariosOutcomes): one throwing scenario emits an
-        // error row instead of aborting the whole lazily-unioned ledger.
-        SimKernel.runScenariosOutcomes(cached, cfg, logic).map { o =>
-          o.result match {
-            case Some(r) =>
-              SweepRow(sweepId, runId, "ok", params,
-                r.stats.scenarioId, r.stats.nTrades,
-                r.stats.finalBalance - start, r.stats.maxDrawdown)
-            case None =>
-              SweepRow(sweepId, runId, "error", params,
-                o.scenarioId, 0L, 0.0, 0.0, o.error)
-          }
-        }
-      } catch {
-        // build() failures surface at plan-construction time on the driver;
-        // record the message so the ledger says WHY the combo failed.
-        case e: Exception =>
-          spark.createDataset(Seq(SweepRow(sweepId, combo.runId,
-            "error", combo.params, "", 0L, 0.0, 0.0, e.getMessage)))
-      }
-    }
-    // empty grid (any key with zero values) → empty ledger, not a crash
-    val ledger =
-      if (perCombo.isEmpty) spark.emptyDataset[SweepRow].toDF()
-      else perCombo.reduce(_ union _).toDF()
-    (ledger, () => { cached.unpersist(); () })
-  }
-
-  /** [[runSweep]] with the sweep-fused kernel: the whole grid executes in
-    * ONE repartition+sort pass over the ticks
-    * ([[SimKernel.runScenariosMultiplexed]] — each scenario's rows buffer
-    * once and replay through every combination in memory), instead of one
-    * full shuffle of the tick data per combination. Same ledger rows as
-    * [[runSweep]], bit-identical per (runId, scenarioId) — the kernel
-    * runs under the original scenarioId, so latency seeds and every
-    * downstream stat match the per-combo path exactly (spec'd).
-    *
-    * Prefer this path for real sweeps; [[runSweep]] remains for callers
-    * that need per-combo plans (e.g. streaming results out combo by
-    * combo) and as the parity witness. */
+    * Each ledger row is bit-identical to that combination's solo
+    * [[SimKernel.runScenariosOutcomes]] run (spec'd): the kernel runs
+    * under the original scenarioId, so latency seeds and every
+    * downstream stat match. Results map to stats-level `SweepRow`s ON
+    * THE EXECUTORS — the nested trade ledgers never reach the driver. */
   def runSweepFused(sweepId: String, ticks: Dataset[SimTick],
                grid: Map[String, Seq[String]],
                build: Map[String, String] => (SimConfig, DecisionLogic)): DataFrame = {

@@ -41,7 +41,7 @@ object Cooccur {
     *        self-join at the session's full `spark.sql.shuffle.partitions`
     *        width (an explicit-count repartition — REPARTITION_BY_NUM —
     *        which AQE never coalesces). MEASURED round 15
-    *        (`tools/CooccurSkewPhase`, 1M docs × 25 distinct terms,
+    *        (1M docs × 25 distinct terms,
     *        interleaved same-phase A/B): AQE's coalescing sizes that
     *        exchange by its INPUT bytes (~0.5 GB → single-digit
     *        partition counts at the 64 MB advisory) but the stage's

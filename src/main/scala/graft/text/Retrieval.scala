@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *   - TF-IDF is the word-count shape: (doc, term) counts map-side
   *     combined; the tf ⋈ df join shuffles on term, where stopword-grade
   *     hot keys are a measured hazard AQE does NOT repair (see
-  *     [[tfidfTopTerms]] and `tools/SkewPhase`) — since round 14 the hot
+  *     [[tfidfTopTerms]]) — since round 14 the hot
   *     terms are AUTO-routed around the exchange via a broadcast
   *     heavy-hitter set when a sampled df census says one term's postings
   *     outgrow a task (the `cosineTopK` router precedent); the per-doc
@@ -177,7 +177,7 @@ object Retrieval {
 
   /** Default task-size threshold for the auto route: one term's postings
     * crossing ~128 MB is a task a single executor core should not own at
-    * cluster scale (the round-13 SkewPhase measurement: a 4M-doc
+    * cluster scale (the round-13 skew measurement: a 4M-doc
     * stopword's 160 MB partition ran a 36 s straggler vs a 1.1 s p50). */
   val DefaultHotTaskBytes: Long = 128L << 20
 
@@ -199,7 +199,7 @@ object Retrieval {
     *      sf100 corpus (31-term vocabulary, 5M docs): maxDf alone said
     *      "hot" and the routed plan paid 1.42× wall + 64 GB of spill vs
     *      the broadcast plain plan, removing a hazard that was never
-    *      present. The r13 SkewPhase synthetic (80M-term vocabulary)
+    *      present. The r13 skew synthetic (80M-term vocabulary)
     *      fails the broadcast test by 2.7 GB and routes, as it must.
     *
     * Both comparisons DIVIDE the byte threshold by the row size instead
@@ -252,7 +252,7 @@ object Retrieval {
     * broadcasts. Chao1 keys on SINGLETONS — the signature of an
     * undersampled vocabulary: a fully-seen vocab has n1 ≈ 0 and
     * estimates ≈ D (sf100 → 31k → broadcast → plain), while a df-1-heavy
-    * tail (the 80M-term SkewPhase synthetic, or any real open-domain
+    * tail (the 80M-term skew synthetic, or any real open-domain
     * corpus) is singleton-dominated and the n1² term explodes past any
     * broadcast threshold (→ hot), which is the safe direction — the
     * failure mode of underestimating here would be shipping the skewed
@@ -433,15 +433,15 @@ object Retrieval {
     * first, so every cold partition is bounded by the H-th hottest df.
     * Output is identical either way (RetrievalSpec pins parity). The hot
     * broadcast frame carries the `graft_hot_terms` subquery alias — the
-    * route's unambiguous ANALYZED-plan signature for specs and
-    * `tools/SkewPhase` (a bare `Union` test false-positives on any
+    * route's unambiguous ANALYZED-plan signature for specs and plan
+    * audits (a bare `Union` test false-positives on any
     * unrelated future Union); the alias erases in optimization, so the
     * executed plan is untouched.
     *
     * The hot route persists the vocabulary-sized df aggregate so the
     * heavy-hitter close and the cold join share ONE materialization
     * (Catalyst clones DAG-referenced subtrees into independent corpus
-    * passes; the first SkewPhase cut of this route paid a full extra
+    * passes; the first cut of this route paid a full extra
     * token exchange re-deriving it). Since round 15 that persist is
     * MANAGED, not documented away: entries live in a bounded LRU keyed
     * on (session, tf plan, H) and validated against the source files'
@@ -537,7 +537,7 @@ object Retrieval {
     *
     * Skew design (the tf ⋈ df join shuffles on term, and a stopword's
     * postings are an N_docs-row hot key) — round 13 MEASURED both sides
-    * of this (`tools/SkewPhase`, 4M docs / 80M-term vocabulary, 5
+    * of this (4M docs / 80M-term vocabulary, 5
     * corpus-wide stopwords):
     *
     *   - The round-12 scaladoc claim — "AQE's skew-join splits
@@ -1331,7 +1331,7 @@ object Retrieval {
     * `columns` config ⇒ full rebuild ⇒ new fingerprint), so the one
     * footer-read job per index pays once per session instead of once
     * per QUERY (r18: q99/q100 each ran two schema-inference jobs per
-    * call — measured by tools/JobCensus as 2 of q100's 13 steady-state
+    * call — measured by a per-job census as 2 of q100's 13 steady-state
     * jobs). Bounded: one entry per distinct index an application
     * serves. */
   private val postingsSchemaCache =

@@ -7,8 +7,9 @@ import java.nio.file.{Files, Paths}
   * measured run, then validate later runs against it inside a tolerance
   * band and a validity window).
   *
-  * Usage: `sbt "runMain graft.tools.BenchCertify bench_local_r6.json
-  * bench_certificate.json [tolerancePct] [floorSec]"`.
+  * Usage: `sbt "runMain graft.tools.BenchCertify bench_local_r<N>.json
+  * bench_certificate.json [tolerancePct] [floorSec]"`; `tools/mint.sh`
+  * runs it as the last step of a mint.
   *
   * The committed certificate is the perf-regression gate's baseline:
   * `BenchCertificateGateSpec` validates each round's committed local

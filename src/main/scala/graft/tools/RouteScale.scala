@@ -2,10 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.GraftSession
 import graft.dedup.{Clusters, Contamination, Dedup}
 
-/** Dev-only scale witness for the two size-routed operators: run each on a
+/** Scale witnesses for the two size-routed operators: run each on a
   * corpus large enough that the DISTRIBUTED branch is chosen by real data
   * volume (not by a spec pinning the threshold to zero), time it, and
   * prove the branch's output identical to the other branch at the same
@@ -25,17 +24,10 @@ import graft.dedup.{Clusters, Contamination, Dedup}
   *    the natural call takes the inverted-index equi-join. Parity: forced
   *    broadcast branch at the same volume.
   *
-  * Usage: `runMain graft.tools.RouteScale [ccDocsDir] [contDocsDir]`,
-  * each holding a `documents.parquet` (e.g. ScaleUp ×10 and ×200 of
-  * sf0.1). Prints one summary line per operator: route determinant,
-  * route taken, wall seconds, result cardinality, and the parity diff
-  * (must be 0).
-  *
-  * The witnesses also run as an OPT-IN spec
-  * (`graft.tools.RouteScaleSpec`, gated on `SPARK_GRAFT_SCALE_SPECS=1`)
-  * so the route evidence re-runs on one command instead of living only
-  * in round notes — both paths share [[ccWitness]] /
-  * [[contaminationWitness]].
+  * The witnesses run as an OPT-IN spec (`graft.tools.RouteScaleSpec`,
+  * gated on `SPARK_GRAFT_SCALE_SPECS=1`) over two `documents.parquet`
+  * directories (e.g. ScaleUp ×10 and ×200 of sf0.1), so the route
+  * evidence re-runs on one command instead of living only in notes.
   */
 object RouteScale {
 
@@ -60,32 +52,6 @@ object RouteScale {
   /** Materialize through the noop sink (full execution, nothing cached). */
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-
-  def main(args: Array[String]): Unit = {
-    val ccDocsDir = args.headOption.getOrElse("target/sf1")
-    val contDocsDir = args.lift(1).getOrElse("target/sf20docs")
-    val contOnly = args.contains("cont-only")
-    val spark = GraftSession.localFromEnv()
-
-    if (!contOnly) {
-      val w = ccWitness(spark, ccDocsDir)
-      println(s"[route-scale] cc: edges=${w.edges} (cap=${w.cap})")
-      println(f"[route-scale] cc: route=${w.route} sec=${w.sec}%.1f " +
-        s"labels=${w.labels}")
-      println(f"[route-scale] cc: parity_vs_union_find_diff=${w.parityDiff} " +
-        f"(forced uf sec=${w.ufSec}%.1f)")
-    }
-
-    val w = contaminationWitness(spark, contDocsDir)
-    println(s"[route-scale] contamination: eval_hashes=${w.evalHashes} " +
-      s"(cap=${w.cap}) route=${w.route}")
-    println(f"[route-scale] contamination: natural sec=${w.sec}%.1f " +
-      s"rows=${w.rows}")
-    println(f"[route-scale] contamination: parity_vs_broadcast_diff=" +
-      f"${w.parityDiff} (forced broadcast sec=${w.bcSec}%.1f)")
-
-    spark.stop()
-  }
 
   /** Contamination witness: route decided by the real eval hash volume. */
   def contaminationWitness(spark: org.apache.spark.sql.SparkSession,

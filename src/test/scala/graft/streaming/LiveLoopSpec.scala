@@ -127,8 +127,8 @@ class LiveLoopSpec extends SparkSpecBase {
     // symbols' (forming bar + history) — the invariant that must hold as
     // keys multiply: EVERY key closes exactly minutes-1 bars and fires
     // its decision on every bar from the lookback on, with a mid-bar
-    // batch split. graft.tools.LiveLoopSoak drives the same invariant at
-    // 1000+ keys / 1.8M ticks.
+    // batch split. The opt-in StreamingSoakSpec drives the same invariant
+    // at 1000 keys / 1.8M ticks.
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -27,13 +27,13 @@ class SweepSpec extends SparkSpecBase {
       Map("a" -> "y", "b" -> "1"), Map("a" -> "y", "b" -> "2")))
   }
 
-  test("runSweep: load-once replay per combo, ledger ranks and OFAT-analyzes") {
+  test("runSweepFused: load-once replay, ledger ranks and OFAT-analyzes") {
     // rising price series: longer hold -> larger P&L, deterministic ranking
     val ticks = (0 until 30).map { i =>
       SimTick("s1", 1000L + i * 1000, i.toLong, 100.0 + i * 0.01, 100.002 + i * 0.01)
     }
     val grid = Map("open" -> Seq("2", "5"), "hold" -> Seq("3", "10"))
-    val ledger = Sweep.runSweep("sw1", ticks.toDS(), grid,
+    val ledger = Sweep.runSweepFused("sw1", ticks.toDS(), grid,
       p => (SimConfig(SymbolSpec(3, 1.0)), new OpenAt(p("open").toLong, p("hold").toLong)))
     val obj = Sweep.ledgerObjectives(ledger)
     assert(obj.count() === 4)
@@ -59,9 +59,9 @@ class SweepSpec extends SparkSpecBase {
 
   test("runSweepFused: ledger bit-identical to the per-combo path") {
     // two scenarios x four combos: the fused kernel (one shuffle, all
-    // combos per buffered scenario) must reproduce runSweep's ledger
-    // EXACTLY — same scenarioIds mean same latency seeds, so every
-    // netPnl matches to the bit, not within a tolerance
+    // combos per buffered scenario) must reproduce each combination's
+    // solo kernel run EXACTLY — same scenarioIds mean same latency seeds,
+    // so every netPnl matches to the bit, not within a tolerance
     val ticks = (0 until 30).flatMap { i =>
       Seq(SimTick("s1", 1000L + i * 1000, i.toLong, 100.0 + i * 0.01, 100.002 + i * 0.01),
         SimTick("s2", 1000L + i * 1000, i.toLong, 200.0 - i * 0.02, 200.004 - i * 0.02))
@@ -69,10 +69,18 @@ class SweepSpec extends SparkSpecBase {
     val grid = Map("open" -> Seq("2", "5"), "hold" -> Seq("3", "10"))
     def build(p: Map[String, String]): (SimConfig, DecisionLogic) =
       (SimConfig(SymbolSpec(3, 1.0)), new OpenAt(p("open").toLong, p("hold").toLong))
-    val plain = ledgerRows(Sweep.runSweep("sw", ticks.toDS(), grid, build))
+    val solo = Sweep.expandGrid(grid).flatMap { c =>
+      val (cfg, logic) = build(c.params)
+      SimKernel.runScenariosOutcomes(ticks.toDS(), cfg, logic).collect().map { o =>
+        val r = o.result.get
+        Seq[Any]("sw", c.runId, "ok", c.params.toSeq.sorted, r.stats.scenarioId,
+          r.stats.nTrades, r.stats.finalBalance - cfg.startBalance,
+          r.stats.maxDrawdown, "")
+      }
+    }.sortBy(_.mkString("|"))
     val fused = ledgerRows(Sweep.runSweepFused("sw", ticks.toDS(), grid, build))
-    assert(plain.length === 8) // 4 combos x 2 scenarios
-    assert(fused === plain)
+    assert(solo.length === 8) // 4 combos x 2 scenarios
+    assert(fused === solo)
   }
 
   test("runSweepFused: a failing build records an error row, rest proceed") {

@@ -124,7 +124,7 @@ class CooccurSpec extends SparkSpecBase {
   }
 
   test("pinned doc exchange: AQE-exempt repartition, value-identical") {
-    // The round-15 CooccurSkewPhase finding: AQE coalesced the doc-keyed
+    // The round-15 same-phase A/B finding: AQE coalesced the doc-keyed
     // exchange by INPUT bytes, blind to the per-doc quadratic inside the
     // stage. The default pins it via an explicit-count repartition —
     // REPARTITION_BY_NUM in the plan, the origin AQE never coalesces —

@@ -1,44 +1,50 @@
 #!/bin/bash
-# On-demand CI-style re-execution of the heavy route-proof witnesses —
-# the env-gated specs that a default `sbt test` reports as canceled by
-# design (RouteScaleSpec: 74M real simhash edges take the distributed CC
-# branch, 10.4M real eval hashes take the contamination inverted-index
-# branch, both parity diff=0), plus the two streaming soaks. One
-# command, artifacts with timestamps, non-zero exit on any failure:
+# On-demand CI-style re-execution of the heavy witnesses — the env-gated
+# specs that a default `sbt test` reports as canceled by design:
+# RouteScaleSpec (74M real simhash edges take the distributed CC branch,
+# 10.4M real eval hashes take the contamination inverted-index branch,
+# both parity diff=0) and StreamingSoakSpec (the live loop and the
+# forward as-of stream on RocksDB state at 1000 keys x 30 minutes). One
+# command, a timestamped log under target/, non-zero exit on any failure:
 #
-#   ./tools/ci_scale_witnesses.sh           # everything (~20-40 min idle)
+#   ./tools/ci_scale_witnesses.sh           # everything
 #   ./tools/ci_scale_witnesses.sh routes    # just RouteScaleSpec
-#   ./tools/ci_scale_witnesses.sh soaks     # just the streaming soaks
+#   ./tools/ci_scale_witnesses.sh soaks     # just StreamingSoakSpec
 #
-# Discipline (PLAN.md round-10/11): launch at verified idle (the script
-# prints uptime into the artifact), local[32], pinned-heap JVMs via
-# build.sbt's -Xms=-Xmx.
+# Cores come from nproc and the heap from the same MemTotal formula as
+# the Tier-1 test command (half of RAM, clamped to 2-8 GB; a set
+# SPARK_DRIVER_MEM overrides it). Launch at idle: the log records uptime.
 set -e
 cd "$(dirname "$0")/.."
 what="${1:-all}"
-stamp="$(date +%Y%m%d_%H%M%S)"
-out="target/ci_witnesses_${stamp}.log"
+mkdir -p target
+out="target/ci_witnesses_$(date +%Y%m%d_%H%M%S).log"
 log() { echo "[ci-witness] $(date +%H:%M:%S) $*" | tee -a "$out"; }
 
-log "start what=$what"
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+export SPARK_GRAFT_SCALE_SPECS=1
+
+# witness <spec>: run one gated spec, fail unless it passed with no cancel
+witness() {
+  local part="target/ci_witness_part.log"
+  sbt -batch "testOnly $1" 2>&1 | tee "$part" | tee -a "$out" \
+    | grep -E "Tests:|info\] +-|edges=|eval_hashes=|ticks in" || true
+  grep -q "All tests passed." "$part" && grep -q "canceled 0" "$part" \
+    || { log "FAIL $1"; exit 1; }
+}
+
+log "start what=$what cores=$SPARK_GRAFT_CPUS heap=$SPARK_DRIVER_MEM"
 uptime | tee -a "$out"
-export SPARK_GRAFT_CPUS=32
 
 if [ "$what" = "all" ] || [ "$what" = "routes" ]; then
-  log "RouteScaleSpec (gated heavy witnesses: CC star-alternation @74M edges, contamination join @10.4M hashes)"
-  SPARK_GRAFT_SCALE_SPECS=1 SPARK_DRIVER_MEM=64g \
-    sbt -batch "testOnly graft.tools.RouteScaleSpec" 2>&1 | tee -a "$out" \
-    | grep -E "Tests:|info\]\s+-|edges=|eval_hashes=" || true
-  grep -q "All tests passed." "$out" || { log "FAIL RouteScaleSpec"; exit 1; }
+  log "RouteScaleSpec (CC star-alternation @74M edges, contamination join @10.4M hashes)"
+  witness graft.tools.RouteScaleSpec
 fi
 
 if [ "$what" = "all" ] || [ "$what" = "soaks" ]; then
-  log "LiveLoopSoak (backward as-of streaming, 1000 keys x 30 min)"
-  sbt -batch "runMain graft.tools.LiveLoopSoak" 2>&1 | tee -a "$out" \
-    | grep -E '"soak"' || { log "FAIL LiveLoopSoak"; exit 1; }
-  log "ForwardAsOfSoak (forward as-of streaming, 1000 keys x 30 min)"
-  sbt -batch "runMain graft.tools.ForwardAsOfSoak 1000 30" 2>&1 | tee -a "$out" \
-    | grep -E '"soak"' || { log "FAIL ForwardAsOfSoak"; exit 1; }
+  log "StreamingSoakSpec (live loop + forward as-of on RocksDB, 1000 keys x 30 min)"
+  witness graft.streaming.StreamingSoakSpec
 fi
 
-log "DONE ok — artifact $out"
+log "DONE ok — log $out"
