@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   *   - `nanosAsLong`: the `events` table carries TIMESTAMP(NANOS), which
   *     Spark's TimestampType (micros) cannot represent — read the raw
   *     INT64 instead (see [[Tables.events]]);
+  *   - the RocksDB state store: every stateful streaming operator here
+  *     is a `transformWithState` processor, which requires it;
   *   - shuffle partitioning is ADAPTIVE by default: every shuffle plans
   *     at 8× the core count and AQE coalesces it to ~64 MB partitions by
   *     MEASURED map-output bytes (never below the core count while there
@@ -54,6 +56,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", pinned.getOrElse(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // Adaptive sizing (see class doc): plan every shuffle at 8× cores,
       // coalesce to ~64 MB partitions by measured bytes, floor at the
       // core count down to 64 KB-per-core totals. targetSize =

@@ -792,7 +792,8 @@ object Dedup {
     * the output is bit-identical to the unbanded form (spec-pinned), the
     * full O(len²) matrix is just never materialized for the ~0.95-cut
     * band. Measured at sf100: the unbanded verify was 203–221 s of the
-    * q27→q93 pipeline's marginal cost; see PLAN.md round 12c.
+    * q27→q93 pipeline's marginal cost; see PLAN.md round 12c at
+    * commit 2a5e17a.
     *
     * `maxTextLen = 0` (default) probes the corpus max length EAGERLY at
     * DataFrame-construction time (one column-pruned aggregate — the

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * a per-tick `bisect_right - 1` over the signal snapshot list).
   *
   * Implementation is the scalable union+window idiom (SURVEY §2.3 J1):
-  * tag both sides, union, and take `last(payload, ignoreNulls)` over a
-  * window ordered by (ts, side) where the right side sorts BEFORE the left
-  * at equal timestamps (<= semantics: a signal stamped exactly at the tick
-  * time is visible to that tick). One shuffle + one sort on (keys, ts);
+  * tag both sides, union, and take `last(struct(payload), ignoreNulls)`
+  * over a window ordered by (ts, side) where the right side sorts BEFORE
+  * the left at equal timestamps (<= semantics: a signal stamped exactly at
+  * the tick time is visible to that tick). One shuffle + one sort on (keys, ts);
   * no per-row lookup, no broadcast requirement on either side — this is
   * the 100 TB-safe default. If one key dominates (skew), salt the key by
   * coarse time range and repair at range boundaries.
@@ -31,7 +31,8 @@ object AsOfJoin {
     */
   def backward(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTs: String, rightTs: String, payload: Seq[String]): DataFrame =
-    asof(left, right, keys, leftTs, rightTs, payload, forwardDir = false)
+    unpack(asof(left, right, keys, leftTs, rightTs, payload, forwardDir = false),
+      left.columns, payload)
 
   /** FORWARD as-of: the payload of the EARLIEST right row with
     * `right.ts >= left.ts` per key — the mirror of [[backward]]
@@ -43,45 +44,52 @@ object AsOfJoin {
     * tie rule as backward). */
   def forward(left: DataFrame, right: DataFrame, keys: Seq[String],
               leftTs: String, rightTs: String, payload: Seq[String]): DataFrame =
-    asof(left, right, keys, leftTs, rightTs, payload, forwardDir = true)
+    unpack(asof(left, right, keys, leftTs, rightTs, payload, forwardDir = true),
+      left.columns, payload)
 
+  /** The union+window idiom; returns `left.*` plus the matched right
+    * row's payload as ONE struct column `__pl` (null when no right row
+    * matches). The struct is non-null for every right row, so
+    * `last(…, ignoreNulls)` carries the whole matched row: a NULL payload
+    * value stays NULL instead of back-filling from an older row. */
   private def asof(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftTs: String, rightTs: String, payload: Seq[String],
                    forwardDir: Boolean): DataFrame = {
     val leftCols = left.columns
-    // Right side: only keys + ts + payload survive into the union.
+    // Right side: only keys + ts + payload struct survive into the union.
     val rTagged = right.select(
-      (keys.map(col) :+ col(rightTs).as("__ts")) ++ payload.map(col): _*)
+      keys.map(col) :+ col(rightTs).as("__ts") :+
+        struct(payload.map(col): _*).as("__pl"): _*)
       .withColumn("__side", lit(0))
-    // Left side: full row, payload columns nulled.
-    val lTagged = payload.foldLeft(
-      left.withColumn("__ts", col(leftTs)).withColumn("__side", lit(1))) {
-      case (df, p) => df.withColumn(p, lit(null).cast(rTagged.schema(p).dataType))
-    }
+    // Left side: full row, payload struct null.
+    val lTagged = left.withColumn("__ts", col(leftTs)).withColumn("__side", lit(1))
+      .withColumn("__pl", lit(null).cast(rTagged.schema("__pl").dataType))
     val unioned = lTagged.select(
-      (keys.map(col) :+ col("__ts") :+ col("__side")) ++
-        payload.map(col) ++ leftCols.filterNot(c => keys.contains(c)).map(col): _*)
+      (keys.map(col) :+ col("__ts") :+ col("__side") :+ col("__pl")) ++
+        leftCols.filterNot(c => keys.contains(c)).map(col): _*)
       .unionByName(rTagged, allowMissingColumns = true)
 
     // Tiebreak: when several right rows share (keys, ts), order them by
-    // their payload values so `last(payload)` picks a well-defined row
-    // (highest payload tuple wins) instead of a shuffle-order-dependent
-    // one — required for the repo's byte-stable determinism guarantees.
-    // Payload columns must therefore be orderable types.
+    // their payload tuple so `last` picks a well-defined row (highest
+    // payload tuple wins, NULL values lowest) instead of a shuffle-order-
+    // dependent one — required for the repo's byte-stable determinism
+    // guarantees. Payload columns must therefore be orderable types.
     // Forward mirrors the time axis (ts DESC): "last right row at or
     // before" becomes "first right row at or after". Side/payload order
     // is unchanged, so equal-ts visibility and the tie rule carry over.
     val tsOrd = if (forwardDir) col("__ts").desc else col("__ts").asc
     val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(tsOrd +: col("__side").asc +:
-        payload.map(col(_).asc_nulls_first): _*)
+      .orderBy(tsOrd, col("__side").asc, col("__pl").asc_nulls_first)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = payload.foldLeft(unioned) { case (df, p) =>
-      df.withColumn(p, last(col(p), ignoreNulls = true).over(w))
-    }
-    filled.filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ payload.map(col): _*)
+    unioned.withColumn("__pl", last(col("__pl"), ignoreNulls = true).over(w))
+      .filter(col("__side") === 1)
+      .select(leftCols.map(col) :+ col("__pl"): _*)
   }
+
+  /** `left.*` plus the payload columns unpacked from `__pl`. */
+  private def unpack(matched: DataFrame, leftCols: Seq[String],
+                     payload: Seq[String]): DataFrame =
+    matched.select(leftCols.map(col) ++ payload.map(p => col("__pl").getField(p).as(p)): _*)
 
   /** Skew-safe [[backward]]: when one key dominates (a single hot symbol
     * carrying most of the stream), the plain union+window puts that whole
@@ -96,10 +104,8 @@ object AsOfJoin {
     *      row per (key, bucket) — tiny next to the data — so its window
     *      is never the bottleneck.
     *
-    * Equivalent to [[backward]] when payload values are non-null (the
-    * carry struct can't reproduce `backward`'s per-column null-skipping
-    * for right rows that carry null payload values — use a non-null
-    * surrogate uid payload and join values back, as q48 does). */
+    * Both steps carry the matched row's payload as one struct, so the
+    * result equals [[backward]]'s, NULL payload values included. */
   def backwardSalted(left: DataFrame, right: DataFrame, keys: Seq[String],
                      leftTs: String, rightTs: String, payload: Seq[String],
                      bucketMs: Long): DataFrame = {
@@ -112,12 +118,12 @@ object AsOfJoin {
     val leftB = left.withColumn("__bucket", bucketOf(col(leftTs)))
     val rightB = right.withColumn("__bucket", bucketOf(col(rightTs)))
     // (1) bounded within-bucket as-of
-    val within = backward(leftB, rightB, keys :+ "__bucket", leftTs, rightTs, payload)
+    val within = asof(leftB, rightB, keys :+ "__bucket", leftTs, rightTs, payload,
+      forwardDir = false)
     // (2) carry: last right payload per (keys, bucket) — same (ts, payload)
     // tie-break as backward — rolled forward across the bucket spine
-    val ord = struct(col(rightTs) +: payload.map(col): _*)
     val carry = rightB.groupBy((keys.map(col) :+ col("__bucket")): _*)
-      .agg(max(ord).as("__last"))
+      .agg(max(struct(col(rightTs), struct(payload.map(col): _*).as("__pl"))).as("__last"))
     val spine = leftB.select((keys.map(col) :+ col("__bucket")): _*)
       .union(rightB.select((keys.map(col) :+ col("__bucket")): _*))
       .distinct()
@@ -126,10 +132,8 @@ object AsOfJoin {
     val carried = spine.join(carry, keys :+ "__bucket", "left")
       .withColumn("__prev", last(col("__last"), ignoreNulls = true).over(w))
       .select((keys.map(col) :+ col("__bucket") :+ col("__prev")): _*)
-    val repaired = payload.foldLeft(
-      within.join(carried, keys :+ "__bucket", "left")) { case (df, p) =>
-      df.withColumn(p, coalesce(col(p), col("__prev").getField(p)))
-    }
-    repaired.select(leftCols.filterNot(_ == "__bucket").map(col) ++ payload.map(col): _*)
+    val repaired = within.join(carried, keys :+ "__bucket", "left")
+      .withColumn("__pl", coalesce(col("__pl"), col("__prev.__pl")))
+    unpack(repaired, leftCols, payload)
   }
 }

@@ -32,9 +32,10 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *     shape), and AQE can size each side separately.
   *
   * Semantics match `AsOfJoin.backward` exactly, including the `<=`
-  * visibility rule and the deterministic highest-payload-tuple tie-break
-  * at equal (key, ts) — the physical sort key on the right side is
-  * (keys, ts, payload…), and the merge keeps the LAST row seen.
+  * visibility rule, the matched row's NULL payload values, and the
+  * deterministic highest-payload-tuple tie-break at equal (key, ts) —
+  * the physical sort key on the right side is (keys, ts, payload…), and
+  * the merge keeps the LAST row seen.
   */
 object NativeAsOf {
 

@@ -125,7 +125,7 @@ object OperatorQueries extends QueryPack {
     // user = envelope sentinels), then: point-in-time trim keeping one
     // pre-start snapshot per symbol (J2) → last-wins symbol-vs-sentinel
     // dedup per instant (J6) → backward as-of attach to user 7's purchase
-    // ticks with ROW semantics via a surrogate uid (J1) → staleness flag
+    // ticks, carrying the whole matched row (J1) → staleness flag
     // (ST7). A sentinel instant resolves to NULL payload — "a collection
     // happened but said nothing about this symbol" is not stale data.
     "q48_signal_chain" -> QueryDef(
@@ -150,28 +150,15 @@ object OperatorQueries extends QueryPack {
               .orderBy(col("event_id").desc)))
           .filter(col("__rn") === 1).drop("__rn")
         val trimmed = Signals.pointInTimeTrim(uni, TrimStartMs, TrimEndMs)
-        // r17: the matched row's values ride the as-of as ONE struct
-        // payload instead of a surrogate uid + values re-join. `last(col,
-        // ignoreNulls)` runs per COLUMN, so carrying nullable values
-        // directly would mix rows (a sentinel's NULL sentiment would
-        // back-fill from an older symbol row) — but a STRUCT is non-null
-        // for every right row, so the window carries the whole matched
-        // row atomically and the NULL sentiment survives inside it.
-        // `resolved` is unique per (symbol, collected_msc) (resolveFor-
-        // Symbol's rn3 = 1), so the payload tie-break never fires and the
-        // matched row is the same one the uid join fetched. Removes the
-        // values hash join AND the second computation of the whole
-        // resolved subtree (events scans + union + 3 windows) the joined/
-        // payload double reference forced: 9 scans → 6, 10 exchanges → 7.
+        // A sentinel's NULL sentiment survives the as-of: it carries the
+        // whole matched row. `resolved` is unique per (symbol,
+        // collected_msc) (resolveForSymbol's rn3 = 1), so the payload
+        // tie-break never fires.
         val resolved = Signals.resolveForSymbol(trimmed, "U7")
           .withColumn("symbol", lit("U7")) // sentinel rows join the same key
-          .withColumn("__sig",
-            struct(col("collected_msc").as("sig_msc"), col("sentiment_score")))
-        val joined = AsOfJoin.backward(ticks, resolved, Seq("symbol"),
-          "ts_ms", "collected_msc", Seq("__sig"))
-        joined
-          .withColumn("sig_msc", col("__sig.sig_msc"))
-          .withColumn("sentiment_score", col("__sig.sentiment_score"))
+          .withColumn("sig_msc", col("collected_msc"))
+        AsOfJoin.backward(ticks, resolved, Seq("symbol"),
+          "ts_ms", "collected_msc", Seq("sig_msc", "sentiment_score"))
           .withColumn("is_stale",
             col("sig_msc").isNull || (col("ts_ms") - col("sig_msc")) > 21600000L)
           .select(col("event_id"), col("ts_ms"), col("sig_msc"),

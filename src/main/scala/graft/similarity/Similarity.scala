@@ -932,7 +932,8 @@ object Similarity {
     *     form shuffled bare (bucket, id) pairs and rejoined candidates
     *     to the vector table; measured at 500k×64d it was join-bound
     *     (the two hash joins moved the candidate set twice more than the
-    *     8× payload replication costs) — see PLAN.md round-5 ladder;
+    *     8× payload replication costs) — see the round-5 ladder in
+    *     PLAN.md at commit 2a5e17a;
     *   - a pair sharing a signature in several tables is scored in each,
     *     then collapsed by `distinct` on the scored triple — cosine is
     *     deterministic (index-ascending summation, the [[cosine]] kernel),

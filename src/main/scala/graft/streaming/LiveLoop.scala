@@ -71,7 +71,7 @@ object LiveLoop {
     }
   }
 
-  /** Run the loop over a live tick stream (RocksDB state store required). */
+  /** Run the loop over a live tick stream. */
   def run(ticks: Dataset[IncrementalBars.Tick], barMs: Long,
           strategy: BarStrategy): Dataset[LoopEvent] = {
     import ticks.sparkSession.implicits._
@@ -171,7 +171,7 @@ object LiveLoop {
     * streaming job: tick feed + signal feed → as-of attach → incremental
     * bars → staleness-gated BAR_CLOSE strategy → decision rows (signed
     * actions, ready for [[graft.sim.SimKernel]] replay or a live broker
-    * adapter downstream). RocksDB state store required. */
+    * adapter downstream). */
   def runWithSignals(ticks: Dataset[IncrementalBars.Tick],
                      signals: Dataset[(String, Long, Double)],
                      barMs: Long, strategy: SignalBarStrategy,

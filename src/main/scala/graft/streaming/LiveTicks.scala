@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Live tick ingestion (SURVEY S14): a line-delimited JSON tick feed as a
-  * Structured Streaming source, plus the warm-start path.
+  * Structured Streaming source.
   *
   * The reference's live loop is a WebSocket client pushing trade messages
   * into a queue with a REST OHLC warmup
@@ -15,8 +14,8 @@ import org.apache.spark.sql.types._
   * any line-delimited transport (socket source here; Kafka in production
   * — same parse stage) → `from_json` → typed ticks → the stateful bar
   * renderer, with warmup expressed as INITIAL STATE on the renderer
-  * rather than a replayed batch, so restart and cold-start are the same
-  * code path.
+  * ([[IncrementalBars.renderTicksWarm]]) rather than a replayed batch,
+  * so restart and cold-start are the same code path.
   */
 object LiveTicks {
 
@@ -48,18 +47,4 @@ object LiveTicks {
       : Dataset[IncrementalBars.Tick] =
     parse(spark.readStream.format("socket")
       .option("host", host).option("port", port).load())
-
-  /** Warm-started incremental bars: seed the per-key renderer state from
-    * history (the REST-OHLC warmup analogue) so the first live bar
-    * continues the last historical bar instead of restarting it. */
-  def renderTicksWarm(ticks: Dataset[IncrementalBars.Tick], barMs: Long,
-                      warmupState: Dataset[(String, IncrementalBars.OpenBar)])
-      : Dataset[IncrementalBars.Bar] = {
-    import ticks.sparkSession.implicits._
-    val initial = warmupState.groupByKey(_._1).mapValues(_._2)
-    ticks.groupByKey(_.key)
-      .flatMapGroupsWithState[IncrementalBars.OpenBar, IncrementalBars.Bar](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(
-        IncrementalBars.foldGroup(barMs))
-  }
 }

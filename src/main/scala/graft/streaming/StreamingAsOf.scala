@@ -72,8 +72,7 @@ object StreamingAsOf {
     }
   }
 
-  /** Enrich a live tick stream with the latest signal per key.
-    * Requires the RocksDB state store provider (transformWithState). */
+  /** Enrich a live tick stream with the latest signal per key. */
   def enrich(ticks: Dataset[IncrementalBars.Tick],
              signals: Dataset[(String, Long, Double)]): Dataset[Enriched] = {
     import ticks.sparkSession.implicits._
@@ -159,8 +158,7 @@ object StreamingAsOf {
   }
 
   /** Forward enrichment of a live tick stream: each tick emits once, with
-    * the earliest signal at/after it; unmatched ticks remain pending.
-    * Requires the RocksDB state store provider (transformWithState). */
+    * the earliest signal at/after it; unmatched ticks remain pending. */
   def enrichForward(ticks: Dataset[IncrementalBars.Tick],
                     signals: Dataset[(String, Long, Double)]): Dataset[Enriched] = {
     import ticks.sparkSession.implicits._

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming._
 
 /** Streaming bar rendering (SURVEY §2.9 ST1–ST3).
   *
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    finalize when the event-time watermark passes the window end —
   *    the streaming twin of the batch `Ohlcv.render` (A1). Gaps produce
   *    no bars (no row → no group), matching ST3.
-  *  - [[IncrementalBars.renderTicks]]: per-key `flatMapGroupsWithState`
+  *  - [[IncrementalBars.renderTicks]]: per-key `transformWithState`
   *    that maintains the currently-forming bar and emits each COMPLETED
   *    bar exactly once, in bucket order, when a tick arrives in a later
   *    bucket — the reference's bar-close lifecycle where the renderer is
@@ -64,8 +64,8 @@ object IncrementalBars {
     * `market_data_types.py:71-83`): open on first, high=max, low=min,
     * close=last, volume+=, count++. A tick in a later bucket first hands
     * the forming bar to `onClose` as a completed [[Bar]] and starts a new
-    * one — gap buckets emit nothing (ST3). Every stateful renderer and
-    * both live loops fold ticks through this one function. */
+    * one — gap buckets emit nothing (ST3). The bar operator and both
+    * live loops fold ticks through this one function. */
   private[streaming] def foldTick(open: OpenBar, key: String, tsMs: Long,
       price: Double, volume: Double, barMs: Long)(onClose: Bar => Unit): OpenBar = {
     val bs = tsMs - tsMs % barMs
@@ -80,17 +80,32 @@ object IncrementalBars {
     }
   }
 
-  /** The per-group fold shared by cold and warm-started renders: fold
-    * this micro-batch's ticks into the open-bar state, emitting each
-    * completed bar exactly once, in bucket order. */
-  private[streaming] def foldGroup(barMs: Long)(
-      key: String, it: Iterator[Tick], state: GroupState[OpenBar])
-      : Iterator[Bar] = {
-    val closed = scala.collection.mutable.ArrayBuffer.empty[Bar]
-    var open = state.getOption.orNull
-    it.foreach(t => open = foldTick(open, key, t.tsMs, t.price, t.volume, barMs)(closed += _))
-    if (open != null) state.update(open)
-    closed.iterator
+  /** The one keyed bar operator, cold or warm-started: each batch's
+    * ticks fold through [[foldTick]] into a `ValueState` forming bar,
+    * emitting each completed bar exactly once, in bucket order. An
+    * initial state (ST4 warmup) seeds the forming bar before the first
+    * micro-batch, so the first live bar CONTINUES the last historical
+    * bar instead of restarting it. */
+  class BarProcessor(barMs: Long)
+      extends StatefulProcessorWithInitialState[String, Tick, Bar, OpenBar] {
+
+    @transient private var open: ValueState[OpenBar] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      open = getHandle.getValueState("open", Encoders.product[OpenBar], TTLConfig.NONE)
+
+    override def handleInitialState(key: String, initialState: OpenBar,
+                                    timers: TimerValues): Unit =
+      open.update(initialState)
+
+    override def handleInputRows(key: String, rows: Iterator[Tick],
+                                 timers: TimerValues): Iterator[Bar] = {
+      val closed = scala.collection.mutable.ArrayBuffer.empty[Bar]
+      var cur = if (open.exists()) open.get() else null
+      rows.foreach(t => cur = foldTick(cur, key, t.tsMs, t.price, t.volume, barMs)(closed += _))
+      if (cur != null) open.update(cur)
+      closed.iterator
+    }
   }
 
   /** Stateful streaming render: emits each completed bar exactly once, in
@@ -101,11 +116,20 @@ object IncrementalBars {
     * With a `checkpointLocation` on the query, the open-bar state is
     * snapshot per batch and restored on restart (ST11) — a bar spanning
     * a restart closes exactly once. */
-  def renderTicks(ticks: Dataset[Tick], barMs: Long,
-                  outputMode: OutputMode = OutputMode.Append()): Dataset[Bar] = {
+  def renderTicks(ticks: Dataset[Tick], barMs: Long): Dataset[Bar] = {
     import ticks.sparkSession.implicits._
     ticks.groupByKey(_.key)
-      .flatMapGroupsWithState[OpenBar, Bar](
-        outputMode, GroupStateTimeout.NoTimeout())(foldGroup(barMs))
+      .transformWithState(new BarProcessor(barMs), TimeMode.None(), OutputMode.Append())
+  }
+
+  /** Warm-started render (ST4): per-key forming-bar state seeded from
+    * history (the REST-OHLC warmup analogue), so restart and cold start
+    * are the same operator. */
+  def renderTicksWarm(ticks: Dataset[Tick], barMs: Long,
+                      warmupState: Dataset[(String, OpenBar)]): Dataset[Bar] = {
+    import ticks.sparkSession.implicits._
+    ticks.groupByKey(_.key)
+      .transformWithState(new BarProcessor(barMs), TimeMode.None(),
+        OutputMode.Append(), warmupState.groupByKey(_._1).mapValues(_._2))
   }
 }

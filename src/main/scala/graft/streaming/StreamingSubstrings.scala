@@ -108,9 +108,9 @@ object StreamingSubstrings {
     }
   }
 
-  /** Duplicated window sites of a continuous document stream; requires
-    * the RocksDB state store provider. Feed the accumulated output to
-    * [[ExactSubstrings.mergeSpans]] for maximal spans. */
+  /** Duplicated window sites of a continuous document stream. Feed the
+    * accumulated output to [[ExactSubstrings.mergeSpans]] for maximal
+    * spans. */
   def duplicatedWindows(docs: Dataset[Doc], k: Int = 8): Dataset[DupSite] = {
     import docs.sparkSession.implicits._
     windowSites(docs, k)

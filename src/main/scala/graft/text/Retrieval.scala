@@ -1325,18 +1325,18 @@ object Retrieval {
     org.apache.spark.sql.types.StructField("sumdl",
       org.apache.spark.sql.types.LongType)))
 
-  /** Postings schema per (session, indexPath, config fingerprint) —
-    * only the `doc` column's type varies (the source id column), and the
-    * config fingerprint pins it (a changed id column is a changed
-    * `columns` config ⇒ full rebuild ⇒ new fingerprint), so the one
-    * footer-read job per index pays once per session instead of once
-    * per QUERY (r18: q99/q100 each ran two schema-inference jobs per
-    * call — measured by a per-job census as 2 of q100's 13 steady-state
-    * jobs). Bounded: one entry per distinct index an application
-    * serves. */
+  /** Postings schema per (indexPath, config fingerprint) — only the
+    * `doc` column's type varies (the source id column), and the config
+    * fingerprint pins it (a changed id column is a changed `columns`
+    * config ⇒ full rebuild ⇒ new fingerprint), so the schema is a
+    * function of the key alone and the one footer-read job per index
+    * pays once per application instead of once per QUERY (r18: q99/q100
+    * each ran two schema-inference jobs per call — measured by a per-job
+    * census as 2 of q100's 13 steady-state jobs). Bounded: one entry per
+    * distinct index an application serves. */
   private val postingsSchemaCache =
     scala.collection.mutable.HashMap
-      .empty[(Int, String, String), org.apache.spark.sql.types.StructType]
+      .empty[(String, String), org.apache.spark.sql.types.StructType]
 
   /** Postings + corpus stats of a [[buildPostingsIndex]] index: the
     * union of every manifest segment's postings (rows are disjoint —
@@ -1353,8 +1353,7 @@ object Retrieval {
       case Some(m) =>
         val dirs = decodeSegments(m).map(_.dir)
         require(dirs.nonEmpty, s"empty postings index at $indexPath")
-        val key = (System.identityHashCode(spark), indexPath,
-          m.getOrElse("config", ""))
+        val key = (indexPath, m.getOrElse("config", ""))
         val postingsSchema = postingsSchemaCache.synchronized {
           postingsSchemaCache.getOrElseUpdate(key,
             spark.read.parquet(s"$indexPath/${dirs.head}/postings").schema)

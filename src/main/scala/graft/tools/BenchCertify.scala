@@ -35,8 +35,12 @@ object BenchCertify {
   }
 
   def main(args: Array[String]): Unit = {
-    val benchPath = args.headOption.getOrElse("bench_local_r6.json")
-    val outPath = args.lift(1).getOrElse("bench_certificate.json")
+    if (args.length < 2) {
+      System.err.println("usage: BenchCertify <bench_local_r<N>.json> " +
+        "<bench_certificate.json> [tolerancePct] [floorSec]")
+      sys.exit(64)
+    }
+    val Array(benchPath, outPath) = args.take(2)
     val tolerance = args.lift(2).map(_.toDouble).getOrElse(25.0)
     val floorSec = args.lift(3).map(_.toDouble).getOrElse(0.5)
     val json = new String(Files.readAllBytes(Paths.get(benchPath)), "UTF-8")

@@ -34,7 +34,9 @@ class PropertySpec extends SparkSpecBase {
   // ---- as-of: three engine paths vs a first-principles model ----
 
   // (key, ts) events and (key, ts, sig) signals as plain tuples — inner
-  // case classes trip Dataset encoder TypeTags.
+  // case classes trip Dataset encoder TypeTags. About a third of the
+  // sig values are NULL: a matched row's NULL must come back NULL, not
+  // back-filled from an older row.
   private val genAsOf = for {
     nKeys <- Gen.choose(1, 3)
     keys = Seq("AAA", "BBB", "CCC").take(nKeys)
@@ -42,70 +44,70 @@ class PropertySpec extends SparkSpecBase {
       k <- Gen.oneOf(keys); t <- Gen.choose(0L, 50L)
     } yield (k, t))
     right <- Gen.chooseNum(0, 20).flatMap(n => Gen.listOfN(n, for {
-      k <- Gen.oneOf(keys); t <- Gen.choose(0L, 50L); s <- Gen.choose(0L, 9L)
+      k <- Gen.oneOf(keys); t <- Gen.choose(0L, 50L)
+      s <- Gen.frequency(1 -> Gen.const(None), 2 -> Gen.choose(0L, 9L).map(Some(_)))
     } yield (k, t, s)))
   } yield (left, right)
 
-  /** The contract: latest right row with ts <= left.ts per key; among
-    * right rows SHARING that ts, the highest payload wins (the kernel's
-    * documented tie-break). */
+  private type Matched = Option[(Long, Option[Long])] // the (sig_ts, sig) row
+
+  /** The contract: the WHOLE latest right row with ts <= left.ts per key;
+    * among right rows SHARING that ts, the highest payload wins, NULL
+    * lowest (the kernel's documented tie-break). */
   private def asOfModel(left: Seq[(String, Long)],
-                        right: Seq[(String, Long, Long)]): Seq[(String, Long, Option[Long])] =
+                        right: Seq[(String, Long, Option[Long])]): Seq[(String, Long, Matched)] =
     left.map { case (key, ts) =>
       val at = right.filter(s => s._1 == key && s._2 <= ts)
-      val hit = if (at.isEmpty) None else {
-        val maxTs = at.map(_._2).max
-        Some(at.filter(_._2 == maxTs).map(_._3).max)
-      }
-      (key, ts, hit)
+      (key, ts, if (at.isEmpty) None else Some(at.map(s => (s._2, s._3)).max))
     }.sorted
 
-  /** The forward mirror: earliest right row with ts >= left.ts; among
-    * right rows sharing that minimal ts, the highest payload wins. */
+  /** The forward mirror: the whole earliest right row with ts >= left.ts;
+    * among right rows sharing that minimal ts, the highest payload wins. */
   private def asOfForwardModel(left: Seq[(String, Long)],
-                               right: Seq[(String, Long, Long)]): Seq[(String, Long, Option[Long])] =
+                               right: Seq[(String, Long, Option[Long])]): Seq[(String, Long, Matched)] =
     left.map { case (key, ts) =>
       val at = right.filter(s => s._1 == key && s._2 >= ts)
-      val hit = if (at.isEmpty) None else {
+      (key, ts, if (at.isEmpty) None else {
         val minTs = at.map(_._2).min
-        Some(at.filter(_._2 == minTs).map(_._3).max)
-      }
-      (key, ts, hit)
+        Some((minTs, at.filter(_._2 == minTs).map(_._3).max))
+      })
     }.sorted
+
+  private val asOfPayload = Seq("sig_ts", "sig")
+
+  /** (key, ts, matched row) per left row; sig_ts is null exactly when no
+    * right row matched. */
+  private def matchedRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Matched)] =
+    df.select("key", "ts", "sig_ts", "sig").collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None
+        else Some((r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))))
+      .toSeq.sorted
 
   test("as-of property: idiom, salted, and native Catalyst paths all match the model") {
     check("asof", Prop.forAll(genAsOf) { case (left, right) =>
       val l = left.toDF("key", "ts")
-      val r = right.toDF("key", "ts_r", "sig")
+      val r = right.toDF("key", "ts_r", "sig").withColumn("sig_ts", col("ts_r"))
       val expect = asOfModel(left, right)
-      def got(df: org.apache.spark.sql.DataFrame) =
-        df.select("key", "ts", "sig").collect()
-          .map(r => (r.getString(0), r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2))))
-          .toSeq.sorted
-      val idiom = got(AsOfJoin.backward(l, r, Seq("key"), "ts", "ts_r", Seq("sig")))
-      val salted = got(AsOfJoin.backwardSalted(l, r, Seq("key"), "ts", "ts_r", Seq("sig"), 7L))
-      val native = got(NativeAsOf.backward(l, r, Seq("key"), "ts", "ts_r", Seq("sig")))
+      val idiom = matchedRows(AsOfJoin.backward(l, r, Seq("key"), "ts", "ts_r", asOfPayload))
+      val salted = matchedRows(
+        AsOfJoin.backwardSalted(l, r, Seq("key"), "ts", "ts_r", asOfPayload, 7L))
+      val native = matchedRows(NativeAsOf.backward(l, r, Seq("key"), "ts", "ts_r", asOfPayload))
       (idiom == expect) :| s"idiom $idiom != $expect" &&
-        (salted == expect) :| "salted diverged" &&
-        (native == expect) :| "native diverged"
+        (salted == expect) :| s"salted $salted != $expect" &&
+        (native == expect) :| s"native $native != $expect"
     })
   }
 
   test("as-of property: FORWARD idiom and negated-native paths match the mirror model") {
     check("asof-fwd", Prop.forAll(genAsOf) { case (left, right) =>
       val l = left.toDF("key", "ts")
-      val r = right.toDF("key", "ts_r", "sig")
+      val r = right.toDF("key", "ts_r", "sig").withColumn("sig_ts", col("ts_r"))
       val expect = asOfForwardModel(left, right)
-      def got(df: org.apache.spark.sql.DataFrame) =
-        df.select("key", "ts", "sig").collect()
-          .map(r => (r.getString(0), r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2))))
-          .toSeq.sorted
-      val idiom = got(AsOfJoin.forward(l, r, Seq("key"), "ts", "ts_r", Seq("sig")))
-      val native = got(NativeAsOf.forward(l, r, Seq("key"), "ts", "ts_r", Seq("sig")))
+      val idiom = matchedRows(AsOfJoin.forward(l, r, Seq("key"), "ts", "ts_r", asOfPayload))
+      val native = matchedRows(NativeAsOf.forward(l, r, Seq("key"), "ts", "ts_r", asOfPayload))
       (idiom == expect) :| s"fwd idiom $idiom != $expect" &&
-        (native == expect) :| "fwd native diverged"
+        (native == expect) :| s"fwd native $native != $expect"
     })
   }
 

@@ -31,9 +31,6 @@ class LiveLoopSpec extends SparkSpecBase {
 
   test("ST1 live loop: ticks -> bars -> BAR_CLOSE strategy -> decisions, across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1700000000000L - (1700000000000L % 60000L)
     // rising closes: 100, 101, ... one tick per second, 6 minutes
     val ticks = (0 until 360).map(i =>
@@ -56,20 +53,11 @@ class LiveLoopSpec extends SparkSpecBase {
       // and with rising closes the last close always beats the mean
       assert(decisions.map(_._2).toSeq === Seq("BUY", "BUY", "BUY"))
       assert(decisions.map(_._3).toSeq === bars.map(_._3).drop(2).toSeq)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("full loop: signal attach + staleness gate drive decisions in-stream") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1700000000000L - (1700000000000L % 60000L)
     // one tick per second for 6 minutes -> bars close at +60s..+300s
     val ticks = (0 until 360).map(i =>
@@ -113,13 +101,7 @@ class LiveLoopSpec extends SparkSpecBase {
       assert(staleBars === Seq(120000L, 240000L))
       // every bar after the first signal has one attached
       assert(bars.forall(_.getAs[Boolean]("hasSignal")))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("RocksDB state holds per-key at 200-symbol cardinality across batches") {
@@ -130,9 +112,6 @@ class LiveLoopSpec extends SparkSpecBase {
     // batch split. The opt-in StreamingSoakSpec drives the same invariant
     // at 1000 keys / 1.8M ticks.
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1700000000000L - (1700000000000L % 60000L)
     val (nKeys, minutes) = (200, 6)
     val ticks = for {
@@ -155,12 +134,6 @@ class LiveLoopSpec extends SparkSpecBase {
         .count().select("count").distinct().as[Long].collect().toSeq
       // SmaCross(3) fires from the 3rd closed bar on, rising closes -> BUY
       assert(decPerKey === Seq(minutes - 3L), s"uneven decision counts: $decPerKey")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

@@ -32,7 +32,7 @@ class LiveTicksSpec extends SparkSpecBase {
     val warm = Seq(("BTCUSD",
       IncrementalBars.OpenBar(m0, 100.0, 102.0, 99.0, 101.0, 5.0, 3L))).toDS()
     val stream = MemoryStream[IncrementalBars.Tick]
-    val bars = LiveTicks.renderTicksWarm(stream.toDS(), 60000L, warm)
+    val bars = IncrementalBars.renderTicksWarm(stream.toDS(), 60000L, warm)
     val q = bars.writeStream.outputMode("append")
       .format("memory").queryName("warm_bars").start()
     try {

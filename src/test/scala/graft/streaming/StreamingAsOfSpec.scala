@@ -8,9 +8,6 @@ class StreamingAsOfSpec extends SparkSpecBase {
 
   test("streaming as-of enrichment: ticks carry the latest prior signal across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ticks = MemoryStream[IncrementalBars.Tick]
     val signals = MemoryStream[(String, Long, Double)]
     val out = StreamingAsOf.enrich(ticks.toDS(), signals.toDS())
@@ -43,20 +40,11 @@ class StreamingAsOfSpec extends SparkSpecBase {
         (150L, true, 100L, 0.7),
         (200L, true, 100L, 0.7),   // carried across the micro-batch boundary
         (300L, true, 250L, 0.9)))  // newest wins; stale 240 ignored
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("streaming forward as-of: ticks emit once at the next signal; batch parity") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ticks = MemoryStream[IncrementalBars.Tick]
     val signals = MemoryStream[(String, Long, Double)]
     val out = StreamingAsOf.enrichForward(ticks.toDS(), signals.toDS())
@@ -119,12 +107,6 @@ class StreamingAsOfSpec extends SparkSpecBase {
         .select($"key", $"tsMs").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
       assert(pendingBatch === Set(("X", 300L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

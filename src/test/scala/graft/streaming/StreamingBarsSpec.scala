@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import graft.SparkSpecBase
 import graft.bars.Ohlcv
 
@@ -90,12 +89,8 @@ class StreamingBarsSpec extends SparkSpecBase {
 
   test("transformWithState renderer (Spark 4 API) matches the batch renderer") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val stream = MemoryStream[IncrementalBars.Tick]
-    val bars = BarsTws.renderTicks(stream.toDS(), 60000L)
+    val bars = IncrementalBars.renderTicks(stream.toDS(), 60000L)
     val q = bars.writeStream.outputMode("append")
       .format("memory").queryName("tws_bars").start()
     try {
@@ -107,25 +102,16 @@ class StreamingBarsSpec extends SparkSpecBase {
       val got = spark.table("tws_bars").orderBy("barStartMs").collect().map(_.toSeq)
       assert(got.length === 9)
       assert(got.toSeq === batchBars.take(9).toSeq)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("transformWithState warm start seeds the forming bar from history (ST4)") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val m0 = 1700000000000L - (1700000000000L % 60000L)
     val warm = Seq(("BTCUSD",
       IncrementalBars.OpenBar(m0, 100.0, 102.0, 99.0, 101.0, 5.0, 3L))).toDS()
     val stream = MemoryStream[IncrementalBars.Tick]
-    val q = BarsTws.renderTicksWarm(stream.toDS(), 60000L, warm)
+    val q = IncrementalBars.renderTicksWarm(stream.toDS(), 60000L, warm)
       .writeStream.outputMode("append").format("memory").queryName("tws_warm").start()
     try {
       stream.addData(
@@ -137,13 +123,7 @@ class StreamingBarsSpec extends SparkSpecBase {
       // volume 5+1, count 3+1 — the live bar CONTINUED the historical one
       assert(got.toSeq === Seq(IncrementalBars.Bar(
         "BTCUSD", m0, 100.0, 102.0, 98.0, 98.0, 6.0, 4L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("incremental stateful renderer emits closed bars exactly once, in order") {

@@ -21,9 +21,6 @@ class StreamingBrokerSpec extends SparkSpecBase {
 
   test("full loop + broker leg: ticks -> decisions -> fills -> exact P&L, one query") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1700000000000L - (1700000000000L % 60000L)
     // one tick per second, rising 0.01/s for 4 minutes:
     //   bar0 close price = tick 59  = 100.59 (BUY fills here)
@@ -55,12 +52,6 @@ class StreamingBrokerSpec extends SparkSpecBase {
       assert(math.abs(close.pnl - 2.40) < 1e-9)
       assert(math.abs(close.balance - 10002.40) < 1e-9)
       assert(close.openCount === 0)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 }

@@ -12,50 +12,37 @@ import graft.dedup.Dedup
 class StreamingDedupSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("exact: first-seen canonical, duplicates flagged across micro-batches") {
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
-      val docs = MemoryStream[StreamingDedup.Doc]
-      val q = StreamingDedup.exact(docs.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("exact_dedup").start()
-      try {
-        // batch 0: two distinct texts; 20 and 30 are same-batch dups of 10
-        docs.addData(
-          StreamingDedup.Doc(30L, "the quick brown fox"),
-          StreamingDedup.Doc(10L, "the quick brown fox"),
-          StreamingDedup.Doc(20L, "the quick brown fox"),
-          StreamingDedup.Doc(11L, "something else entirely"))
-        q.processAllAvailable()
-        // batch 1: a cross-batch dup and a fresh text
-        docs.addData(
-          StreamingDedup.Doc(5L, "the quick brown fox"), // dup despite LOWER id
-          StreamingDedup.Doc(12L, "third text"))
-        q.processAllAvailable()
-        val rows = spark.table("exact_dedup").collect()
-          .map(r => (r.getAs[Long]("id"), r.getAs[Boolean]("isDuplicate"),
-            r.getAs[Long]("canonicalId"), r.getAs[Long]("seen")))
-          .sortBy(_._1)
-        assert(rows.toSeq === Seq(
-          (5L, true, 10L, 4L),   // first-SEEN wins, not global min id
-          (10L, false, 10L, 1L), // min id within its arrival batch
-          (11L, false, 11L, 1L),
-          (12L, false, 12L, 1L),
-          (20L, true, 10L, 2L),
-          (30L, true, 10L, 3L)))
-      } finally q.stop()
-    }
+    implicit val sqlCtx = spark.sqlContext
+    val docs = MemoryStream[StreamingDedup.Doc]
+    val q = StreamingDedup.exact(docs.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("exact_dedup").start()
+    try {
+      // batch 0: two distinct texts; 20 and 30 are same-batch dups of 10
+      docs.addData(
+        StreamingDedup.Doc(30L, "the quick brown fox"),
+        StreamingDedup.Doc(10L, "the quick brown fox"),
+        StreamingDedup.Doc(20L, "the quick brown fox"),
+        StreamingDedup.Doc(11L, "something else entirely"))
+      q.processAllAvailable()
+      // batch 1: a cross-batch dup and a fresh text
+      docs.addData(
+        StreamingDedup.Doc(5L, "the quick brown fox"), // dup despite LOWER id
+        StreamingDedup.Doc(12L, "third text"))
+      q.processAllAvailable()
+      val rows = spark.table("exact_dedup").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Boolean]("isDuplicate"),
+          r.getAs[Long]("canonicalId"), r.getAs[Long]("seen")))
+        .sortBy(_._1)
+      assert(rows.toSeq === Seq(
+        (5L, true, 10L, 4L),   // first-SEEN wins, not global min id
+        (10L, false, 10L, 1L), // min id within its arrival batch
+        (11L, false, 11L, 1L),
+        (12L, false, 12L, 1L),
+        (20L, true, 10L, 2L),
+        (30L, true, 10L, 3L)))
+    } finally q.stop()
   }
 
   /** Clustered corpus: three near-dup groups + noise. Token-level edits
@@ -73,62 +60,58 @@ class StreamingDedupSpec extends SparkSpecBase {
   }
 
   test("nearDup: pair-for-pair parity with batch minhashLsh across batch splits") {
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx = spark.sqlContext
 
-      val expected = Dedup.minhashLsh(
-        corpus.toDF("doc_id", "text"), "doc_id", "text",
-        n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.5)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+    val expected = Dedup.minhashLsh(
+      corpus.toDF("doc_id", "text"), "doc_id", "text",
+      n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.5)
+      .collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        math.rint(r.getAs[Double]("jaccard") * 1e9)))
+      .toSet
+    assert(expected.nonEmpty, "corpus must contain near-dups for the test to bite")
+
+    val docs = MemoryStream[StreamingDedup.Doc]
+    val q = StreamingDedup.nearDup(docs.toDS(), n = 3, numHashes = 12,
+      rowsPerBand = 3, threshold = 0.5)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("near_dup").start()
+    try {
+      // Split the corpus so every group straddles a batch boundary.
+      docs.addData(StreamingDedup.Doc(1L, corpus.toMap.apply(1L)),
+        StreamingDedup.Doc(4L, corpus.toMap.apply(4L)))
+      q.processAllAvailable()
+      docs.addData(StreamingDedup.Doc(2L, corpus.toMap.apply(2L)),
+        StreamingDedup.Doc(5L, corpus.toMap.apply(5L)),
+        StreamingDedup.Doc(6L, corpus.toMap.apply(6L)))
+      q.processAllAvailable()
+      docs.addData(StreamingDedup.Doc(3L, corpus.toMap.apply(3L)),
+        StreamingDedup.Doc(7L, corpus.toMap.apply(7L)))
+      q.processAllAvailable()
+
+      val got = spark.table("near_dup").collect()
+        .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"),
           math.rint(r.getAs[Double]("jaccard") * 1e9)))
-        .toSet
-      assert(expected.nonEmpty, "corpus must contain near-dups for the test to bite")
-
-      val docs = MemoryStream[StreamingDedup.Doc]
-      val q = StreamingDedup.nearDup(docs.toDS(), n = 3, numHashes = 12,
-        rowsPerBand = 3, threshold = 0.5)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("near_dup").start()
-      try {
-        // Split the corpus so every group straddles a batch boundary.
-        docs.addData(StreamingDedup.Doc(1L, corpus.toMap.apply(1L)),
-          StreamingDedup.Doc(4L, corpus.toMap.apply(4L)))
-        q.processAllAvailable()
-        docs.addData(StreamingDedup.Doc(2L, corpus.toMap.apply(2L)),
-          StreamingDedup.Doc(5L, corpus.toMap.apply(5L)),
-          StreamingDedup.Doc(6L, corpus.toMap.apply(6L)))
-        q.processAllAvailable()
-        docs.addData(StreamingDedup.Doc(3L, corpus.toMap.apply(3L)),
-          StreamingDedup.Doc(7L, corpus.toMap.apply(7L)))
-        q.processAllAvailable()
-
-        val got = spark.table("near_dup").collect()
-          .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"),
-            math.rint(r.getAs[Double]("jaccard") * 1e9)))
-        assert(got.length === got.toSet.size, "a pair was emitted twice")
-        assert(got.toSet === expected)
-      } finally q.stop()
-    }
+      assert(got.length === got.toSet.size, "a pair was emitted twice")
+      assert(got.toSet === expected)
+    } finally q.stop()
   }
 
   test("nearDup: one-batch arrival equals the same split corpus (order-free)") {
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
-      val docs = MemoryStream[StreamingDedup.Doc]
-      val q = StreamingDedup.nearDup(docs.toDS(), threshold = 0.5)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("near_dup_onebatch").start()
-      try {
-        docs.addData(corpus.map { case (i, t) => StreamingDedup.Doc(i, t) }: _*)
-        q.processAllAvailable()
-        val oneShot = spark.table("near_dup_onebatch").collect()
-          .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"))).toSet
-        val batch = Dedup.minhashLsh(corpus.toDF("doc_id", "text"),
-          "doc_id", "text", threshold = 0.5).collect()
-          .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-        assert(oneShot === batch)
-      } finally q.stop()
-    }
+    implicit val sqlCtx = spark.sqlContext
+    val docs = MemoryStream[StreamingDedup.Doc]
+    val q = StreamingDedup.nearDup(docs.toDS(), threshold = 0.5)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("near_dup_onebatch").start()
+    try {
+      docs.addData(corpus.map { case (i, t) => StreamingDedup.Doc(i, t) }: _*)
+      q.processAllAvailable()
+      val oneShot = spark.table("near_dup_onebatch").collect()
+        .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"))).toSet
+      val batch = Dedup.minhashLsh(corpus.toDF("doc_id", "text"),
+        "doc_id", "text", threshold = 0.5).collect()
+        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+      assert(oneShot === batch)
+    } finally q.stop()
   }
 }

@@ -28,50 +28,41 @@ class StreamingSimilaritySpec extends SparkSpecBase {
   }
 
   test("nearDup: pair-for-pair parity with the batch LSH route across batch splits") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
+    val batchDf = corpus.map { case (i, v) => (i, v.map(_.toFloat).toSeq) }
+      .toDF("vec_id", "embedding")
+    val expected = Similarity.cosineNearDupPairsLsh(batchDf, "vec_id",
+      "embedding", threshold = 0.9, planes = 6, tables = 4)
+      .collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[Double]("cosine")))
+      .toSet
+    assert(expected.nonEmpty, "corpus must contain LSH-reachable near-dups")
+
+    val embs = MemoryStream[StreamingSimilarity.EmbeddingRow]
+    val q = StreamingSimilarity.nearDup(embs.toDS(), threshold = 0.9,
+      planes = 6, tables = 4)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("stream_neardup").start()
     try {
-      val batchDf = corpus.map { case (i, v) => (i, v.map(_.toFloat).toSeq) }
-        .toDF("vec_id", "embedding")
-      val expected = Similarity.cosineNearDupPairsLsh(batchDf, "vec_id",
-        "embedding", threshold = 0.9, planes = 6, tables = 4)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+      // split so every cluster straddles a micro-batch boundary
+      val (first, rest) = corpus.partition(_._1 % 3 == 0)
+      embs.addData(first.map { case (i, v) =>
+        StreamingSimilarity.EmbeddingRow(i, v) }: _*)
+      q.processAllAvailable()
+      val (second, third) = rest.partition(_._1 % 3 == 1)
+      embs.addData(second.map { case (i, v) =>
+        StreamingSimilarity.EmbeddingRow(i, v) }: _*)
+      q.processAllAvailable()
+      embs.addData(third.map { case (i, v) =>
+        StreamingSimilarity.EmbeddingRow(i, v) }: _*)
+      q.processAllAvailable()
+
+      val got = spark.table("stream_neardup").collect()
+        .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"),
           r.getAs[Double]("cosine")))
-        .toSet
-      assert(expected.nonEmpty, "corpus must contain LSH-reachable near-dups")
-
-      val embs = MemoryStream[StreamingSimilarity.EmbeddingRow]
-      val q = StreamingSimilarity.nearDup(embs.toDS(), threshold = 0.9,
-        planes = 6, tables = 4)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_neardup").start()
-      try {
-        // split so every cluster straddles a micro-batch boundary
-        val (first, rest) = corpus.partition(_._1 % 3 == 0)
-        embs.addData(first.map { case (i, v) =>
-          StreamingSimilarity.EmbeddingRow(i, v) }: _*)
-        q.processAllAvailable()
-        val (second, third) = rest.partition(_._1 % 3 == 1)
-        embs.addData(second.map { case (i, v) =>
-          StreamingSimilarity.EmbeddingRow(i, v) }: _*)
-        q.processAllAvailable()
-        embs.addData(third.map { case (i, v) =>
-          StreamingSimilarity.EmbeddingRow(i, v) }: _*)
-        q.processAllAvailable()
-
-        val got = spark.table("stream_neardup").collect()
-          .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"),
-            r.getAs[Double]("cosine")))
-        assert(got.length === got.toSet.size, "a pair was emitted twice")
-        assert(got.toSet === expected)
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+      assert(got.length === got.toSet.size, "a pair was emitted twice")
+      assert(got.toSet === expected)
+    } finally q.stop()
   }
 }

@@ -51,91 +51,73 @@ class StreamingSoakSpec extends SparkSpecBase {
       (0 until nKeys).map(k => (s"sym_$k", ts, (m * 60 + s) * 0.001 + k))
     }
 
-  /** Run `body` with the RocksDB state-store provider, restoring the
-    * session's provider afterwards. */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("live loop: every key closes minutes-1 bars and fires from its lookback on") {
     assume(optIn, "set SPARK_GRAFT_SCALE_SPECS=1 to run the streaming soaks")
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val lookback = 3
-      val stream = MemoryStream[IncrementalBars.Tick]
-      val q = LiveLoop.run(stream.toDS(), 60000L, new BuyFromLookback(lookback))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("live_soak").start()
-      try {
-        val start = System.nanoTime()
-        (0 until minutes).foreach { m =>
-          stream.addData(minuteTicks(m))
-          q.processAllAvailable()
-        }
-        info(f"$nTicks ticks in ${(System.nanoTime() - start) / 1e9}%.1f s")
-        val events = spark.table("live_soak")
-        assert(events.select("key").distinct().count() === nKeys)
-        val barsPerKey = events.filter($"kind" === "bar").groupBy("key")
-          .count().select("count").distinct().as[Long].collect().toSeq
-        assert(barsPerKey === Seq(minutes - 1L), s"uneven bar counts: $barsPerKey")
-        val decPerKey = events.filter($"kind" === "decision").groupBy("key")
-          .count().select("count").distinct().as[Long].collect().toSeq
-        assert(decPerKey === Seq(minutes - 1L - (lookback - 1L)),
-          s"uneven decision counts: $decPerKey")
-      } finally q.stop()
-    }
+    val lookback = 3
+    val stream = MemoryStream[IncrementalBars.Tick]
+    val q = LiveLoop.run(stream.toDS(), 60000L, new BuyFromLookback(lookback))
+      .writeStream.outputMode("append").format("memory")
+      .queryName("live_soak").start()
+    try {
+      val start = System.nanoTime()
+      (0 until minutes).foreach { m =>
+        stream.addData(minuteTicks(m))
+        q.processAllAvailable()
+      }
+      info(f"$nTicks ticks in ${(System.nanoTime() - start) / 1e9}%.1f s")
+      val events = spark.table("live_soak")
+      assert(events.select("key").distinct().count() === nKeys)
+      val barsPerKey = events.filter($"kind" === "bar").groupBy("key")
+        .count().select("count").distinct().as[Long].collect().toSeq
+      assert(barsPerKey === Seq(minutes - 1L), s"uneven bar counts: $barsPerKey")
+      val decPerKey = events.filter($"kind" === "decision").groupBy("key")
+        .count().select("count").distinct().as[Long].collect().toSeq
+      assert(decPerKey === Seq(minutes - 1L - (lookback - 1L)),
+        s"uneven decision counts: $decPerKey")
+    } finally q.stop()
   }
 
   test("forward as-of: emitted rows equal the batch join, pending equals its null set") {
     assume(optIn, "set SPARK_GRAFT_SCALE_SPECS=1 to run the streaming soaks")
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val ticks = MemoryStream[IncrementalBars.Tick]
-      val signals = MemoryStream[(String, Long, Double)]
-      val q = StreamingAsOf.enrichForward(ticks.toDS(), signals.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("fwd_soak").start()
-      try {
-        val start = System.nanoTime()
-        (0 until minutes).foreach { m =>
-          ticks.addData(minuteTicks(m))
-          signals.addData(minuteSignals(m))
-          q.processAllAvailable()
-        }
-        info(f"$nTicks ticks in ${(System.nanoTime() - start) / 1e9}%.1f s")
+    val ticks = MemoryStream[IncrementalBars.Tick]
+    val signals = MemoryStream[(String, Long, Double)]
+    val q = StreamingAsOf.enrichForward(ticks.toDS(), signals.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("fwd_soak").start()
+    try {
+      val start = System.nanoTime()
+      (0 until minutes).foreach { m =>
+        ticks.addData(minuteTicks(m))
+        signals.addData(minuteSignals(m))
+        q.processAllAvailable()
+      }
+      info(f"$nTicks ticks in ${(System.nanoTime() - start) / 1e9}%.1f s")
 
-        // batch mirror on the same events; the signal ts is duplicated
-        // into the payload so the matched signal's TIMESTAMP is visible
-        val allTicks = (0 until minutes).flatMap(minuteTicks)
-          .map(t => (t.key, t.tsMs, t.price)).toDF("key", "tsMs", "price")
-        val allSignals = (0 until minutes).flatMap(minuteSignals)
-          .map { case (k, ts, v) => (k, ts, ts, v) }
-          .toDF("key", "sigTs", "signalTsMs", "signalValue")
-        val batch = AsOfJoin.forward(allTicks, allSignals, Seq("key"),
-          "tsMs", "sigTs", Seq("signalTsMs", "signalValue"))
-        val cols = Seq("key", "tsMs", "price", "signalTsMs", "signalValue").map(col)
-        val batchMatched = batch.filter(col("signalTsMs").isNotNull).select(cols: _*)
-        val batchNull = batch.filter(col("signalTsMs").isNull).select("key", "tsMs")
+      // batch mirror on the same events; the signal ts is duplicated
+      // into the payload so the matched signal's TIMESTAMP is visible
+      val allTicks = (0 until minutes).flatMap(minuteTicks)
+        .map(t => (t.key, t.tsMs, t.price)).toDF("key", "tsMs", "price")
+      val allSignals = (0 until minutes).flatMap(minuteSignals)
+        .map { case (k, ts, v) => (k, ts, ts, v) }
+        .toDF("key", "sigTs", "signalTsMs", "signalValue")
+      val batch = AsOfJoin.forward(allTicks, allSignals, Seq("key"),
+        "tsMs", "sigTs", Seq("signalTsMs", "signalValue"))
+      val cols = Seq("key", "tsMs", "price", "signalTsMs", "signalValue").map(col)
+      val batchMatched = batch.filter(col("signalTsMs").isNotNull).select(cols: _*)
+      val batchNull = batch.filter(col("signalTsMs").isNull).select("key", "tsMs")
 
-        val streamed = spark.table("fwd_soak").select(cols: _*)
-        def diff(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-          a.except(b).count() + b.except(a).count()
-        assert(diff(streamed, batchMatched) === 0L,
-          "streamed rows differ from the batch forward join's non-null rows")
-        val pending = allTicks.select("key", "tsMs").except(streamed.select("key", "tsMs"))
-        assert(diff(pending, batchNull) === 0L,
-          "pending ticks differ from the batch null-payload set")
-        assert(streamed.count() + pending.count() === nTicks,
-          "emitted + pending does not cover every tick exactly once")
-      } finally q.stop()
-    }
+      val streamed = spark.table("fwd_soak").select(cols: _*)
+      def diff(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        a.except(b).count() + b.except(a).count()
+      assert(diff(streamed, batchMatched) === 0L,
+        "streamed rows differ from the batch forward join's non-null rows")
+      val pending = allTicks.select("key", "tsMs").except(streamed.select("key", "tsMs"))
+      assert(diff(pending, batchNull) === 0L,
+        "pending ticks differ from the batch null-payload set")
+      assert(streamed.count() + pending.count() === nTicks,
+        "emitted + pending does not cover every tick exactly once")
+    } finally q.stop()
   }
 }

@@ -11,17 +11,6 @@ import graft.dedup.ExactSubstrings
 class StreamingSubstringsSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Near-dup corpus: repeated spans across docs and within one doc. */
   private val corpus: Seq[(Long, String)] = {
     val shared = ('a' to 'l').map(_.toString).mkString(" ") // 12 tokens
@@ -57,60 +46,52 @@ class StreamingSubstringsSpec extends SparkSpecBase {
   }
 
   test("one-batch split emits exactly the batch duplicated-window set") {
-    withRocksDb {
-      val got = streamSites(Seq(corpus))
-      assert(got.size === got.distinct.size) // each site exactly once
-      assert(got.toSet === batchSites)
-    }
+    val got = streamSites(Seq(corpus))
+    assert(got.size === got.distinct.size) // each site exactly once
+    assert(got.toSet === batchSites)
   }
 
   test("per-doc micro-batches emit the same set, each site once") {
-    withRocksDb {
-      val got = streamSites(corpus.map(Seq(_)))
-      assert(got.size === got.distinct.size)
-      assert(got.toSet === batchSites)
-    }
+    val got = streamSites(corpus.map(Seq(_)))
+    assert(got.size === got.distinct.size)
+    assert(got.toSet === batchSites)
   }
 
   test("uneven split parity and merged spans match the batch operator") {
-    withRocksDb {
-      val got = streamSites(Seq(corpus.take(1), corpus.slice(1, 3), corpus.drop(3)))
-      assert(got.toSet === batchSites)
-      // spans derived from the accumulated stream = batch spans
-      val streamed = ExactSubstrings.mergeSpans(
-          got.toDF("doc_id", "pos"), "doc_id", K)
-        .orderBy("doc_id", "span_start").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      val batch = ExactSubstrings.duplicatedSpans(
-          corpus.toDF("doc_id", "text"), "doc_id", "text", K)
-        .orderBy("doc_id", "span_start").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(streamed === batch)
-    }
+    val got = streamSites(Seq(corpus.take(1), corpus.slice(1, 3), corpus.drop(3)))
+    assert(got.toSet === batchSites)
+    // spans derived from the accumulated stream = batch spans
+    val streamed = ExactSubstrings.mergeSpans(
+        got.toDF("doc_id", "pos"), "doc_id", K)
+      .orderBy("doc_id", "span_start").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val batch = ExactSubstrings.duplicatedSpans(
+        corpus.toDF("doc_id", "text"), "doc_id", "text", K)
+      .orderBy("doc_id", "span_start").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(streamed === batch)
   }
 
   test("late third occurrence emits only the new site") {
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
-      val docs = MemoryStream[StreamingSubstrings.Doc]
-      val q = StreamingSubstrings.duplicatedWindows(docs.toDS(), K)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("substr_late").start()
-      try {
-        docs.addData(StreamingSubstrings.Doc(1L, "a b c"))
-        q.processAllAvailable()
-        assert(spark.table("substr_late").count() === 0L) // first: silent
-        docs.addData(StreamingSubstrings.Doc(2L, "a b c"))
-        q.processAllAvailable()
-        val afterSecond = spark.table("substr_late").collect()
-          .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seen"))).sortBy(_._1)
-        assert(afterSecond.toSeq === Seq((1L, 2L), (2L, 2L))) // both exposed
-        docs.addData(StreamingSubstrings.Doc(3L, "a b c"))
-        q.processAllAvailable()
-        val all = spark.table("substr_late").collect()
-          .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seen"))).sortBy(_._1)
-        assert(all.toSeq === Seq((1L, 2L), (2L, 2L), (3L, 3L)))
-      } finally q.stop()
-    }
+    implicit val sqlCtx = spark.sqlContext
+    val docs = MemoryStream[StreamingSubstrings.Doc]
+    val q = StreamingSubstrings.duplicatedWindows(docs.toDS(), K)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("substr_late").start()
+    try {
+      docs.addData(StreamingSubstrings.Doc(1L, "a b c"))
+      q.processAllAvailable()
+      assert(spark.table("substr_late").count() === 0L) // first: silent
+      docs.addData(StreamingSubstrings.Doc(2L, "a b c"))
+      q.processAllAvailable()
+      val afterSecond = spark.table("substr_late").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seen"))).sortBy(_._1)
+      assert(afterSecond.toSeq === Seq((1L, 2L), (2L, 2L))) // both exposed
+      docs.addData(StreamingSubstrings.Doc(3L, "a b c"))
+      q.processAllAvailable()
+      val all = spark.table("substr_late").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seen"))).sortBy(_._1)
+      assert(all.toSeq === Seq((1L, 2L), (2L, 2L), (3L, 3L)))
+    } finally q.stop()
   }
 }
