@@ -31,7 +31,8 @@ import graft.workers.Workers
   *      scenario, warmup ticks feeding indicators but gated from trading;
   *   7. summary — trade analytics + portfolio rollup + robustness/WFE
   *      by role + ranked scenarios, written to `outDir` (ranking as CSV,
-  *      reports as JSON via [[serve.Serve]]).
+  *      reports as JSON via [[serve.Serve]]), the independent artifacts
+  *      concurrently once the kernel outcomes are cached.
   *
   * Scale shape: every phase is a groupBy/window/join plan (no driver
   * loops); the kernel phase partitions BY SCENARIO — the reference's
@@ -238,15 +239,20 @@ object Backtest {
         col("net_pnl"), col("nTrades"), col("maxDrawdown"))
 
     // ---- artifacts ---------------------------------------------------
-    Serve.writeRankingCsv(ranked.orderBy(col("rank")), s"$outDir/ranking")
-    Serve.writeReportJson(analytics, outDir, "trade_analytics")
-    Serve.writeReportJson(rollup, outDir, "portfolio_rollup")
-    Serve.writeReportJson(robustness.orderBy(col("symbol")), outDir, "robustness")
-    Serve.writeReportJson(wfe.orderBy(col("symbol")), outDir, "wfe")
-    Serve.writeReportJson(avail.orderBy(col("symbol")), outDir, "availability")
-    Serve.writeReportJson(quality.orderBy(col("symbol")), outDir, "quality")
-    if (!errors.isEmpty)
-      Serve.writeReportJson(errors.orderBy(col("scenario_id")), outDir, "errors")
+    // one job replays every scenario into the cache and counts the
+    // errors (an RDD count: no aggregate exchange, so no extra job); the
+    // independent writes then only read the cached outcomes
+    val nErrors = outcomes.filter(col("error") =!= "").rdd.count()
+    Serve.writeConcurrently(Seq(
+      () => Serve.writeRankingCsv(ranked.orderBy(col("rank")), s"$outDir/ranking"),
+      () => Serve.writeReportJson(analytics, outDir, "trade_analytics"),
+      () => Serve.writeReportJson(rollup, outDir, "portfolio_rollup"),
+      () => Serve.writeReportJson(robustness.orderBy(col("symbol")), outDir, "robustness"),
+      () => Serve.writeReportJson(wfe.orderBy(col("symbol")), outDir, "wfe"),
+      () => Serve.writeReportJson(avail.orderBy(col("symbol")), outDir, "availability"),
+      () => Serve.writeReportJson(quality.orderBy(col("symbol")), outDir, "quality")) ++
+      Option.when(nErrors > 0)(() =>
+        Serve.writeReportJson(errors.orderBy(col("scenario_id")), outDir, "errors")))
 
     ranked.orderBy(col("rank"))
   }
@@ -303,13 +309,15 @@ object Backtest {
       .select(col("rank"), col("run_id"), col("params"), col("status"),
         col("objective").as("net_pnl"), col("n_trades"), col("worst_drawdown"))
 
-    Serve.writeRankingCsv(
-      ranked.withColumn("params", to_json(col("params")))
-        .orderBy(col("rank")), s"$outDir/sweep_ranking")
-    Serve.writeReportJson(ledger.orderBy(col("runId"), col("scenarioId")),
-      outDir, "sweep_ledger")
-    Serve.writeReportJson(mount.avail.orderBy(col("symbol")), outDir, "availability")
-    Serve.writeReportJson(mount.quality.orderBy(col("symbol")), outDir, "quality")
+    ledger.rdd.count() // replay the grid into the cache once, before the writes
+    Serve.writeConcurrently(Seq(
+      () => Serve.writeRankingCsv(
+        ranked.withColumn("params", to_json(col("params")))
+          .orderBy(col("rank")), s"$outDir/sweep_ranking"),
+      () => Serve.writeReportJson(ledger.orderBy(col("runId"), col("scenarioId")),
+        outDir, "sweep_ledger"),
+      () => Serve.writeReportJson(mount.avail.orderBy(col("symbol")), outDir, "availability"),
+      () => Serve.writeReportJson(mount.quality.orderBy(col("symbol")), outDir, "quality")))
 
     ranked.orderBy(col("rank"))
   }

@@ -53,6 +53,26 @@ object Serve {
                       name: String): Unit =
     report.coalesce(1).write.mode("overwrite").json(s"$storeDir/$name")
 
+  /** Runs independent artifact writes concurrently, one short-lived
+    * thread per write, and returns when all have finished. The threads
+    * are created inside the call, so they inherit the caller's Spark
+    * local properties (job group, description) and active session. If
+    * any write fails, the first failure in `writes` order is re-thrown
+    * (the others are attached as suppressed). */
+  def writeConcurrently(writes: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (w, i) =>
+      new Thread(() => try w() catch { case t: Throwable => failures(i) = t },
+        s"serve-write-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
+  }
+
   def readReportJson(spark: SparkSession, storeDir: String,
                      name: String): DataFrame =
     spark.read.json(s"$storeDir/$name")

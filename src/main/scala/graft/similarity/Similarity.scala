@@ -935,10 +935,11 @@ object Similarity {
     *     8× payload replication costs) — see the round-5 ladder in
     *     PLAN.md at commit 2a5e17a;
     *   - a pair sharing a signature in several tables is scored in each,
-    *     then collapsed by `distinct` on the scored triple — cosine is
-    *     deterministic (index-ascending summation, the [[cosine]] kernel),
-    *     so duplicates agree bit-for-bit and the result set is identical
-    *     to the join form's;
+    *     then collapsed inside the rank window: cosine is deterministic
+    *     (index-ascending summation, the [[cosine]] kernel), so copies
+    *     agree bit-for-bit and sit adjacent in the window's (cosine desc,
+    *     id_b asc) order, and a `lag()` over that window drops every copy
+    *     after the first — the result set is identical to the join form's;
     *   - `planes = 0` (default) adapts the signature width to the input:
     *     planes = max(4, ceil(log2(n / 32))) keeps the expected bucket
     *     size ~32, so per-bucket pair generation stays O(n) overall as n

@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import graft.sim._
+import graft.workers.Workers
 
 /** E2E spec for the §3.1 flagship: a dense synthetic tick table runs the
   * full phase 0–7 pipeline with a SCRIPTED deterministic strategy, so
@@ -155,6 +162,64 @@ class BacktestSpec extends SparkSpecBase {
     val ledger = spark.read.json(s"$out/sweep_ledger")
     assert(ledger.select("runId").distinct().count() === 4)
     assert(ledger.count() === 12) // 4 combos x 3 scenarios
+  }
+
+  /** Counts every tick decision in a driver-side accumulator. Task-side
+    * updates count every execution of a partition, so a recomputed
+    * kernel partition shows up as extra calls. */
+  final class Counting(inner: DecisionLogic, calls: LongAccumulator)
+      extends DecisionLogic {
+    def onTick(ctx: DecisionContext): Seq[Decision] = {
+      calls.add(1L); inner.onTick(ctx)
+    }
+  }
+
+  test("phase 7's concurrent writes replay each tagged tick exactly once") {
+    val out = java.nio.file.Files.createTempDirectory("backtest_once").toString
+    val calls = spark.sparkContext.longAccumulator("backtest_on_tick")
+    val ranked = Backtest.run(spark, syntheticTicks, out,
+      new Counting(new Scripted, calls), cfg).collect()
+    assert(ranked.length === 3)
+
+    // the tagged ticks Backtest.run hands the kernel (phase 3 warmup)
+    val (rsiW, bbW) = (Workers.registry("CORE/rsi"), Workers.registry("CORE/bollinger"))
+    val warmupMs = math.max(rsiW.warmupBars(rsiW.validate(cfg.rsiParams)),
+      bbW.warmupBars(bbW.validate(cfg.bbParams))) * cfg.warmupBarMs
+    val tagged = Backtest.prepareMount(spark, syntheticTicks, cfg, warmupMs)
+      .simTicks.count()
+    assert(tagged > 0L)
+    assert(calls.value === tagged,
+      s"kernel decided ${calls.value} times for $tagged tagged ticks")
+  }
+
+  test("every job of a Backtest.run inherits the caller's job group") {
+    val out = java.nio.file.Files.createTempDirectory("backtest_group").toString
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("g", "backtest under a job group")
+      try Backtest.run(spark, syntheticTicks, out, new Scripted, cfg)
+      finally sc.clearJobGroup()
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every job the run started has been seen
+      sc.setJobGroup("marker", "listener barrier")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+
+    val seen = groups.asScala.toSeq
+    assert(seen.contains("marker"), "listener never saw the marker job")
+    val inRun = seen.takeWhile(_ != "marker")
+    assert(inRun.size >= 8, s"expected the run's jobs, saw ${inRun.size}")
+    assert(inRun.forall(_ == "g"), s"jobs outside group g: ${inRun.filter(_ != "g")}")
   }
 
   test("phase 0 fails fast on invalid strategy parameters") {

@@ -57,7 +57,7 @@ class PlanShapeSpec extends SparkSpecBase {
   test("q15 OHLCV shares one key Exchange between window and aggregation") {
     val p = plan("q15_ohlcv_hourly")
     val exchanges = countOf(p, "\\(\\d+\\) Exchange")
-    // bucket window + final orderBy range exchange
+    // one (keys, bucket) aggregate + final orderBy range exchange
     assert(exchanges <= 3, s"OHLCV plan grew to $exchanges exchanges:\n$p")
   }
 
@@ -113,5 +113,25 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(!p.contains("CartesianProduct"))
     val exchanges = countOf(p, "\\(\\d+\\) Exchange")
     assert(exchanges <= 7, s"salted as-of grew to $exchanges exchanges:\n$p")
+  }
+
+  test("renderAllTimeframes: one input scan, no Window, at most 2 Exchanges") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("bars_plan").toString
+    spark.range(0, 1000, 1, 2)
+      .select(lit("EURUSD").as("symbol"), col("id").as("arrival_idx"),
+        timestamp_seconds(lit(1700000000L) + col("id") * 7L).as("timestamp"),
+        (lit(100.0) + col("id") / 1000.0).as("mid"), lit(1.0f).as("volume"))
+      .write.mode("overwrite").parquet(dir)
+    val bars = graft.bars.Ohlcv.renderAllTimeframes(spark.read.parquet(dir),
+      Seq(col("symbol")), col("timestamp"), col("mid"), col("volume"),
+      col("arrival_idx"))
+    val p = bars.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    // M1 aggregate on (symbol, bucket), then the roll-up aggregate on
+    // (symbol, bar_start, timeframe): the ticks are read and shuffled once
+    assert(countOf(p, "\\(\\d+\\) Scan parquet") === 1, s"input scanned more than once:\n$p")
+    assert(countOf(p, "\\(\\d+\\) Window") === 0, s"window operator in the bar plan:\n$p")
+    val exchanges = countOf(p, "\\(\\d+\\) Exchange")
+    assert(exchanges <= 2, s"bar plan grew to $exchanges exchanges:\n$p")
   }
 }

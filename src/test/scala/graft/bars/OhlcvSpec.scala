@@ -76,4 +76,81 @@ class OhlcvSpec extends SparkSpecBase {
       }
     }
   }
+
+  /** Plain-Scala bars: per (key, epoch-aligned bucket) the first/last
+    * price by (ts, id), max, min, volume sum and tick count. Rows are
+    * (timeframe, key, bar_start µs, open, high, low, close, volume, n). */
+  private def modelBars(ticks: Seq[(String, Long, Long, Double, Double)])
+      : Set[(String, String, Long, Double, Double, Double, Double, Double, Long)] = {
+    val widthsS = Map("M1" -> 60L, "M5" -> 300L, "M15" -> 900L, "M30" -> 1800L,
+      "H1" -> 3600L, "H4" -> 14400L, "D1" -> 86400L)
+    (for {
+      (tf, s) <- widthsS.toSeq
+      w = s * 1000000L
+      ((key, start), ts) <- ticks.groupBy(t => (t._1, Math.floorDiv(t._3, w) * w))
+    } yield {
+      val byTime = ts.sortBy(t => (t._3, t._2))
+      (tf, key, start, byTime.head._4, ts.map(_._4).max, ts.map(_._4).min,
+        byTime.last._4, ts.map(_._5).sum, ts.size.toLong)
+    }).toSet
+  }
+
+  /** Random ticks over two days and a half from a day boundary: two or
+    * three keys, many equal timestamps (broken by the unique id), a share
+    * of ticks exactly on D1/H4/H1/M5 boundaries. */
+  private def randomTicks(seed: Int, volume: scala.util.Random => Double) = {
+    val rnd = new scala.util.Random(seed)
+    val day0 = 1700006400L * 1000000L // a UTC midnight, in µs
+    val keys = Seq("AAA", "BBB", "CCC").take(2 + rnd.nextInt(2))
+    val boundaries = Seq(86400L, 14400L, 3600L, 300L).map(_ * 1000000L)
+    val pool = Vector.fill(120) {
+      if (rnd.nextInt(4) == 0) {
+        val w = boundaries(rnd.nextInt(boundaries.size))
+        day0 - w + w * rnd.nextInt((3 * 86400000000L / w).toInt)
+      } else day0 - 43200000000L + (rnd.nextDouble() * 2.5 * 86400000000L).toLong
+    }
+    (0 until 400 + rnd.nextInt(200)).map { i =>
+      (keys(rnd.nextInt(keys.size)), i.toLong, pool(rnd.nextInt(pool.size)),
+        1.0 + rnd.nextInt(5000) / 100.0, volume(rnd))
+    }
+  }
+
+  private def rendered(ticks: Seq[(String, Long, Long, Double, Double)]) =
+    Ohlcv.renderAllTimeframes(
+        ticks.toDF("key", "id", "ts_us", "price", "vol")
+          .withColumn("ts", timestamp_micros(col("ts_us"))).repartition(3),
+        Seq(col("key")), col("ts"), col("price"), col("vol"), col("id"))
+      .collect().map { r =>
+        (r.getAs[String]("timeframe"), r.getAs[String]("key"),
+          r.getAs[java.sql.Timestamp]("bar_start").getTime * 1000L,
+          r.getAs[Double]("open"), r.getAs[Double]("high"), r.getAs[Double]("low"),
+          r.getAs[Double]("close"), r.getAs[Double]("volume"), r.getAs[Long]("tick_count"))
+      }
+
+  test("renderAllTimeframes equals a plain-Scala model on all 7 timeframes (property)") {
+    for (seed <- 1 to 6) {
+      // binary-fraction float volumes: every summation order is exact, so
+      // the M1-then-rollup sums must equal the model's tick sums exactly
+      val ticks = randomTicks(seed, r => r.nextInt(1 << 12) / 64.0)
+      val got = rendered(ticks)
+      assert(got.length === got.toSet.size, s"seed $seed: duplicate bars")
+      val want = modelBars(ticks)
+      assert(got.toSet === want, s"seed $seed: missing ${want -- got.toSet}, " +
+        s"extra ${got.toSet -- want}")
+      assert(got.map(_._1).toSet === Ohlcv.Timeframes.keySet)
+    }
+  }
+
+  test("renderAllTimeframes: arbitrary float volumes differ only by summation order") {
+    for (seed <- 7 to 9) {
+      val ticks = randomTicks(seed, r => r.nextDouble() * 10.0)
+      val got = rendered(ticks).map(b => b.copy(_8 = 0.0) -> b._8).toMap
+      val want = modelBars(ticks).map(b => b.copy(_8 = 0.0) -> b._8).toMap
+      assert(got.keySet === want.keySet, s"seed $seed: OHLC/count differ")
+      want.foreach { case (k, v) =>
+        assert(math.abs(got(k) - v) <= 1e-12 * math.max(1.0, math.abs(v)),
+          s"seed $seed: volume ${got(k)} vs $v for $k")
+      }
+    }
+  }
 }

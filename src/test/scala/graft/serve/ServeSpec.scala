@@ -59,4 +59,20 @@ class ServeSpec extends SparkSpecBase {
     assert(back.filter(col("currency") === "EUR")
       .select("net_pnl").as[Double].head() === 123.45)
   }
+
+  test("concurrent writes all finish; the first failure in order is re-thrown") {
+    val dir = Files.createTempDirectory("serve_concurrent").toString
+    val report = Seq(("EUR", 1), ("USD", 2)).toDF("currency", "n")
+    val e = intercept[IllegalStateException] {
+      Serve.writeConcurrently(Seq(
+        () => Serve.writeReportJson(report, dir, "a"),
+        () => throw new IllegalStateException("first"),
+        () => Serve.writeReportJson(report, dir, "b"),
+        () => throw new IllegalArgumentException("second")))
+    }
+    assert(e.getMessage === "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+    assert(Serve.listReports(spark, dir) === Seq("a", "b"))
+    assert(Serve.readReportJson(spark, dir, "b").count() === 2)
+  }
 }
