@@ -99,7 +99,11 @@ object Backtest {
     * across the whole grid (`batch_orchestrator.py:656-695`: mount
     * identity excludes strategy params). */
   case class Mount(simTicks: Dataset[SimTick], windows: DataFrame,
-                   quality: DataFrame, avail: DataFrame)
+                   quality: DataFrame, avail: DataFrame)(coverage: DataFrame) {
+    /** Unpersist the frames [[prepareMount]] cached. */
+    def unpersist(): Unit =
+      Seq(coverage, quality, windows).foreach(_.unpersist())
+  }
 
   /** Phases 1-6 (pre-kernel): coverage, availability, load, quality
     * gate, scenario windows, tick tagging. `warmupMs` is the caller's
@@ -164,7 +168,7 @@ object Backtest {
         col("bid"), col("ask"))
       .as[SimTick]
 
-    Mount(simTicks, windows, quality, avail)
+    Mount(simTicks, windows, quality, avail)(coverage)
   }
 
   /** The phase-6 kernel config shared by [[run]] and [[sweep]]. */
@@ -175,11 +179,27 @@ object Backtest {
     latencyMinMs = 20, latencyMaxMs = 120, latencySeed = 42L,
     barTimeframesMs = Seq(cfg.warmupBarMs))
 
+  /** Collects `ranking`, then unpersists the call's kernel output and
+    * mount, and returns the rows as a local frame with the same schema.
+    * Spark matches cached file scans by root path, so a later call in
+    * the same session over a tick table rewritten in place would
+    * otherwise be served this call's coverage, quality, windows and
+    * outcomes. */
+  private def collectAndRelease(ranking: DataFrame, kernelOut: Dataset[_],
+                                mount: Mount): DataFrame = {
+    val rows = ranking.collect()
+    kernelOut.unpersist()
+    mount.unpersist()
+    ranking.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), ranking.schema)
+  }
+
   /** Run the full phase 0–7 pipeline. `ticks` must carry (symbol: string,
     * ts_ms: long, mid: double) — see [[loadEventsAsTicks]] for the
     * events-table adapter. Writes ranking CSV + report JSONs under
-    * `outDir` and returns the per-scenario summary frame (one row per
-    * scenario: stats ⋈ window role ⋈ rank). */
+    * `outDir` and returns the per-scenario summary rows (one per
+    * scenario: stats ⋈ window role ⋈ rank) as a local frame; nothing
+    * the call cached outlives it. */
   def run(spark: SparkSession, ticks: DataFrame, outDir: String,
           logic: DecisionLogic, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
@@ -254,7 +274,7 @@ object Backtest {
       Option.when(nErrors > 0)(() =>
         Serve.writeReportJson(errors.orderBy(col("scenario_id")), outDir, "errors")))
 
-    ranked.orderBy(col("rank"))
+    collectAndRelease(ranked.orderBy(col("rank")), outcomes, mount)
   }
 
   /** Sweep mode (reference warm path, #419): a strategy parameter grid
@@ -274,7 +294,8 @@ object Backtest {
     * Artifacts under `outDir`: `sweep_ranking` CSV (rank × combination,
     * objective = total net P&L, A16 tie-break semantics), `sweep_ledger`
     * JSON (per combination × scenario), plus availability/quality from
-    * the mount. Returns the ranked per-combination frame. */
+    * the mount. Returns the ranked per-combination rows as a local
+    * frame; nothing the call cached outlives it. */
   def sweep(spark: SparkSession, ticks: DataFrame, outDir: String,
             grid: Map[String, Seq[String]], lots: Double = 1.0,
             cfg: Config = Config()): DataFrame = {
@@ -319,7 +340,7 @@ object Backtest {
       () => Serve.writeReportJson(mount.avail.orderBy(col("symbol")), outDir, "availability"),
       () => Serve.writeReportJson(mount.quality.orderBy(col("symbol")), outDir, "quality")))
 
-    ranked.orderBy(col("rank"))
+    collectAndRelease(ranked.orderBy(col("rank")), ledger, mount)
   }
 
   /** Adapter: the driver testdata's events table as a tick feed —

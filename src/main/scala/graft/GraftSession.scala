@@ -21,10 +21,7 @@ import org.apache.spark.sql.SparkSession
   *     grows a decade grows every per-task working set a decade (q91
   *     sf100: 3.9×/2.1× wall, 8.4× GC, 2× peak task memory against 256
   *     pinned partitions), while partition count growing with data —
-  *     what a real cluster does — removes the regime cost.
-  *     `SPARK_GRAFT_SHUFFLE_PARTITIONS` pins an exact count with
-  *     coalescing OFF (the scale-ladder knob: same-phase A/B cells need
-  *     the count to be the only variable);
+  *     what a real cluster does — removes the regime cost;
   *   - AQE runtime SMJ→SHJ conversion ON (`maxShuffledHashJoinLocal
   *     MapThreshold`): joins whose build side turns out small at runtime
   *     (dedup verify stages — candidate-sized builds) become hash joins
@@ -40,20 +37,14 @@ object GraftSession {
 
   def local(cpus: String): SparkSession = {
     val coreCount = scala.util.Try(cpus.toInt).getOrElse(32)
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS pins an exact reducer count and
-    // turns byte-based coalescing OFF — the same-phase A/B ladder knob,
-    // where partition count must be the ONLY variable between cells.
-    // Unset (the engine default, and the driver contract) = adaptive.
-    val pinned = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       // deployment-grade extension wiring: custom functions, the native
       // as-of planner strategy, and the ASOF JOIN parser/resolution pair
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // `shuffle.partitions` is the NON-coalescing fallback count (pinned
-      // ladder cells, and any plan AQE can't re-read): the core count —
-      // the pre-round-12 default, unchanged when the knob is set.
-      .config("spark.sql.shuffle.partitions", pinned.getOrElse(cpus))
+      // `shuffle.partitions` is the NON-coalescing fallback count (any
+      // plan AQE can't re-read): the core count.
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
@@ -68,8 +59,7 @@ object GraftSession {
       // Explicit `repartition(n)`/`repartitionByRange(n, …)` calls are
       // never coalesced (REPARTITION_BY_NUM origin) — deliberate
       // compute-spreads like the IVF build keep their exact counts.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        pinned.isEmpty.toString)
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (8 * coreCount).toString)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")

@@ -260,7 +260,7 @@ object Retrieval {
     * exactly. */
   private[text] def censusDf(docs: DataFrame, text: String,
       fraction: Double, sig: => String): (Long, Long) =
-    cachedCensus(docs, s"docs:$text", fraction, sig) {
+    censusMemo.getOrCompute(docs, (s"docs:$text", fraction), sig) {
       val s =
         if (fraction >= 1.0) docs
         else docs.sample(withReplacement = false, fraction, seed = 8361L)
@@ -272,88 +272,23 @@ object Retrieval {
     * same two estimates from the postings rows directly. */
   private[text] def censusDfPostings(postings: DataFrame,
       fraction: Double, sig: => String): (Long, Long) =
-    cachedCensus(postings, "postings", fraction, sig) {
+    censusMemo.getOrCompute(postings, ("postings", fraction), sig) {
       val s =
         if (fraction >= 1.0) postings
         else postings.sample(withReplacement = false, fraction, seed = 8361L)
       census(s.select(col("term")), fraction)
     }
 
-  /** Content signature of a DataFrame's file-backed sources — shared
-    * implementation in [[graft.util.SourceSig]] (lifted there in round
-    * 17 so the dedup/similarity pair-stream memos enforce the same
-    * invariant; see its scaladoc for the sameResult rationale and the
-    * mtime-granularity residual). Callers constructing one query
-    * evaluate this ONCE and share it between the census memo and the df
-    * cache (by-name parameters), so a routed construction pays a single
-    * listing. */
-  private def contentSig(df: DataFrame): String =
-    graft.util.SourceSig.contentSig(df)
-
-  private case class CensusKey(sessionId: Int, planHash: Int, tag: String,
-                               fraction: Double)
-  private case class CensusEntry(plan: org.apache.spark.sql.catalyst.plans
-                                       .logical.LogicalPlan,
-                                 sig: String,
-                                 est: (Long, Long))
-  private val censusCache =
-    scala.collection.mutable.LinkedHashMap.empty[CensusKey, CensusEntry]
-  private val censusCacheCap = 8
+  /** Memo of census results per (source, column tag, fraction) (policy:
+    * [[graft.util.PlanMemo]]). The census is a sampled 1-row aggregate
+    * (~1% of one token pass), but it is an eager job, so a pipeline
+    * calling TF-IDF repeatedly on one corpus would otherwise pay it per
+    * construction; entries are two longs. */
+  val censusMemo = new graft.util.PlanMemo[(Long, Long)](8)
 
   /** Number of census AGGREGATION JOBS actually run (not cache hits) —
     * the spec's accounting hook for the memoization contract. */
   private[text] val censusRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop the memoized census decisions (driver-side only — censuses hold
-    * no executor storage). Pipeline-boundary hook, [[clearDfCache]]'s
-    * sibling. Not needed for correctness of the routed QUERIES (both
-    * routes are value-identical) nor after in-place corpus changes (a hit
-    * also compares the source files' [[contentSig]] and re-censuses on
-    * mismatch); it remains for callers who want the memo's driver memory
-    * back. */
-  def clearCensusCache(): Unit =
-    censusCache.synchronized(censusCache.clear())
-
-  /** Memoize a census result on (session, source plan, column tag,
-    * fraction) — the pair-cache identity convention (`sameResult` against
-    * the cached analyzed plan, never hash equality alone), PLUS the
-    * source files' [[contentSig]] compared on every hit: `sameResult`
-    * alone matched a re-read of the same path after an in-place
-    * append/overwrite, serving a route decision from stale maxDf/vocab
-    * estimates. The census is a sampled 1-row aggregate (~1% of one token
-    * pass), but a pipeline calling TF-IDF repeatedly on one corpus would
-    * otherwise pay it per CONSTRUCTION (it is an eager job); same-session
-    * repeats now pay it once. Bounded LRU; entries are two longs,
-    * eviction is free. */
-  private def cachedCensus(src: DataFrame, tag: String, fraction: Double,
-      sigIn: => String)(
-      compute: => (Long, Long)): (Long, Long) = {
-    val plan = src.queryExecution.analyzed
-    val sig = sigIn
-    val key = CensusKey(System.identityHashCode(src.sparkSession),
-      plan.semanticHash(), tag, fraction)
-    val hit = censusCache.synchronized {
-      censusCache.get(key) match {
-        case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-          censusCache.remove(key); censusCache.put(key, e) // LRU touch
-          Some(e.est)
-        case _ => None
-      }
-    }
-    hit.getOrElse {
-      val est = compute // outside the lock: a real aggregation job
-      censusCache.synchronized {
-        censusCache.get(key) match {
-          case Some(e) if e.plan.sameResult(plan) && e.sig == sig => e.est
-          case _ =>
-            censusCache.put(key, CensusEntry(plan, sig, est))
-            if (censusCache.size > censusCacheCap)
-              censusCache.remove(censusCache.head._1)
-            est
-        }
-      }
-    }
-  }
 
   /** One aggregation job over the sampled term stream:
     * (sampleMaxCount/fraction, Chao1 vocabulary estimate). */
@@ -393,37 +328,11 @@ object Retrieval {
       else 0
     }
 
-  private case class DfKey(sessionId: Int, planHash: Int, hotH: Int)
-  private case class DfEntry(plan: org.apache.spark.sql.catalyst.plans
-                                   .logical.LogicalPlan,
-                             sig: String,
-                             dft: DataFrame,
-                             hotRows: Array[org.apache.spark.sql.Row])
-
-  private val dfCache =
-    scala.collection.mutable.LinkedHashMap.empty[DfKey, DfEntry]
-  private val dfCacheCap = 4
-
-  /** Drop every memoized hot-route df aggregate (unpersisting each).
-    * Pipeline-boundary hook in long-lived sessions; the harness mains'
-    * `spark.catalog.clearCache()` instead empties the STORAGE and leaves
-    * the entries — a later hit re-persists and recomputes lazily (the
-    * pair-cache convention, `Similarity.clearPairCache`). */
-  def clearDfCache(): Unit = dfCache.synchronized {
-    dfCache.valuesIterator.foreach(e => safeUnpersist(e.dft))
-    dfCache.clear()
-  }
-
-  private[text] def dfCacheSize: Int = dfCache.synchronized(dfCache.size)
-  private[text] def censusCacheSize: Int =
-    censusCache.synchronized(censusCache.size)
-
-  /** Unpersist tolerating a stopped owning session (the Bench harness
-    * rebuilds its session after a context-killing failure; the eviction
-    * path of an unrelated caller must not throw for it). NonFatal only. */
-  private def safeUnpersist(df: DataFrame): Unit =
-    try df.unpersist(blocking = false)
-    catch { case scala.util.control.NonFatal(_) => () }
+  /** Memo of the hot route's persisted df aggregate and its collected
+    * heavy-hitter rows per (tf source, H) (policy:
+    * [[graft.util.PlanMemo]]). */
+  val dfMemo = new graft.util.PlanMemo[
+    (DataFrame, Array[org.apache.spark.sql.Row])](4, v => Some(v._1))
 
   /** tf ⋈ df on `term`, routed: plain single join when `hotH == 0`;
     * otherwise the top-H terms by df close as a ≤H-row local list
@@ -442,91 +351,35 @@ object Retrieval {
     * heavy-hitter close and the cold join share ONE materialization
     * (Catalyst clones DAG-referenced subtrees into independent corpus
     * passes; the first cut of this route paid a full extra
-    * token exchange re-deriving it). Since round 15 that persist is
-    * MANAGED, not documented away: entries live in a bounded LRU keyed
-    * on (session, tf plan, H) and validated against the source files'
-    * [[contentSig]] on every hit (round 16: `sameResult` alone matched a
-    * re-read after an in-place corpus change, serving stale hotRows/dft
-    * against the fresh tf) — the `cosineNearDupPairsCached` precedent —
-    * so a library caller composing many hot-routed queries accumulates
-    * at most [[dfCacheCap]] vocabulary-sized entries, with evictions
-    * unpersisting; repeat calls on the same tf plan also reuse the
-    * already-collected heavy-hitter rows (no second close job). The
-    * plain route (and the auto route when it decides plain) persists
+    * token exchange re-deriving it). It is memoized in [[dfMemo]], so a
+    * library caller composing many hot-routed queries holds at most four
+    * vocabulary-sized aggregates, and repeat calls on one tf plan reuse
+    * the collected heavy-hitter rows (no second close job). The plain
+    * route (and the auto route when it decides plain) persists
     * nothing. */
   private def dfJoinRouted(tf: DataFrame, hotH: Int,
-      sigIn: => String): DataFrame = {
+      sig: => String): DataFrame = {
     val dftPlain = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("__df"))
     if (hotH <= 0) tf.join(dftPlain, "term")
     else {
-      val plan = tf.queryExecution.analyzed
-      // data identity, not just plan identity: a hit whose source files
-      // changed in place (append/overwrite under the same path) would
-      // otherwise join the FRESH tf against the STALE collected hotRows
-      // and the STALE persisted dft — new terms silently dropped by the
-      // inner join and df values wrong (sameResult is rootPaths-based
-      // for file scans; see contentSig). The caller shares ONE listing
-      // between this check and the census memo's.
-      val sig = sigIn
-      val key = DfKey(System.identityHashCode(tf.sparkSession),
-        plan.semanticHash(), hotH)
-      val hit = dfCache.synchronized {
-        dfCache.get(key) match {
-          case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-            dfCache.remove(key); dfCache.put(key, e) // LRU touch
-            Some(e)
-          case _ => None
-        }
-      }
-      val entry = hit match {
-        case Some(e) =>
-          // clearCache() may have emptied the storage behind this entry;
-          // re-persisting a still-persisted frame is a no-op.
-          if (e.dft.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE)
-            e.dft.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          e
-        case None =>
-          // Compute OUTSIDE the lock (the heavy-hitter close is a real
-          // job). A concurrent same-key miss costs one redundant close;
-          // last writer wins and the loser is unpersisted.
-          val dft = dftPlain.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // Bounded close of the heavy hitters (≤ hotH rows; ties at the
-          // boundary broken by term asc — deterministic, and harmless
-          // either way since df is identical on both routes).
-          val hotRows = dft.orderBy(col("__df").desc, col("term").asc)
-            .limit(hotH).collect()
-          dfCache.synchronized {
-            dfCache.get(key) match {
-              case Some(e) if e.plan.sameResult(plan) && e.sig == sig =>
-                safeUnpersist(dft)
-                e
-              case _ =>
-                // a same-key entry that failed the sig check is stale:
-                // replace it and release its storage
-                dfCache.remove(key).foreach(old => safeUnpersist(old.dft))
-                val e = DfEntry(plan, sig, dft, hotRows)
-                dfCache.put(key, e)
-                if (dfCache.size > dfCacheCap) {
-                  val (k0, e0) = dfCache.head
-                  dfCache.remove(k0)
-                  safeUnpersist(e0.dft)
-                }
-                e
-            }
-          }
+      val (dft, hotRows) = dfMemo.getOrCompute(tf, hotH, sig) {
+        val dft = dftPlain.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // Bounded close of the heavy hitters (≤ hotH rows; ties at the
+        // boundary broken by term asc — deterministic, and harmless
+        // either way since df is identical on both routes).
+        (dft, dft.orderBy(col("__df").desc, col("term").asc)
+          .limit(hotH).collect())
       }
       val spark = tf.sparkSession
       val hot = spark.createDataFrame(
-        java.util.Arrays.asList(entry.hotRows: _*), entry.dft.schema)
+        java.util.Arrays.asList(hotRows: _*), dft.schema)
         .as("graft_hot_terms")
       val tfHot = tf.join(broadcast(hot), "term")
       val tfCold = tf
         .join(broadcast(hot.select(col("term"))), Seq("term"), "left_anti")
-        .join(entry.dft, "term")
+        .join(dft, "term")
       tfHot.unionByName(tfCold)
     }
   }
@@ -579,7 +432,7 @@ object Retrieval {
     * (session, source plan, fraction), so same-corpus repeats pay it
     * once; when the census (or the caller) picks the hot route, the
     * vocabulary-sized df aggregate it persists is managed by a bounded
-    * LRU ([[clearDfCache]]) — no caller-side cache discipline needed.
+    * LRU ([[dfMemo]]) — no caller-side cache discipline needed.
     */
   def tfidfTopTerms(docs: DataFrame, id: String, text: String,
       m: Int, hotTerms: Int = -1,
@@ -607,7 +460,7 @@ object Retrieval {
     // skews — hence the route.
     // one listing per construction, shared by the census memo and the
     // df cache; computed only if either actually needs it
-    lazy val sig = contentSig(docs)
+    lazy val sig = graft.util.SourceSig.contentSig(docs)
     val resolved = resolveHot(hotTerms,
       censusDf(docs, text, censusFraction, sig), hotTaskBytes,
       docs.sparkSession)
@@ -1053,9 +906,12 @@ object Retrieval {
     val contentMode = contentFingerprint && listing.nonEmpty
     // version 3: segmented layout (seg_*/postings + seg_*/stats under a
     // _segments.json manifest) — bumped so v2 single-table indexes
-    // rebuild into the incrementally-maintainable one.
+    // rebuild into the incrementally-maintainable one. The id column's
+    // TYPE is config too: it is the postings `doc` type, so a changed
+    // type forces a full rebuild and a new postings-schema key.
     val config = graft.catalog.Catalog.configFingerprint(Map(
       "source" -> sourceTag, "id" -> id, "text" -> text,
+      "id_type" -> docs.schema(id).dataType.catalogString,
       "version" -> "3", "content_mode" -> contentMode.toString))
     val anyPrev = readSegmentManifest(spark, indexPath)
     val prev = anyPrev.filter(_.get("config").contains(config))
@@ -1327,7 +1183,7 @@ object Retrieval {
 
   /** Postings schema per (indexPath, config fingerprint) — only the
     * `doc` column's type varies (the source id column), and the config
-    * fingerprint pins it (a changed id column is a changed `columns`
+    * fingerprint pins it (a changed id column name or type is a changed
     * config ⇒ full rebuild ⇒ new fingerprint), so the schema is a
     * function of the key alone and the one footer-read job per index
     * pays once per application instead of once per QUERY (r18: q99/q100
@@ -1428,7 +1284,7 @@ object Retrieval {
     * (RetrievalSpec pins parity). Same construction-time contract as the
     * per-query form: the default census is an eager 1-row job, memoized
     * per (session, postings plan, fraction); a hot route's persisted df
-    * aggregate is LRU-managed ([[clearDfCache]]).
+    * aggregate is LRU-managed ([[dfMemo]]).
     */
   def tfidfFromIndex(spark: SparkSession, indexPath: String, m: Int,
       hotTerms: Int = -1, hotTaskBytes: Long = DefaultHotTaskBytes,
@@ -1446,7 +1302,7 @@ object Retrieval {
     // ⇒ bit-identical scores.
     val nDocs = statLong(statsRow.collect()(0), "n")
 
-    lazy val sig = contentSig(postings)
+    lazy val sig = graft.util.SourceSig.contentSig(postings)
     // Decidable census-skip (round 16): df ≤ N for every term, and the
     // index's stats rows already hold N — when even N postings rows fit
     // one task (N ≤ hotTaskBytes / PostingRowBytes, ~3.3M docs at the

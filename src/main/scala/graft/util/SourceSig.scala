@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 
 /** Shared content identity of a DataFrame's FILE-backed sources — the
   * invariant every plan-keyed memo in this codebase must enforce
-  * (`graft.text.Retrieval`'s df/census memos, `graft.dedup.Dedup`'s and
-  * `graft.similarity.Similarity`'s pair-stream memos, the postings-index
-  * manifest): Catalyst's `sameResult` compares file scans by RELATION
-  * identity (`InMemoryFileIndex` equality is rootPaths-based), so a
+  * ([[PlanMemo]], behind the dedup/similarity pair streams and the
+  * Retrieval df/census memos; the postings-index manifest): Catalyst's
+  * `sameResult` compares file scans by RELATION identity
+  * (`InMemoryFileIndex` equality is rootPaths-based), so a
   * re-read of the same path after an in-place append/overwrite
   * sameResult-matches a plan captured over DIFFERENT bytes — plan
   * identity is not data identity for file sources. A memo keyed on a
@@ -48,12 +48,8 @@ object SourceSig {
     * threshold 32 like Spark's) instead of a sequential driver loop: at
     * the 10⁵-directory design point a one-RPC-per-directory driver loop
     * is minutes of serial metadata latency, and the r17 memo contentSig
-    * put this listing on every cached-pair call.
-    * `SPARK_GRAFT_PARALLEL_LISTING_DIRS` overrides (scale knob, local
-    * default matches Spark's). */
-  def parallelListingDirs: Int =
-    sys.env.get("SPARK_GRAFT_PARALLEL_LISTING_DIRS").map(_.toInt)
-      .getOrElse(32)
+    * put this listing on every cached-pair call. */
+  val parallelListingDirs: Int = 32
 
   /** Number of distributed listing JOBS issued (accounting hook for the
     * parallel path, as [[listingCalls]] is for the RPCs). */

@@ -222,6 +222,38 @@ class BacktestSpec extends SparkSpecBase {
     assert(inRun.forall(_ == "g"), s"jobs outside group g: ${inRun.filter(_ != "g")}")
   }
 
+  test("a tick table rewritten in place is re-read, not served from cache") {
+    val base = java.nio.file.Files.createTempDirectory("backtest_rewrite").toString
+    // four days starting 20 days after syntheticTicks' six
+    val later = spark.range(0, 4 * 24 * 60, 1, 4)
+      .select(lit("EURUSD").as("symbol"),
+        (lit(1700000000000L + 20L * 86400000L) + col("id") * 60000L).as("ts_ms"),
+        (lit(90.0) + cos(col("id") / lit(30.0)) * 4.0).as("mid"))
+    def runOn(table: String, out: String): Seq[Seq[String]] = {
+      val ranked = Backtest.run(spark, spark.read.parquet(table),
+        s"$base/$out", new Scripted, cfg).collect()
+      def rows(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toString).sorted.toSeq
+      rows(ranked) +: Seq("availability", "quality").map(n =>
+        rows(spark.read.json(s"$base/$out/$n").collect()))
+    }
+    syntheticTicks.write.parquet(s"$base/ticks")
+    val first = runOn(s"$base/ticks", "first")
+    // rewrite the table the way another process would: a Spark write to
+    // the path itself would make this session re-cache plans over it
+    later.write.parquet(s"$base/staging")
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ticks"), true)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$base/staging"),
+      new org.apache.hadoop.fs.Path(s"$base/ticks"))
+    val rewritten = runOn(s"$base/ticks", "rewritten")
+    later.write.parquet(s"$base/fresh_ticks")
+    val fresh = runOn(s"$base/fresh_ticks", "fresh")
+    assert(fresh.head.nonEmpty && fresh != first)
+    assert(rewritten === fresh,
+      "a run over a rewritten tick table must equal a run over a fresh copy")
+  }
+
   test("phase 0 fails fast on invalid strategy parameters") {
     val out = java.nio.file.Files.createTempDirectory("backtest_bad").toString
     val e = intercept[IllegalArgumentException] {

@@ -13,7 +13,7 @@ class JaccardCacheSpec extends SparkSpecBase {
   private def docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
 
   test("cached pair stream: second call reuses the SAME persisted frame") {
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
     val a = Dedup.ngramJaccardCached(docs, "doc_id", "text", n = 3, threshold = 0.8)
     val b = Dedup.ngramJaccardCached(docs, "doc_id", "text", n = 3, threshold = 0.8)
     assert(a eq b)
@@ -23,20 +23,20 @@ class JaccardCacheSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cached = b.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cached === direct && cached.nonEmpty)
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
   }
 
   test("distinct parameters are distinct entries") {
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
     val t08 = Dedup.ngramJaccardCached(docs, "doc_id", "text", n = 3, threshold = 0.8)
     val t05 = Dedup.ngramJaccardCached(docs, "doc_id", "text", n = 3, threshold = 0.5)
     assert(!(t08 eq t05))
     assert(t08.count() <= t05.count()) // tighter threshold, fewer pairs
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
   }
 
   test("catalog.clearCache() between consumers: hit re-persists, stays exact") {
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
     val a = Dedup.ngramJaccardCached(docs, "doc_id", "text", n = 3, threshold = 0.8)
     val before = a.count()
     spark.catalog.clearCache() // the harness convention between queries
@@ -45,7 +45,7 @@ class JaccardCacheSpec extends SparkSpecBase {
     assert(b eq a) // entry survives; storage was what clearCache dropped
     assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK) // re-persisted
     assert(b.count() === before)
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
   }
 
   test("q27 then q91 pays the PPJoin stages ONCE (stage-count proof)") {
@@ -68,7 +68,7 @@ class JaccardCacheSpec extends SparkSpecBase {
     try {
       // cold: q91 with an empty pair cache submits the full PPJoin
       // candidate + verify + CC + keep stage graph
-      Dedup.clearJaccardCache(); spark.catalog.clearCache()
+      Dedup.jaccardMemo.clear(); spark.catalog.clearCache()
       val s0 = settled()
       val alone = defs("q91_canonical_keep").fn(spark, dir).collect()
       val cold = settled() - s0
@@ -76,7 +76,7 @@ class JaccardCacheSpec extends SparkSpecBase {
       // sink), then q91 — the memoized pair frame's cached partitions
       // truncate q91's lineage, so the PPJoin stages are never
       // SUBMITTED (DAGScheduler skips fully-cached parents)
-      Dedup.clearJaccardCache(); spark.catalog.clearCache()
+      Dedup.jaccardMemo.clear(); spark.catalog.clearCache()
       defs("q27_ngram_jaccard").fn(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val s1 = settled()
@@ -89,13 +89,13 @@ class JaccardCacheSpec extends SparkSpecBase {
         alone.map(_.toString).sorted.toSeq)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      Dedup.clearJaccardCache()
+      Dedup.jaccardMemo.clear()
     }
   }
 
   test("in-place corpus append invalidates the memoized pair stream") {
     import spark.implicits._
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
     val dir = java.nio.file.Files.createTempDirectory("graft_jacsig")
       .toString + "/docs.parquet"
     Seq(
@@ -128,7 +128,7 @@ class JaccardCacheSpec extends SparkSpecBase {
     val c = Dedup.ngramJaccardCached(spark.read.parquet(dir), "doc_id",
       "text", n = 3, threshold = 0.5)
     assert(c eq b, "unchanged re-read must still hit the memo")
-    Dedup.clearJaccardCache()
+    Dedup.jaccardMemo.clear()
     spark.catalog.clearCache()
   }
 }

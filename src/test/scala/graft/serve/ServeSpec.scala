@@ -46,6 +46,25 @@ class ServeSpec extends SparkSpecBase {
       Seq("run_b", "run_a", "run_c"))
   }
 
+  test("event stream CSV: every file has the header and is sorted by ts_ms") {
+    val dir = Files.createTempDirectory("serve_events").toString
+    // 60 events in descending time order over 3 partitions
+    val events = (0 until 60).map(i => (10000L - i * 7L, s"ev$i", i % 2 == 0))
+      .toDF("ts_ms", "event", "is_fill").repartition(3)
+    Serve.writeEventStreamCsv(events, s"$dir/events")
+    val files = new java.io.File(s"$dir/events").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(files.length > 1, "the event stream stays partitioned")
+    val lines = files.toSeq.map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
+    assert(lines.forall(_.head == "ts_ms,event,is_fill"))
+    val ts = lines.map(_.tail.map(_.split(',')(0).toLong))
+    assert(ts.forall(t => t == t.sorted), "rows must be in ts_ms order within a file")
+    assert(ts.flatten.sorted === (0 until 60).map(i => 10000L - i * 7L).sorted)
+  }
+
   test("report JSON store writes, lists, and reads back") {
     val dir = Files.createTempDirectory("serve_json").toString
     val report = Seq(("EUR", 10, 123.45), ("USD", 7, -1.5))

@@ -13,7 +13,7 @@ class PairCacheSpec extends SparkSpecBase {
   private def emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
 
   test("cached pair stream: second call reuses the SAME persisted frame") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val a = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.4)
     val b = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.4)
     // identity, not equality: a hit returns the memoized frame itself,
@@ -25,20 +25,20 @@ class PairCacheSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cached = b.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cached === direct && cached.nonEmpty)
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
   }
 
   test("cached pair stream: distinct parameters are distinct entries") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val t04 = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.4)
     val t09 = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.9)
     assert(!(t04 eq t09))
     assert(t09.count() < t04.count()) // tighter threshold, fewer pairs
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
   }
 
   test("catalog.clearCache() between consumers: hit re-persists, stays exact") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val a = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.4)
     val before = a.count()
     // the harness convention between registered queries
@@ -48,11 +48,11 @@ class PairCacheSpec extends SparkSpecBase {
     assert(b eq a) // entry survives; storage was what clearCache dropped
     assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK) // re-persisted
     assert(b.count() === before)
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
   }
 
   test("LRU cap: oldest entry evicted and unpersisted after 5th insert") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val first = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.40)
     first.count() // materialize the persisted storage
     Seq(0.5, 0.6, 0.7, 0.8).foreach { t =>
@@ -62,11 +62,11 @@ class PairCacheSpec extends SparkSpecBase {
     assert(first.storageLevel == StorageLevel.NONE)
     val again = Similarity.cosineNearDupPairsCached(emb, "vec_id", "embedding", 0.40)
     assert(!(again eq first)) // a fresh entry, not the evicted frame
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
   }
 
   test("q84 reuses q70's pairs in one session (the registry pipeline)") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val dir = "/root/testdata/sf0.001"
     val defs = graft.queries.VectorQueries.queries.toMap
     val pairs = defs("q70_embedding_neardup").fn(spark, dir)
@@ -84,7 +84,7 @@ class PairCacheSpec extends SparkSpecBase {
     linked.foreach { case (a, b) =>
       assert(cluster(a) === cluster(b), s"pair ($a,$b) split across clusters")
     }
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
   }
 
   test("q70 then q84 pays the candidate stages ONCE (stage-count proof)") {
@@ -107,7 +107,7 @@ class PairCacheSpec extends SparkSpecBase {
     try {
       // cold: q84 with an empty pair cache submits the full
       // candidate-generation + verify + clustering stage graph
-      Similarity.clearPairCache(); spark.catalog.clearCache()
+      Similarity.pairMemo.clear(); spark.catalog.clearCache()
       val s0 = settled()
       val alone = defs("q84_semantic_purge").fn(spark, dir).collect()
       val cold = settled() - s0
@@ -115,7 +115,7 @@ class PairCacheSpec extends SparkSpecBase {
       // sink), then q84 — the memoized pair frame's cached partitions
       // truncate q84's lineage, so its candidate stages are never
       // SUBMITTED (DAGScheduler skips fully-cached parents)
-      Similarity.clearPairCache(); spark.catalog.clearCache()
+      Similarity.pairMemo.clear(); spark.catalog.clearCache()
       defs("q70_embedding_neardup").fn(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val s1 = settled()
@@ -128,12 +128,12 @@ class PairCacheSpec extends SparkSpecBase {
         alone.map(_.toString).sorted.toSeq)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      Similarity.clearPairCache()
+      Similarity.pairMemo.clear()
     }
   }
 
   test("in-place table append invalidates the memoized pair stream") {
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     val dir = java.nio.file.Files.createTempDirectory("graft_pairsig")
       .toString + "/emb.parquet"
     def v(seed: Int): Array[Float] =
@@ -161,7 +161,7 @@ class PairCacheSpec extends SparkSpecBase {
     val c = Similarity.cosineNearDupPairsCached(spark.read.parquet(dir),
       "vec_id", "embedding", 0.9)
     assert(c eq b, "unchanged re-read must still hit the memo")
-    Similarity.clearPairCache()
+    Similarity.pairMemo.clear()
     spark.catalog.clearCache()
   }
 }

@@ -24,7 +24,7 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("hot-route df cache invalidates on in-place corpus change") {
-    Retrieval.clearDfCache()
+    Retrieval.dfMemo.clear()
     val dir = s"${tmpDir("graft_dfsig")}/docs.parquet"
     corpus.toDF("doc_id", "text").repartition(1)
       .write.mode("overwrite").parquet(dir)
@@ -54,12 +54,12 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
       .toSet
     assert(hot.exists(_._2 == "zzz"), "new terms must survive the df join")
     assert(hot === plain, "hot route must serve the FRESH corpus's df")
-    Retrieval.clearDfCache()
+    Retrieval.dfMemo.clear()
     spark.catalog.clearCache()
   }
 
   test("census memo invalidates on in-place corpus change, hits otherwise") {
-    Retrieval.clearCensusCache()
+    Retrieval.censusMemo.clear()
     val dir = s"${tmpDir("graft_censig")}/docs.parquet"
     corpus.toDF("doc_id", "text").repartition(1)
       .write.mode("overwrite").parquet(dir)
@@ -80,7 +80,7 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
       m = 1, censusFraction = 1.0)
     assert(Retrieval.censusRuns.get() === runs0 + 2,
       "in-place change must re-census")
-    Retrieval.clearCensusCache()
+    Retrieval.censusMemo.clear()
   }
 
   test("deferred sweep: readers of the previous generation survive one commit") {
@@ -333,12 +333,12 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
     assert(rows(out) ===
       rows(Retrieval.tfidfFromIndex(spark, idxDir, m = 2, hotTerms = 0)))
     // shrinking the task bound below N re-enables the census
-    Retrieval.clearCensusCache()
+    Retrieval.censusMemo.clear()
     Retrieval.tfidfFromIndex(spark, idxDir, m = 2, hotTaskBytes = 100L,
       censusFraction = 1.0)
     assert(Retrieval.censusRuns.get() === runs0 + 1,
       "above the bound the census must run as before")
-    Retrieval.clearCensusCache()
+    Retrieval.censusMemo.clear()
   }
 
   test("retention ledger: gen-0 reader survives keepGenerations commits") {
@@ -398,5 +398,25 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
     write(corpus.filterNot(_._1 <= 2L)); build(graceMs = 0L) // gen 3
     assert(!segDirExists("seg_00000"),
       "once past generations AND grace the dir is swept")
+  }
+
+  test("rebuild with a changed id type serves the new type, not a stale schema") {
+    val base = tmpDir("graft_idtype")
+    val corpusDir = s"$base/docs.parquet"
+    val idxDir = s"$base/idx"
+    def build(): Unit = Retrieval.buildPostingsIndex(
+      spark.read.parquet(corpusDir), "doc_id", "text", idxDir,
+      sourceTag = corpusDir)
+    def serve() = Retrieval.bm25FromIndex(spark, idxDir, Seq("apple"), k = 10)
+      .select("doc").collect().map(_.get(0)).toSet
+    corpus.toDF("doc_id", "text").repartition(1)
+      .write.mode("overwrite").parquet(corpusDir)
+    build()
+    assert(serve() === Set[Any](1L, 3L))
+    // same path, same column names, doc_id now a string
+    corpus.map { case (id, text) => (s"d$id", text) }.toDF("doc_id", "text")
+      .repartition(1).write.mode("overwrite").parquet(corpusDir)
+    build()
+    assert(serve() === Set[Any]("d1", "d3"))
   }
 }

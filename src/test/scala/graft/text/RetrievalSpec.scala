@@ -468,7 +468,7 @@ class RetrievalSpec extends SparkSpecBase {
   }
 
   test("census is memoized per (session, plan, fraction) — one job, not N") {
-    Retrieval.clearCensusCache()
+    Retrieval.censusMemo.clear()
     val df = corpus.toDF("doc_id", "text")
     val runs0 = Retrieval.censusRuns.get()
     val a = Retrieval.tfidfTopTerms(df, "doc_id", "text", m = 2,
@@ -492,12 +492,12 @@ class RetrievalSpec extends SparkSpecBase {
     Retrieval.tfidfTopTerms(df.filter(col("doc_id") =!= 5L), "doc_id",
       "text", m = 2, censusFraction = 1.0)
     assert(Retrieval.censusRuns.get() === afterFirst + 2)
-    Retrieval.clearCensusCache()
-    assert(Retrieval.censusCacheSize === 0)
+    Retrieval.censusMemo.clear()
+    assert(Retrieval.censusMemo.size === 0)
   }
 
   test("hot-route df cache is bounded and managed (no growth across calls)") {
-    Retrieval.clearDfCache()
+    Retrieval.dfMemo.clear()
     import spark.implicits._
     def persistedCount(): Int = spark.sparkContext.getPersistentRDDs.size
     // distinct corpora, each forced onto the hot route: entries must not
@@ -509,7 +509,7 @@ class RetrievalSpec extends SparkSpecBase {
       Retrieval.tfidfTopTerms(df, "doc_id", "text", m = 1, hotTerms = 1)
         .collect()
     }
-    assert(Retrieval.dfCacheSize <= 4, "LRU cap must bound the entries")
+    assert(Retrieval.dfMemo.size <= 4, "LRU cap must bound the entries")
     assert(persistedCount() - base <= 4,
       "evictions must unpersist the df aggregate")
     // repeat calls on ONE corpus: no new entries, no new storage, and the
@@ -517,12 +517,12 @@ class RetrievalSpec extends SparkSpecBase {
     val one = corpus.toDF("doc_id", "text")
     Retrieval.tfidfTopTerms(one, "doc_id", "text", m = 1, hotTerms = 1)
       .collect()
-    val sizeAfter = Retrieval.dfCacheSize
+    val sizeAfter = Retrieval.dfMemo.size
     val storeAfter = persistedCount()
     for (_ <- 1 to 3)
       Retrieval.tfidfTopTerms(one, "doc_id", "text", m = 1, hotTerms = 1)
         .collect()
-    assert(Retrieval.dfCacheSize === sizeAfter)
+    assert(Retrieval.dfMemo.size === sizeAfter)
     assert(persistedCount() === storeAfter)
     // clearCache empties storage but a later hit re-persists lazily and
     // still serves correct rows (the pair-cache convention)
@@ -533,8 +533,8 @@ class RetrievalSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(got === tfidfModel(2).toSet)
-    Retrieval.clearDfCache()
-    assert(Retrieval.dfCacheSize === 0)
+    Retrieval.dfMemo.clear()
+    assert(Retrieval.dfMemo.size === 0)
   }
 
   test("both operators are independent of input partitioning") {

@@ -14,7 +14,8 @@
 #
 # Prints the per-pair end-to-end metrics, then for each metric the
 # median and quartiles of both sides, and how many pairs the change
-# wins (lower is better, except ticks_per_s).
+# wins (lower is better, except ticks_per_s). Exits 1 after the table
+# when any run reports `correct: false` or `failed > 0`.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -118,5 +119,9 @@ for n in names:
           f"change median {cm:.4f} [Q1 {c1:.4f}, Q3 {c3:.4f}]; "
           f"change {100 * (cm - pm) / pm:+.1f}%, gap {abs(cm - pm):.4f}; "
           f"change better in {wins}/{len(seeds)} pairs")
-print(f"all runs correct: {all(r[x]['correct'] for r in runs.values() for x in r)}")
+docs = [r[x] for r in runs.values() for x in r]
+ok = all(d["correct"] and d["failed"] == 0 for d in docs)
+print(f"all runs correct: {all(d['correct'] for d in docs)}; "
+      f"failed operations: {sum(d['failed'] for d in docs)}")
+sys.exit(0 if ok else 1)
 EOF
