@@ -179,6 +179,19 @@ object Backtest {
     latencyMinMs = 20, latencyMaxMs = 120, latencySeed = 42L,
     barTimeframesMs = Seq(cfg.warmupBarMs))
 
+  /** Phases 0 and 3 shared by [[run]] and [[sweep]]: validate every
+    * (rsi, bb) parameter point fail-fast through the X6 worker surface
+    * and return the warmup margin in ms, the max lookback over the
+    * points, so each point sees at least its required history (ST4). */
+  private def warmupMs(cfg: Config,
+      points: Seq[(Map[String, String], Map[String, String])]): Long = {
+    val rsiW = Workers.registry("CORE/rsi")
+    val bbW = Workers.registry("CORE/bollinger")
+    points.map { case (rsi, bb) =>
+      math.max(rsiW.warmupBars(rsiW.validate(rsi)), bbW.warmupBars(bbW.validate(bb)))
+    }.max * cfg.warmupBarMs
+  }
+
   /** Collects `ranking`, then unpersists the call's kernel output and
     * mount, and returns the rows as a local frame with the same schema.
     * Spark matches cached file scans by root path, so a later call in
@@ -204,19 +217,11 @@ object Backtest {
           logic: DecisionLogic, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
 
-    // ---- Phase 0: fail-fast typed parameter validation (X6) ----------
-    val rsiW = Workers.registry("CORE/rsi")
-    val bbW = Workers.registry("CORE/bollinger")
-    val rsiCfg = rsiW.validate(cfg.rsiParams)
-    val bbCfg = bbW.validate(cfg.bbParams)
-
-    // ---- Phase 3: data requirements (ST4 warmup lookback) ------------
-    val warmupBars = math.max(
-      rsiW.warmupBars(rsiCfg), bbW.warmupBars(bbCfg))
-    val warmupMs = warmupBars * cfg.warmupBarMs
+    // ---- Phases 0 + 3: fail-fast validation (X6), warmup lookback ----
+    val warmup = warmupMs(cfg, Seq((cfg.rsiParams, cfg.bbParams)))
 
     // ---- Phases 1-6 (pre-kernel): the mount --------------------------
-    val mount = prepareMount(spark, ticks, cfg, warmupMs)
+    val mount = prepareMount(spark, ticks, cfg, warmup)
     val (simTicks, windows, quality, avail) =
       (mount.simTicks, mount.windows, mount.quality, mount.avail)
 
@@ -281,9 +286,9 @@ object Backtest {
     * through the SAME phase chain, preparing the mount ONCE (phases 0-5 +
     * window tagging are parameter-independent) and executing the whole
     * grid in ONE kernel pass ([[graft.sweep.Sweep.runSweepFused]] — one
-    * tick shuffle total, per-scenario in-memory replay per combination,
-    * vs. the naive one-full-pipeline-per-point which re-reads and
-    * re-shuffles the ticks G times).
+    * tick shuffle total, every combination stepping in lockstep over each
+    * streamed scenario, vs. the naive one-full-pipeline-per-point which
+    * re-reads and re-shuffles the ticks G times).
     *
     * Grid keys: `rsi_period`, `bb_period` (each a list of values —
     * validated fail-fast per combination through the X6 worker surface,
@@ -299,21 +304,15 @@ object Backtest {
   def sweep(spark: SparkSession, ticks: DataFrame, outDir: String,
             grid: Map[String, Seq[String]], lots: Double = 1.0,
             cfg: Config = Config()): DataFrame = {
-    val rsiW = Workers.registry("CORE/rsi")
-    val bbW = Workers.registry("CORE/bollinger")
-
     // ---- Phase 0 over the grid + phase 3 max-lookback ----------------
     val combos = graft.sweep.Sweep.expandGrid(grid)
     require(combos.nonEmpty, "sweep: empty parameter grid")
-    val warmupBars = combos.map { c =>
-      val rsiCfg = rsiW.validate(Map("period" -> c.params("rsi_period")))
-      val bbCfg = bbW.validate(Map("period" -> c.params("bb_period")))
-      math.max(rsiW.warmupBars(rsiCfg), bbW.warmupBars(bbCfg))
-    }.max
-    val warmupMs = warmupBars * cfg.warmupBarMs
+    val warmup = warmupMs(cfg, combos.map { c =>
+      (Map("period" -> c.params("rsi_period")), Map("period" -> c.params("bb_period")))
+    })
 
     // ---- Phases 1-6 once: the shared mount ---------------------------
-    val mount = prepareMount(spark, ticks, cfg, warmupMs)
+    val mount = prepareMount(spark, ticks, cfg, warmup)
 
     // ---- Phase 6 fused: whole grid, one tick shuffle -----------------
     val ledger = graft.sweep.Sweep.runSweepFused("backtest_sweep",

@@ -5,12 +5,15 @@ import org.apache.spark.sql.Dataset
 
 /** The per-scenario sequential simulation kernel (SURVEY §3.1 phase 6).
   *
-  * Distribution shape: `repartition(scenarioId)` +
-  * `sortWithinPartitions(scenarioId, timeMsc)` + one streaming pass per
-  * scenario — the Spark form of the reference's ProcessPool fork
-  * (`batch_orchestrator.py:550-574`), with scenarios as the unit of
-  * parallelism. State is O(open positions + pending orders + mid window)
-  * per scenario; tick history never accumulates.
+  * Distribution shape: ticks repartition by scenarioId and sort by
+  * (scenarioId, timeMsc) within each partition, then one streamed pass
+  * per scenario in which every variant (each point of a sweep; one for a
+  * plain run) steps through each tick in lockstep — the Spark form of
+  * the reference's ProcessPool fork (`batch_orchestrator.py:550-574`),
+  * with scenarios as the unit of parallelism. State is O(open positions
+  * + pending orders + mid window) per scenario and variant; tick history
+  * never accumulates. Variants must not share mutable [[DecisionLogic]]
+  * state, because their callbacks interleave.
   *
   * Per-tick order mirrors `process_tick_loop.py:200-316` and the
   * four-phase pending-order model of `trade_simulator.py:146-236`:
@@ -39,619 +42,594 @@ import org.apache.spark.sql.Dataset
   */
 object SimKernel {
 
+  /** [[runScenariosOutcomes]] that fails fast: a scenario's error outcome
+    * fails the job with its `"<SimpleName>: <message>"`. */
   def runScenarios(ticks: Dataset[SimTick], config: SimConfig,
                    logic: DecisionLogic): Dataset[ScenarioResult] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .repartition(org.apache.spark.sql.functions.col("scenarioId"))
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.col("scenarioId"),
-        org.apache.spark.sql.functions.col("timeMsc"))
-      .mapPartitions { it =>
-        new ScenarioRunner(config, logic).run(it)
-      }
+    runScenariosOutcomes(ticks, config, logic).map { o =>
+      o.result.getOrElse(throw new RuntimeException(o.error))
+    }
   }
 
-  /** Like [[runScenarios]] but executor-side failures (a strategy throwing
-    * mid-scenario, bad tick data) are captured PER SCENARIO instead of
-    * failing the whole job: the broken scenario's remaining ticks are
-    * drained to the scenario boundary and an error outcome is emitted, so
+  /** [[runScenariosMultiplexed]] with one variant: executor-side failures
+    * (a strategy throwing mid-scenario, bad tick data) are captured PER
+    * SCENARIO as an error outcome instead of failing the whole job, so
     * one bad scenario/combination can't lose a whole sweep ledger. */
   def runScenariosOutcomes(ticks: Dataset[SimTick], config: SimConfig,
                            logic: DecisionLogic): Dataset[ScenarioOutcome] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .repartition(org.apache.spark.sql.functions.col("scenarioId"))
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.col("scenarioId"),
-        org.apache.spark.sql.functions.col("timeMsc"))
-      .mapPartitions { it =>
-        new ScenarioRunner(config, logic).runSafe(it)
-      }
+    runScenariosMultiplexed(ticks, Seq(("", config, logic))).map(_._2)
   }
 
-  /** Sweep-fused kernel: run EVERY (variantId, config, logic) variant
-    * against the same tick stream in ONE pass. Ticks repartition + sort
-    * once; each scenario's rows buffer in executor memory and replay
-    * through all variants back-to-back — so a G-point parameter sweep
-    * pays one shuffle of the data instead of G (one
-    * [[runScenariosOutcomes]] job per variant would re-shuffle the ticks
-    * each time). At cluster scale the shuffle IS the sweep's data cost;
-    * the in-memory replays are CPU-only.
+  /** The kernel's one Spark pass: run EVERY (variantId, config, logic)
+    * variant against the same tick stream. Ticks repartition + sort once;
+    * each scenario's ticks stream through once, and every variant steps
+    * through each tick in lockstep — so a G-point parameter sweep pays
+    * one shuffle of the data instead of G, and holds G scenario states,
+    * never the scenario's ticks.
     *
-    * Results are BIT-IDENTICAL to running each variant alone: `runOne`
-    * is invoked with the ORIGINAL scenarioId (same latency seed, same
+    * Results are BIT-IDENTICAL to running each variant alone: every
+    * variant runs under the ORIGINAL scenarioId (same latency seed, same
     * stats/trade ids) and the variant id is returned alongside, not
-    * encoded into the scenario. Failure isolation matches
-    * [[runScenariosOutcomes]], per (scenario, variant).
+    * encoded into the scenario. Failure isolation is per (scenario,
+    * variant): a variant that throws yields an error outcome for that
+    * scenario and is stepped no further, while the others run on. Each
+    * scenario emits its G outcomes in variant order.
     *
-    * Memory contract: one scenario's ticks must fit on an executor
-    * (SimTick is 5 primitives + the id string; a 10M-tick scenario is
-    * ~0.5 GB). Scenario windows are block-bounded by the window
-    * generator, which is what bounds this buffer — the same contract as
-    * the reference's in-process per-scenario DataFrame. */
+    * Variants must not share mutable [[DecisionLogic]] state: their
+    * callbacks interleave tick by tick. */
   def runScenariosMultiplexed(ticks: Dataset[SimTick],
       variants: Seq[(String, SimConfig, DecisionLogic)])
       : Dataset[(String, ScenarioOutcome)] = {
     require(variants.nonEmpty, "runScenariosMultiplexed needs >= 1 variant")
     val spark = ticks.sparkSession
     import spark.implicits._
+    val vs = variants.toVector
     ticks
       .repartition(org.apache.spark.sql.functions.col("scenarioId"))
       .sortWithinPartitions(
         org.apache.spark.sql.functions.col("scenarioId"),
         org.apache.spark.sql.functions.col("timeMsc"))
       .mapPartitions { it =>
-        val runners = variants.map { case (vid, cfg, logic) =>
-          (vid, new ScenarioRunner(cfg, logic))
-        }
         val buf = it.buffered
-        new Iterator[Iterator[(String, ScenarioOutcome)]] {
+        new Iterator[Seq[(String, ScenarioOutcome)]] {
           override def hasNext: Boolean = buf.hasNext
-          override def next(): Iterator[(String, ScenarioOutcome)] = {
+          override def next(): Seq[(String, ScenarioOutcome)] = {
             val sid = buf.head.scenarioId
-            val arr = mutable.ArrayBuffer.empty[SimTick]
-            while (buf.hasNext && buf.head.scenarioId == sid) arr += buf.next()
-            runners.iterator.map { case (vid, r) =>
-              (vid, r.runBuffered(sid, arr))
-            }
+            runScenario(sid, vs, new Iterator[SimTick] {
+              override def hasNext: Boolean = buf.hasNext && buf.head.scenarioId == sid
+              override def next(): SimTick = buf.next()
+            })
           }
         }.flatten
       }
   }
 
-  /** Runs consecutive scenario groups off a sorted partition iterator. */
-  private final class ScenarioRunner(config: SimConfig, logic: DecisionLogic)
-      extends Serializable {
-
-    /** One scenario from an in-memory buffer, failures isolated like
-      * [[runSafe]] (no drain needed — the buffer bounds the scenario). */
-    def runBuffered(sid: String, ticks: collection.Seq[SimTick]): ScenarioOutcome =
-      try ScenarioOutcome(sid, "", Some(runOne(sid, ticks.iterator)))
-      catch {
+  /** Steps every variant through one scenario's ticks in lockstep. A
+    * variant that throws, at set-up, on a tick or at the close, keeps
+    * that error as its outcome and is stepped no further. */
+  private def runScenario(sid: String,
+      variants: Vector[(String, SimConfig, DecisionLogic)],
+      ticks: Iterator[SimTick]): Seq[(String, ScenarioOutcome)] = {
+    val sims = new Array[ScenarioSim](variants.length)
+    val results = new Array[ScenarioResult](variants.length)
+    val errors = Array.fill(variants.length)("")
+    def isolated(v: Int)(body: => Unit): Unit =
+      try body catch {
         case e: Exception =>
-          ScenarioOutcome(sid, s"${e.getClass.getSimpleName}: ${e.getMessage}", None)
+          errors(v) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+          sims(v) = null
       }
-
-    def run(it: Iterator[SimTick]): Iterator[ScenarioResult] = new Iterator[ScenarioResult] {
-      private val buf = it.buffered
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): ScenarioResult = {
-        val sid = buf.head.scenarioId
-        runOne(sid, new Iterator[SimTick] {
-          override def hasNext: Boolean = buf.hasNext && buf.head.scenarioId == sid
-          override def next(): SimTick = buf.next()
-        })
+    for (v <- variants.indices) isolated(v) {
+      val (_, config, logic) = variants(v)
+      sims(v) = new ScenarioSim(sid, config, logic)
+    }
+    while (ticks.hasNext) {
+      val t = ticks.next()
+      var v = 0
+      while (v < sims.length) {
+        if (sims(v) != null) isolated(v)(sims(v).step(t))
+        v += 1
       }
     }
+    variants.indices.map { v =>
+      if (sims(v) != null) isolated(v)(results(v) = sims(v).finish())
+      (variants(v)._1, ScenarioOutcome(sid, errors(v), Option(results(v))))
+    }
+  }
 
-    /** [[run]] with per-scenario failure isolation: a throwing scenario
-      * drains to its boundary and yields an error outcome. */
-    def runSafe(it: Iterator[SimTick]): Iterator[ScenarioOutcome] = new Iterator[ScenarioOutcome] {
-      private val buf = it.buffered
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): ScenarioOutcome = {
-        val sid = buf.head.scenarioId
-        val sub = new Iterator[SimTick] {
-          override def hasNext: Boolean = buf.hasNext && buf.head.scenarioId == sid
-          override def next(): SimTick = buf.next()
-        }
-        try ScenarioOutcome(sid, "", Some(runOne(sid, sub)))
-        catch {
-          case e: Exception =>
-            while (sub.hasNext) sub.next() // realign to the scenario boundary
-            ScenarioOutcome(sid, s"${e.getClass.getSimpleName}: ${e.getMessage}", None)
-        }
-      }
+  /** One working order, through its whole lifecycle (trade_simulator.py
+    * `_process_pending_orders` four-phase model):
+    * submitted (latency, !active) → active (price-monitored) → filled or
+    * cancelled. kind: 0=market 1=limit 2=stop 3=stop_limit.
+    * op: 0=none 1=modify 2=cancel (#318 — one in-flight op at a time,
+    * applied at the first pass with time >= applyAtMsc). */
+  private final class Working(
+      val id: Long, var kind: Int, val direction: Direction, val lots: Double,
+      var price: Double,      // limit price (kind 1) / stop trigger (2, 3)
+      var limitPrice: Double, // kind 3: limit placed after the stop triggers
+      var sl: Double, var tp: Double,
+      var deadlineMsc: Long, var active: Boolean,
+      var op: Int = 0, var applyAtMsc: Long = 0L,
+      var modPrice: Double = 0, var modLimit: Double = 0,
+      var modSl: Double = 0, var modTp: Double = 0,
+      var fromStopLimit: Boolean = false)
+
+  /** One scenario of one variant as a state machine: [[step]] feeds it the
+    * scenario's ticks in time order, [[finish]] force-closes what is still
+    * open and returns the result. Its state is O(open positions + pending
+    * orders + mid window); tick history never accumulates. */
+  private final class ScenarioSim(sid: String, config: SimConfig,
+                                  logic: DecisionLogic) {
+    private val spec = config.spec
+    private val pointFactor = math.pow(10, spec.digits)
+    private val delay = new SeededDelay(
+      config.latencySeed ^ sid.hashCode.toLong, config.latencyMinMs, config.latencyMaxMs)
+
+    private val open = mutable.ArrayBuffer.empty[OpenPosition]
+    private val working = mutable.ArrayBuffer.empty[Working]
+    private val trades = mutable.ArrayBuffer.empty[TradeRecord]
+    private val mids = new RingBuffer(config.midWindow)
+    // ST2: per-timeframe forming bar; closes fire exactly once, in
+    // timeframe order, on the first tick of a later bucket (the kernel
+    // is the single authority for closes — bar_renderer.py:114-233)
+    private val tfs = config.barTimeframesMs.sorted.toArray
+    private val forming = new Array[KernelBar](tfs.length)
+    // closes ACCUMULATE across clipped passes and drain when the algo
+    // path next runs, so no close event is ever lost (ST2 —
+    // market_data_types.py:113-133)
+    private val pendingCloses = mutable.ArrayBuffer.empty[KernelBar]
+
+    private var nextPositionId = 1L
+    private var vclock = 0.0
+    // ST5 guard: pre-v1.3.0 captures carry no collection timestamps
+    // (collected_msc backfilled to 0); the reference detects this on the
+    // first tick and disables budget filtering entirely rather than
+    // clipping everything after tick 1 (_apply_tick_budget,
+    // shared_data_preparator.py — collected_msc==0 → no filtering).
+    private var clipEnabled = config.tickBudgetMs > 0
+    private var ticksTotal = 0L
+    private var ticksClipped = 0L
+    private var nRejected = 0L
+    private var balance = config.startBalance
+    private var maxEquity = config.startBalance
+    private var maxDrawdown = 0.0
+    private var lastTick: SimTick = null
+
+    private def grossPnl(direction: Direction, entry: Double, exit: Double, lots: Double): Double =
+      (exit - entry) * direction.sign * pointFactor * spec.tickValue * lots
+
+    private def record(p: OpenPosition, closeLots: Double, exitPrice: Double,
+                     exitMsc: Long, reason: String, swapPart: Double,
+                     closeType: String): Unit = {
+      val gross = grossPnl(p.direction, p.entryPrice, exitPrice, closeLots)
+      val commission = config.commissionPerLot * closeLots
+      val net = gross - commission - swapPart
+      val risk =
+        if (p.slPrice > 0)
+          math.abs(p.entryPrice - p.slPrice) * pointFactor * spec.tickValue * closeLots
+        else 0.0
+      trades += TradeRecord(sid, p.positionId,
+        if (p.direction == Long_) "LONG" else "SHORT", closeLots,
+        p.entryTimeMsc, p.entryPrice, exitMsc, exitPrice, gross, commission,
+        net, p.maePnl, p.mfePnl, p.maePrice, p.mfePrice, risk,
+        if (risk > 0) Some(net / risk) else None, reason, swapPart, closeType)
+      balance += net
     }
 
-    /** One working order, through its whole lifecycle (trade_simulator.py
-      * `_process_pending_orders` four-phase model):
-      * submitted (latency, !active) → active (price-monitored) → filled or
-      * cancelled. kind: 0=market 1=limit 2=stop 3=stop_limit.
-      * op: 0=none 1=modify 2=cancel (#318 — one in-flight op at a time,
-      * applied at the first pass with time >= applyAtMsc). */
-    private final class Working(
-        val id: Long, var kind: Int, val direction: Direction, val lots: Double,
-        var price: Double,      // limit price (kind 1) / stop trigger (2, 3)
-        var limitPrice: Double, // kind 3: limit placed after the stop triggers
-        var sl: Double, var tp: Double,
-        var deadlineMsc: Long, var active: Boolean,
-        var op: Int = 0, var applyAtMsc: Long = 0L,
-        var modPrice: Double = 0, var modLimit: Double = 0,
-        var modSl: Double = 0, var modTp: Double = 0,
-        var fromStopLimit: Boolean = false)
+    private def closePosition(p: OpenPosition, exitPrice: Double, exitMsc: Long,
+                            reason: String): Unit =
+      record(p, p.lots, exitPrice, exitMsc, reason, p.swapCost, "full")
 
-    private def runOne(sid: String, ticks: Iterator[SimTick]): ScenarioResult = {
-      val spec = config.spec
-      val pointFactor = math.pow(10, spec.digits)
-      val delay = new SeededDelay(
-        config.latencySeed ^ sid.hashCode.toLong, config.latencyMinMs, config.latencyMaxMs)
+    /** Partial close (`portfolio_manager.partial_close_position`):
+      * realize P&L on the closed lots at the current price, split accrued
+      * fees by close ratio, keep the remainder open. MAE/MFE stay the
+      * position's running values (unscaled, per the reference). */
+    private def partialClose(idx: Int, closeLots: Double, exitPrice: Double,
+                           exitMsc: Long): Unit = {
+      val p = open(idx)
+      val ratio = closeLots / p.lots
+      val swapPart = p.swapCost * ratio
+      record(p, closeLots, exitPrice, exitMsc, "partial_close", swapPart, "partial")
+      open(idx) = p.copy(lots = p.lots - closeLots, swapCost = p.swapCost - swapPart)
+    }
 
-      val open = mutable.ArrayBuffer.empty[OpenPosition]
-      val working = mutable.ArrayBuffer.empty[Working]
-      val trades = mutable.ArrayBuffer.empty[TradeRecord]
-      val mids = new RingBuffer(config.midWindow)
-      // ST2: per-timeframe forming bar; closes fire exactly once, in
-      // timeframe order, on the first tick of a later bucket (the kernel
-      // is the single authority for closes — bar_renderer.py:114-233)
-      val tfs = config.barTimeframesMs.sorted.toArray
-      val forming = new Array[KernelBar](tfs.length)
-      // closes ACCUMULATE across clipped passes and drain when the algo
-      // path next runs, so no close event is ever lost (ST2 —
-      // market_data_types.py:113-133)
-      val pendingCloses = mutable.ArrayBuffer.empty[KernelBar]
+    private def openAt(positionId: Long, direction: Direction, lots: Double,
+                     price: Double, sl: Double, tp: Double, msc: Long): Unit =
+      open += OpenPosition(positionId, direction, lots, msc, price, sl, tp,
+        maePnl = 0.0, mfePnl = 0.0, maePrice = price, mfePrice = price,
+        swapCost = 0.0, swapAccruedUntilMsc = msc)
 
-      var nextPositionId = 1L
-      var vclock = 0.0
-      // ST5 guard: pre-v1.3.0 captures carry no collection timestamps
-      // (collected_msc backfilled to 0); the reference detects this on the
-      // first tick and disables budget filtering entirely rather than
-      // clipping everything after tick 1 (_apply_tick_budget,
-      // shared_data_preparator.py — collected_msc==0 → no filtering).
-      var clipEnabled = config.tickBudgetMs > 0
-      var ticksTotal = 0L
-      var ticksClipped = 0L
-      var nRejected = 0L
-      var balance = config.startBalance
-      var maxEquity = config.startBalance
-      var maxDrawdown = 0.0
-      var lastTick: SimTick = null
-
-      def grossPnl(direction: Direction, entry: Double, exit: Double, lots: Double): Double =
-        (exit - entry) * direction.sign * pointFactor * spec.tickValue * lots
-
-      def record(p: OpenPosition, closeLots: Double, exitPrice: Double,
-                 exitMsc: Long, reason: String, swapPart: Double,
-                 closeType: String): Unit = {
-        val gross = grossPnl(p.direction, p.entryPrice, exitPrice, closeLots)
-        val commission = config.commissionPerLot * closeLots
-        val net = gross - commission - swapPart
-        val risk =
-          if (p.slPrice > 0)
-            math.abs(p.entryPrice - p.slPrice) * pointFactor * spec.tickValue * closeLots
-          else 0.0
-        trades += TradeRecord(sid, p.positionId,
-          if (p.direction == Long_) "LONG" else "SHORT", closeLots,
-          p.entryTimeMsc, p.entryPrice, exitMsc, exitPrice, gross, commission,
-          net, p.maePnl, p.mfePnl, p.maePrice, p.mfePrice, risk,
-          if (risk > 0) Some(net / risk) else None, reason, swapPart, closeType)
-        balance += net
-      }
-
-      def closePosition(p: OpenPosition, exitPrice: Double, exitMsc: Long,
-                        reason: String): Unit =
-        record(p, p.lots, exitPrice, exitMsc, reason, p.swapCost, "full")
-
-      /** Partial close (`portfolio_manager.partial_close_position`):
-        * realize P&L on the closed lots at the current price, split accrued
-        * fees by close ratio, keep the remainder open. MAE/MFE stay the
-        * position's running values (unscaled, per the reference). */
-      def partialClose(idx: Int, closeLots: Double, exitPrice: Double,
-                       exitMsc: Long): Unit = {
-        val p = open(idx)
-        val ratio = closeLots / p.lots
-        val swapPart = p.swapCost * ratio
-        record(p, closeLots, exitPrice, exitMsc, "partial_close", swapPart, "partial")
-        open(idx) = p.copy(lots = p.lots - closeLots, swapCost = p.swapCost - swapPart)
-      }
-
-      def openAt(positionId: Long, direction: Direction, lots: Double,
-                 price: Double, sl: Double, tp: Double, msc: Long): Unit =
-        open += OpenPosition(positionId, direction, lots, msc, price, sl, tp,
-          maePnl = 0.0, mfePnl = 0.0, maePrice = price, mfePrice = price,
-          swapCost = 0.0, swapAccruedUntilMsc = msc)
-
-      // ---- swap accrual (#365, points mode) ----
-      val DayMs = 86400000L
-      val rollMs = config.swapRolloverUtcHour * 3600000L
-      def accrueSwaps(nowMsc: Long): Unit = if (config.swapEnabled) {
-        var i = 0
-        while (i < open.length) {
-          val p = open(i)
-          if (nowMsc > p.swapAccruedUntilMsc) {
-            val rate = if (p.direction == Long_) config.swapLongPoints
-                       else config.swapShortPoints
-            var cost = 0.0
-            // first daily rollover instant strictly after the accrued bound
-            var inst = (Math.floorDiv(p.swapAccruedUntilMsc - rollMs, DayMs) + 1) *
-              DayMs + rollMs
-            while (inst <= nowMsc) {
-              // epoch day 0 = Thursday → +3 maps to 0=Mon … 6=Sun
-              val dow = Math.floorMod(Math.floorDiv(inst, DayMs) + 3, 7)
-              if (dow <= 4) { // weekend nights book on the triple weekday
-                val mult = if (dow == config.swapTripleWeekday) 3 else 1
-                cost -= rate * mult * spec.tickValue * p.lots
-              }
-              inst += DayMs
+    // ---- swap accrual (#365, points mode) ----
+    private val DayMs = 86400000L
+    private val rollMs = config.swapRolloverUtcHour * 3600000L
+    private def accrueSwaps(nowMsc: Long): Unit = if (config.swapEnabled) {
+      var i = 0
+      while (i < open.length) {
+        val p = open(i)
+        if (nowMsc > p.swapAccruedUntilMsc) {
+          val rate = if (p.direction == Long_) config.swapLongPoints
+                     else config.swapShortPoints
+          var cost = 0.0
+          // first daily rollover instant strictly after the accrued bound
+          var inst = (Math.floorDiv(p.swapAccruedUntilMsc - rollMs, DayMs) + 1) *
+            DayMs + rollMs
+          while (inst <= nowMsc) {
+            // epoch day 0 = Thursday → +3 maps to 0=Mon … 6=Sun
+            val dow = Math.floorMod(Math.floorDiv(inst, DayMs) + 3, 7)
+            if (dow <= 4) { // weekend nights book on the triple weekday
+              val mult = if (dow == config.swapTripleWeekday) 3 else 1
+              cost -= rate * mult * spec.tickValue * p.lots
             }
-            open(i) = p.copy(swapCost = p.swapCost + cost,
-              swapAccruedUntilMsc = nowMsc)
+            inst += DayMs
           }
-          i += 1
+          open(i) = p.copy(swapCost = p.swapCost + cost,
+            swapAccruedUntilMsc = nowMsc)
         }
+        i += 1
+      }
+    }
+
+    // ---- margin (quote-margin mode; leverage 0 = disabled) ----
+    private def marginUsed: Double =
+      if (config.leverage <= 0) 0.0
+      else {
+        var m = 0.0; var i = 0
+        while (i < open.length) {
+          m += open(i).lots * config.contractSize / config.leverage; i += 1
+        }
+        m
+      }
+    private def unrealizedAt(bid: Double, ask: Double): Double = {
+      var u = 0.0; var i = 0
+      while (i < open.length) {
+        val p = open(i)
+        val cur = if (p.direction == Long_) bid else ask
+        u += grossPnl(p.direction, p.entryPrice, cur, p.lots) - p.swapCost
+        i += 1
+      }
+      u
+    }
+    private def marginOk(lots: Double, bid: Double, ask: Double): Boolean =
+      config.leverage <= 0 || {
+        val required = lots * config.contractSize / config.leverage
+        balance + unrealizedAt(bid, ask) - marginUsed >= required
       }
 
-      // ---- margin (quote-margin mode; leverage 0 = disabled) ----
-      def marginUsed: Double =
-        if (config.leverage <= 0) 0.0
+    /** SL/TP validation vs the reference price (fill price approximation)
+      * — `_validate_limit_order_sl_tp`: SL on the losing side, TP on the
+      * winning side, no SL/TP cross; 0 = level absent. */
+    private def validSlTp(dir: Direction, ref: Double, sl: Double, tp: Double): Boolean = {
+      val slOk = sl <= 0 || (if (dir == Long_) sl < ref else sl > ref)
+      val tpOk = tp <= 0 || (if (dir == Long_) tp > ref else tp < ref)
+      val crossOk = sl <= 0 || tp <= 0 ||
+        (if (dir == Long_) sl < tp else sl > tp)
+      slOk && tpOk && crossOk
+    }
+
+    private def limitReached(w: Working, bid: Double, ask: Double): Boolean =
+      if (w.direction == Long_) ask <= w.price else bid >= w.price
+    private def stopReached(w: Working, bid: Double, ask: Double): Boolean =
+      if (w.direction == Long_) ask >= w.price else bid <= w.price
+
+    /** Fill a working open order — margin is RE-CHECKED at fill time
+      * (the reference's portfolio opens positions through the margin
+      * gate on fill, not only at submit): several orders that each
+      * passed marginOk at decision time may not all fit once earlier
+      * fills consumed free margin. A fill that no longer fits is
+      * rejected, mirroring the adapter's open-position rejection. */
+    private def fillOpen(w: Working, price: Double, msc: Long,
+                       bid: Double, ask: Double): Unit =
+      if (!marginOk(w.lots, bid, ask)) nRejected += 1
+      else openAt(w.id, w.direction, w.lots, price, w.sl, w.tp, msc)
+
+    /** STOP_LIMIT trigger → becomes a limit order at limitPrice; fills
+      * immediately if the limit is already reached. Returns true if
+      * filled (caller drops it from `working`). */
+    private def convertStopLimit(w: Working, bid: Double, ask: Double, msc: Long): Boolean = {
+      w.kind = 1; w.price = w.limitPrice; w.fromStopLimit = true
+      if (limitReached(w, bid, ask)) { fillOpen(w, w.price, msc, bid, ask); true }
+      else { w.active = true; false }
+    }
+
+    // Phase 0: apply scheduled modify/cancel ops whose delay elapsed.
+    private def resolveOps(nowMsc: Long): Unit = {
+      var i = 0
+      while (i < working.length) {
+        val w = working(i)
+        if (w.op == 2 && nowMsc >= w.applyAtMsc) working.remove(i)
         else {
-          var m = 0.0; var i = 0
-          while (i < open.length) {
-            m += open(i).lots * config.contractSize / config.leverage; i += 1
+          if (w.op == 1 && nowMsc >= w.applyAtMsc) {
+            w.price = w.modPrice
+            if (w.kind == 3) w.limitPrice = w.modLimit
+            w.sl = w.modSl; w.tp = w.modTp
+            w.op = 0
           }
-          m
-        }
-      def unrealizedAt(bid: Double, ask: Double): Double = {
-        var u = 0.0; var i = 0
-        while (i < open.length) {
-          val p = open(i)
-          val cur = if (p.direction == Long_) bid else ask
-          u += grossPnl(p.direction, p.entryPrice, cur, p.lots) - p.swapCost
           i += 1
         }
-        u
       }
-      def marginOk(lots: Double, bid: Double, ask: Double): Boolean =
-        config.leverage <= 0 || {
-          val required = lots * config.contractSize / config.leverage
-          balance + unrealizedAt(bid, ask) - marginUsed >= required
-        }
+    }
 
-      /** SL/TP validation vs the reference price (fill price approximation)
-        * — `_validate_limit_order_sl_tp`: SL on the losing side, TP on the
-        * winning side, no SL/TP cross; 0 = level absent. */
-      def validSlTp(dir: Direction, ref: Double, sl: Double, tp: Double): Boolean = {
-        val slOk = sl <= 0 || (if (dir == Long_) sl < ref else sl > ref)
-        val tpOk = tp <= 0 || (if (dir == Long_) tp > ref else tp < ref)
-        val crossOk = sl <= 0 || tp <= 0 ||
-          (if (dir == Long_) sl < tp else sl > tp)
-        slOk && tpOk && crossOk
-      }
-
-      def limitReached(w: Working, bid: Double, ask: Double): Boolean =
-        if (w.direction == Long_) ask <= w.price else bid >= w.price
-      def stopReached(w: Working, bid: Double, ask: Double): Boolean =
-        if (w.direction == Long_) ask >= w.price else bid <= w.price
-
-      /** Fill a working open order — margin is RE-CHECKED at fill time
-        * (the reference's portfolio opens positions through the margin
-        * gate on fill, not only at submit): several orders that each
-        * passed marginOk at decision time may not all fit once earlier
-        * fills consumed free margin. A fill that no longer fits is
-        * rejected, mirroring the adapter's open-position rejection. */
-      def fillOpen(w: Working, price: Double, msc: Long,
-                   bid: Double, ask: Double): Unit =
-        if (!marginOk(w.lots, bid, ask)) nRejected += 1
-        else openAt(w.id, w.direction, w.lots, price, w.sl, w.tp, msc)
-
-      /** STOP_LIMIT trigger → becomes a limit order at limitPrice; fills
-        * immediately if the limit is already reached. Returns true if
-        * filled (caller drops it from `working`). */
-      def convertStopLimit(w: Working, bid: Double, ask: Double, msc: Long): Boolean = {
-        w.kind = 1; w.price = w.limitPrice; w.fromStopLimit = true
-        if (limitReached(w, bid, ask)) { fillOpen(w, w.price, msc, bid, ask); true }
-        else { w.active = true; false }
-      }
-
-      // Phase 0: apply scheduled modify/cancel ops whose delay elapsed.
-      def resolveOps(nowMsc: Long): Unit = {
-        var i = 0
-        while (i < working.length) {
-          val w = working(i)
-          if (w.op == 2 && nowMsc >= w.applyAtMsc) working.remove(i)
-          else {
-            if (w.op == 1 && nowMsc >= w.applyAtMsc) {
-              w.price = w.modPrice
-              if (w.kind == 3) w.limitPrice = w.modLimit
-              w.sl = w.modSl; w.tp = w.modTp
-              w.op = 0
-            }
-            i += 1
-          }
-        }
-      }
-
-      // Phase 1: latency-queue drain (on data ticks AND ghost instants).
-      def drainLatency(bid: Double, ask: Double, nowMsc: Long): Unit = {
-        var i = 0
-        while (i < working.length) {
-          val w = working(i)
-          var removed = false
-          if (!w.active && nowMsc >= w.deadlineMsc) w.kind match {
-            case 0 =>
-              fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-              working.remove(i); removed = true
-            case 1 =>
-              if (limitReached(w, bid, ask)) {
-                fillOpen(w, w.price, nowMsc, bid, ask); working.remove(i); removed = true
-              } else w.active = true
-            case 2 =>
-              if (stopReached(w, bid, ask)) {
-                fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-                working.remove(i); removed = true
-              } else w.active = true
-            case _ =>
-              if (stopReached(w, bid, ask)) {
-                if (convertStopLimit(w, bid, ask, nowMsc)) {
-                  working.remove(i); removed = true
-                }
-              } else w.active = true
-          }
-          if (!removed) i += 1
-        }
-      }
-
-      // Phases 2+3: price monitoring of ACTIVE limit / stop orders.
-      def monitorActive(bid: Double, ask: Double, nowMsc: Long): Unit = {
-        var i = 0
-        while (i < working.length) {
-          val w = working(i)
-          var removed = false
-          if (w.active) w.kind match {
-            case 1 if limitReached(w, bid, ask) =>
+    // Phase 1: latency-queue drain (on data ticks AND ghost instants).
+    private def drainLatency(bid: Double, ask: Double, nowMsc: Long): Unit = {
+      var i = 0
+      while (i < working.length) {
+        val w = working(i)
+        var removed = false
+        if (!w.active && nowMsc >= w.deadlineMsc) w.kind match {
+          case 0 =>
+            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
+            working.remove(i); removed = true
+          case 1 =>
+            if (limitReached(w, bid, ask)) {
               fillOpen(w, w.price, nowMsc, bid, ask); working.remove(i); removed = true
-            case 2 if stopReached(w, bid, ask) =>
+            } else w.active = true
+          case 2 =>
+            if (stopReached(w, bid, ask)) {
               fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
               working.remove(i); removed = true
-            case 3 if stopReached(w, bid, ask) =>
+            } else w.active = true
+          case _ =>
+            if (stopReached(w, bid, ask)) {
               if (convertStopLimit(w, bid, ask, nowMsc)) {
                 working.remove(i); removed = true
               }
-            case _ => ()
-          }
-          if (!removed) i += 1
+            } else w.active = true
         }
+        if (!removed) i += 1
       }
+    }
 
-      /** Submit an open order: route through the latency queue when
-        * latency is configured, else run its phase-1 activation inline. */
-      def submit(w: Working, bid: Double, ask: Double, nowMsc: Long): Unit = {
-        if (w.deadlineMsc > nowMsc) { working += w; return }
-        w.kind match {
-          case 1 =>
-            if (limitReached(w, bid, ask)) fillOpen(w, w.price, nowMsc, bid, ask)
-            else { w.active = true; working += w }
-          case 2 =>
-            if (stopReached(w, bid, ask))
-              fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-            else { w.active = true; working += w }
-          case _ =>
-            if (stopReached(w, bid, ask)) {
-              if (!convertStopLimit(w, bid, ask, nowMsc)) working += w
-            } else { w.active = true; working += w }
-        }
-      }
-
-      def nextDeadline(nowMsc: Long): Long =
-        if (config.latencyMaxMs > 0) nowMsc + delay.next() else nowMsc
-
-      def execDecisions(ds: Seq[Decision], bid: Double, ask: Double,
-                        nowMsc: Long): Unit = ds.foreach {
-        case OpenMarket(dir, lots, sl, tp) =>
-          if (!marginOk(lots, bid, ask)) nRejected += 1
-          else {
-            val pid = nextPositionId; nextPositionId += 1
-            val deadline = nextDeadline(nowMsc)
-            if (deadline <= nowMsc)
-              openAt(pid, dir, lots, if (dir == Long_) ask else bid, sl, tp, nowMsc)
-            else working += new Working(pid, 0, dir, lots, 0, 0, sl, tp,
-              deadline, active = false)
-          }
-        case OpenLimit(dir, lots, limit, sl, tp) =>
-          if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-          else {
-            val pid = nextPositionId; nextPositionId += 1
-            submit(new Working(pid, 1, dir, lots, limit, 0, sl, tp,
-              nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-          }
-        case OpenStop(dir, lots, stop, sl, tp) =>
-          // STOP fills at market once triggered — SL/TP validate against
-          // the stop price (best fill approximation)
-          if (!validSlTp(dir, stop, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-          else {
-            val pid = nextPositionId; nextPositionId += 1
-            submit(new Working(pid, 2, dir, lots, stop, 0, sl, tp,
-              nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-          }
-        case OpenStopLimit(dir, lots, stop, limit, sl, tp) =>
-          // STOP_LIMIT fills at the limit — SL/TP validate against it
-          if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-          else {
-            val pid = nextPositionId; nextPositionId += 1
-            submit(new Working(pid, 3, dir, lots, stop, limit, sl, tp,
-              nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-          }
-        case ModifyOrder(oid, np, nl, nsl, ntp) =>
-          val w = working.find(x => x.id == oid && x.active).orNull
-          if (w == null || w.op != 0) nRejected += 1 // not found or busy
-          else {
-            val effPrice = if (np.isNaN) w.price else np
-            val effLimit = if (nl.isNaN) w.limitPrice else nl
-            val effSl = if (nsl.isNaN) w.sl else nsl
-            val effTp = if (ntp.isNaN) w.tp else ntp
-            val ref = if (w.kind == 3) effLimit else effPrice
-            if (effPrice <= 0 || !validSlTp(w.direction, ref, effSl, effTp))
-              nRejected += 1 // immediate rejection; only application defers
-            else {
-              w.op = 1; w.applyAtMsc = nowMsc + config.modifyCancelDelayMs
-              w.modPrice = effPrice; w.modLimit = effLimit
-              w.modSl = effSl; w.modTp = effTp
+    // Phases 2+3: price monitoring of ACTIVE limit / stop orders.
+    private def monitorActive(bid: Double, ask: Double, nowMsc: Long): Unit = {
+      var i = 0
+      while (i < working.length) {
+        val w = working(i)
+        var removed = false
+        if (w.active) w.kind match {
+          case 1 if limitReached(w, bid, ask) =>
+            fillOpen(w, w.price, nowMsc, bid, ask); working.remove(i); removed = true
+          case 2 if stopReached(w, bid, ask) =>
+            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
+            working.remove(i); removed = true
+          case 3 if stopReached(w, bid, ask) =>
+            if (convertStopLimit(w, bid, ask, nowMsc)) {
+              working.remove(i); removed = true
             }
-          }
-        case CancelOrder(oid) =>
-          val w = working.find(x => x.id == oid && x.active).orNull
-          if (w == null || w.op != 0) nRejected += 1
-          else { w.op = 2; w.applyAtMsc = nowMsc + config.modifyCancelDelayMs }
-        case PartialClose(pid, lots) =>
-          val idx = open.indexWhere(_.positionId == pid)
-          if (idx >= 0) {
-            val p = open(idx)
-            val price = if (p.direction == Long_) bid else ask
-            if (lots >= p.lots) {
-              closePosition(p, price, nowMsc, "decision_close"); open.remove(idx)
-            } else partialClose(idx, lots, price, nowMsc)
-          }
-        case ClosePosition(pid) =>
-          val idx = open.indexWhere(_.positionId == pid)
-          if (idx >= 0) {
-            val p = open(idx)
-            val price = if (p.direction == Long_) bid else ask
-            closePosition(p, price, nowMsc, "decision_close")
-            open.remove(idx)
-          }
-        case Hold => ()
+          case _ => ()
+        }
+        if (!removed) i += 1
       }
+    }
 
-      def orderViews: Seq[PendingOrderView] = working.map { w =>
-        PendingOrderView(w.id,
-          w.kind match {
-            case 0 => "market"
-            case 1 => if (w.fromStopLimit) "stop_limit" else "limit"
-            case 2 => "stop"
-            case _ => "stop_limit"
-          },
-          w.direction, w.lots, w.price, w.limitPrice, w.sl, w.tp,
-          busy = w.op != 0 || !w.active)
-      }.toSeq
+    /** Submit an open order: route through the latency queue when
+      * latency is configured, else run its phase-1 activation inline. */
+    private def submit(w: Working, bid: Double, ask: Double, nowMsc: Long): Unit = {
+      if (w.deadlineMsc > nowMsc) { working += w; return }
+      w.kind match {
+        case 1 =>
+          if (limitReached(w, bid, ask)) fillOpen(w, w.price, nowMsc, bid, ask)
+          else { w.active = true; working += w }
+        case 2 =>
+          if (stopReached(w, bid, ask))
+            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
+          else { w.active = true; working += w }
+        case _ =>
+          if (stopReached(w, bid, ask)) {
+            if (!convertStopLimit(w, bid, ask, nowMsc)) working += w
+          } else { w.active = true; working += w }
+      }
+    }
 
-      def buildCtx(t: SimTick, equity: Double): DecisionContext =
-        new DecisionContext(t, ticksTotal - 1, open.toSeq, mids.snapshot,
-          pendingCloses.toSeq,
-          tfs.indices.iterator.filter(forming(_) != null)
-            .map(i => tfs(i) -> forming(i)).toMap,
-          orderViews,
-          AccountInfo(balance, equity, marginUsed, equity - marginUsed))
+    private def nextDeadline(nowMsc: Long): Long =
+      if (config.latencyMaxMs > 0) nowMsc + delay.next() else nowMsc
 
-      while (ticks.hasNext) {
-        val t = ticks.next()
-
-        // ---- (0a) heartbeat ghost-passes inside the gap (ST6, #360) ----
-        // Fires every heartbeatIntervalMs strictly inside (prev, t) for
-        // opt-in strategies; resolves scheduled ops + the latency queue at
-        // the ghost instant with LAST-KNOWN prices. No bar render, no tick
-        // counters. Gated off across gaps > threshold (#208: the market
-        // said nothing — don't fabricate activity).
-        if (lastTick != null && config.heartbeatIntervalMs > 0 &&
-            logic.wantsHeartbeat) {
-          val gap = t.timeMsc - lastTick.timeMsc
-          if (gap > config.heartbeatIntervalMs &&
-              gap <= config.interTickGapThresholdMs) {
-            var gm = lastTick.timeMsc + config.heartbeatIntervalMs
-            while (gm < t.timeMsc) {
-              resolveOps(gm)
-              drainLatency(lastTick.bid, lastTick.ask, gm)
-              accrueSwaps(gm) // #365: ghost resolutions accrue too
-              val eq = balance + unrealizedAt(lastTick.bid, lastTick.ask)
-              val hbCtx = buildCtx(lastTick, eq)
-              execDecisions(logic.onHeartbeat(gm, hbCtx),
-                lastTick.bid, lastTick.ask, gm)
-              hbCtx.invalidate()
-              gm += config.heartbeatIntervalMs
-            }
-          }
-        }
-
-        lastTick = t
-        ticksTotal += 1
-
-        // ---- (1) broker path: every tick ----
-        resolveOps(t.timeMsc)                       // Phase 0 (#318)
-        drainLatency(t.bid, t.ask, t.timeMsc)       // Phase 1 (ST9/ST10)
-        monitorActive(t.bid, t.ask, t.timeMsc)      // Phases 2+3
-        accrueSwaps(t.timeMsc)                      // swap up to this tick
-        // position updates: unrealized P&L on bid (LONG) / ask (SHORT),
-        // excursion on the gross axis; then SL/TP monitoring
-        var i = 0
-        while (i < open.length) {
-          val p = open(i)
-          val cur = if (p.direction == Long_) t.bid else t.ask
-          val gross = grossPnl(p.direction, p.entryPrice, cur, p.lots)
-          var np = p
-          if (gross < p.maePnl) np = np.copy(maePnl = gross, maePrice = cur)
-          if (gross > p.mfePnl) np = np.copy(mfePnl = gross, mfePrice = cur)
-          open(i) = np
-          val slHit = np.slPrice > 0 &&
-            (if (np.direction == Long_) t.bid <= np.slPrice else t.ask >= np.slPrice)
-          val tpHit = np.tpPrice > 0 &&
-            (if (np.direction == Long_) t.bid >= np.tpPrice else t.ask <= np.tpPrice)
-          if (slHit) { closePosition(np, np.slPrice, t.timeMsc, "stop_loss"); open.remove(i) }
-          else if (tpHit) { closePosition(np, np.tpPrice, t.timeMsc, "take_profit"); open.remove(i) }
-          else i += 1
-        }
-
-        // equity / drawdown tracking (A20); unrealized is net of accrued swap
-        val equity = balance + unrealizedAt(t.bid, t.ask)
-        if (equity > maxEquity) maxEquity = equity
-        val dd = maxEquity - equity
-        if (dd > maxDrawdown) maxDrawdown = dd
-
-        val mid = (t.bid + t.ask) / 2
-        mids.add(mid)
-
-        // incremental bar rendering on every tick (clipped ticks feed
-        // bars too — clipping only gates the algo path)
-        var tfIdx = 0
-        while (tfIdx < tfs.length) {
-          val tf = tfs(tfIdx)
-          val bs = t.timeMsc - t.timeMsc % tf
-          val cur = forming(tfIdx)
-          if (cur == null)
-            forming(tfIdx) = KernelBar(tf, bs, mid, mid, mid, mid, 1L)
-          else if (cur.barStartMs == bs)
-            forming(tfIdx) = cur.copy(high = math.max(cur.high, mid),
-              low = math.min(cur.low, mid), close = mid,
-              tickCount = cur.tickCount + 1)
-          else {
-            pendingCloses += cur // gap buckets emit nothing (ST3)
-            forming(tfIdx) = KernelBar(tf, bs, mid, mid, mid, mid, 1L)
-          }
-          tfIdx += 1
-        }
-
-        // ---- (2) clipping gate (ST5) ----
-        if (ticksTotal == 1 && t.collectedMsc == 0L) clipEnabled = false
-        val clipped = clipEnabled && {
-          if (t.collectedMsc >= vclock) {
-            vclock = t.collectedMsc + config.tickBudgetMs; false
-          } else true
-        }
-        if (clipped) ticksClipped += 1
+    private def execDecisions(ds: Seq[Decision], bid: Double, ask: Double,
+                            nowMsc: Long): Unit = ds.foreach {
+      case OpenMarket(dir, lots, sl, tp) =>
+        if (!marginOk(lots, bid, ask)) nRejected += 1
         else {
-          // ---- (3) algo path: decision logic ----
-          // clear AFTER the callback: ctx.closedBars is a lazy view over
-          // pendingCloses and must see this tick's closes when read.
-          // Invalidate once the decisions executed so a retained context
-          // fails loudly instead of reading mutated buffers.
-          val ctx = buildCtx(t, equity)
-          execDecisions(logic.onTick(ctx), t.bid, t.ask, t.timeMsc)
-          ctx.invalidate()
-          pendingCloses.clear()
+          val pid = nextPositionId; nextPositionId += 1
+          val deadline = nextDeadline(nowMsc)
+          if (deadline <= nowMsc)
+            openAt(pid, dir, lots, if (dir == Long_) ask else bid, sl, tp, nowMsc)
+          else working += new Working(pid, 0, dir, lots, 0, 0, sl, tp,
+            deadline, active = false)
+        }
+      case OpenLimit(dir, lots, limit, sl, tp) =>
+        if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
+        else {
+          val pid = nextPositionId; nextPositionId += 1
+          submit(new Working(pid, 1, dir, lots, limit, 0, sl, tp,
+            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
+        }
+      case OpenStop(dir, lots, stop, sl, tp) =>
+        // STOP fills at market once triggered — SL/TP validate against
+        // the stop price (best fill approximation)
+        if (!validSlTp(dir, stop, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
+        else {
+          val pid = nextPositionId; nextPositionId += 1
+          submit(new Working(pid, 2, dir, lots, stop, 0, sl, tp,
+            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
+        }
+      case OpenStopLimit(dir, lots, stop, limit, sl, tp) =>
+        // STOP_LIMIT fills at the limit — SL/TP validate against it
+        if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
+        else {
+          val pid = nextPositionId; nextPositionId += 1
+          submit(new Working(pid, 3, dir, lots, stop, limit, sl, tp,
+            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
+        }
+      case ModifyOrder(oid, np, nl, nsl, ntp) =>
+        val w = working.find(x => x.id == oid && x.active).orNull
+        if (w == null || w.op != 0) nRejected += 1 // not found or busy
+        else {
+          val effPrice = if (np.isNaN) w.price else np
+          val effLimit = if (nl.isNaN) w.limitPrice else nl
+          val effSl = if (nsl.isNaN) w.sl else nsl
+          val effTp = if (ntp.isNaN) w.tp else ntp
+          val ref = if (w.kind == 3) effLimit else effPrice
+          if (effPrice <= 0 || !validSlTp(w.direction, ref, effSl, effTp))
+            nRejected += 1 // immediate rejection; only application defers
+          else {
+            w.op = 1; w.applyAtMsc = nowMsc + config.modifyCancelDelayMs
+            w.modPrice = effPrice; w.modLimit = effLimit
+            w.modSl = effSl; w.modTp = effTp
+          }
+        }
+      case CancelOrder(oid) =>
+        val w = working.find(x => x.id == oid && x.active).orNull
+        if (w == null || w.op != 0) nRejected += 1
+        else { w.op = 2; w.applyAtMsc = nowMsc + config.modifyCancelDelayMs }
+      case PartialClose(pid, lots) =>
+        val idx = open.indexWhere(_.positionId == pid)
+        if (idx >= 0) {
+          val p = open(idx)
+          val price = if (p.direction == Long_) bid else ask
+          if (lots >= p.lots) {
+            closePosition(p, price, nowMsc, "decision_close"); open.remove(idx)
+          } else partialClose(idx, lots, price, nowMsc)
+        }
+      case ClosePosition(pid) =>
+        val idx = open.indexWhere(_.positionId == pid)
+        if (idx >= 0) {
+          val p = open(idx)
+          val price = if (p.direction == Long_) bid else ask
+          closePosition(p, price, nowMsc, "decision_close")
+          open.remove(idx)
+        }
+      case Hold => ()
+    }
+
+    private def orderViews: Seq[PendingOrderView] = working.map { w =>
+      PendingOrderView(w.id,
+        w.kind match {
+          case 0 => "market"
+          case 1 => if (w.fromStopLimit) "stop_limit" else "limit"
+          case 2 => "stop"
+          case _ => "stop_limit"
+        },
+        w.direction, w.lots, w.price, w.limitPrice, w.sl, w.tp,
+        busy = w.op != 0 || !w.active)
+    }.toSeq
+
+    private def buildCtx(t: SimTick, equity: Double): DecisionContext =
+      new DecisionContext(t, ticksTotal - 1, open.toSeq, mids.snapshot,
+        pendingCloses.toSeq,
+        tfs.indices.iterator.filter(forming(_) != null)
+          .map(i => tfs(i) -> forming(i)).toMap,
+        orderViews,
+        AccountInfo(balance, equity, marginUsed, equity - marginUsed))
+
+    def step(t: SimTick): Unit = {
+      // ---- (0a) heartbeat ghost-passes inside the gap (ST6, #360) ----
+      // Fires every heartbeatIntervalMs strictly inside (prev, t) for
+      // opt-in strategies; resolves scheduled ops + the latency queue at
+      // the ghost instant with LAST-KNOWN prices. No bar render, no tick
+      // counters. Gated off across gaps > threshold (#208: the market
+      // said nothing — don't fabricate activity).
+      if (lastTick != null && config.heartbeatIntervalMs > 0 &&
+          logic.wantsHeartbeat) {
+        val gap = t.timeMsc - lastTick.timeMsc
+        if (gap > config.heartbeatIntervalMs &&
+            gap <= config.interTickGapThresholdMs) {
+          var gm = lastTick.timeMsc + config.heartbeatIntervalMs
+          while (gm < t.timeMsc) {
+            resolveOps(gm)
+            drainLatency(lastTick.bid, lastTick.ask, gm)
+            accrueSwaps(gm) // #365: ghost resolutions accrue too
+            val eq = balance + unrealizedAt(lastTick.bid, lastTick.ask)
+            val hbCtx = buildCtx(lastTick, eq)
+            execDecisions(logic.onHeartbeat(gm, hbCtx),
+              lastTick.bid, lastTick.ask, gm)
+            hbCtx.invalidate()
+            gm += config.heartbeatIntervalMs
+          }
         }
       }
 
+      lastTick = t
+      ticksTotal += 1
+
+      // ---- (1) broker path: every tick ----
+      resolveOps(t.timeMsc)                       // Phase 0 (#318)
+      drainLatency(t.bid, t.ask, t.timeMsc)       // Phase 1 (ST9/ST10)
+      monitorActive(t.bid, t.ask, t.timeMsc)      // Phases 2+3
+      accrueSwaps(t.timeMsc)                      // swap up to this tick
+      // position updates: unrealized P&L on bid (LONG) / ask (SHORT),
+      // excursion on the gross axis; then SL/TP monitoring
+      var i = 0
+      while (i < open.length) {
+        val p = open(i)
+        val cur = if (p.direction == Long_) t.bid else t.ask
+        val gross = grossPnl(p.direction, p.entryPrice, cur, p.lots)
+        var np = p
+        if (gross < p.maePnl) np = np.copy(maePnl = gross, maePrice = cur)
+        if (gross > p.mfePnl) np = np.copy(mfePnl = gross, mfePrice = cur)
+        open(i) = np
+        val slHit = np.slPrice > 0 &&
+          (if (np.direction == Long_) t.bid <= np.slPrice else t.ask >= np.slPrice)
+        val tpHit = np.tpPrice > 0 &&
+          (if (np.direction == Long_) t.bid >= np.tpPrice else t.ask <= np.tpPrice)
+        if (slHit) { closePosition(np, np.slPrice, t.timeMsc, "stop_loss"); open.remove(i) }
+        else if (tpHit) { closePosition(np, np.tpPrice, t.timeMsc, "take_profit"); open.remove(i) }
+        else i += 1
+      }
+
+      // equity / drawdown tracking (A20); unrealized is net of accrued swap
+      val equity = balance + unrealizedAt(t.bid, t.ask)
+      if (equity > maxEquity) maxEquity = equity
+      val dd = maxEquity - equity
+      if (dd > maxDrawdown) maxDrawdown = dd
+
+      val mid = (t.bid + t.ask) / 2
+      mids.add(mid)
+
+      // incremental bar rendering on every tick (clipped ticks feed
+      // bars too — clipping only gates the algo path)
+      var tfIdx = 0
+      while (tfIdx < tfs.length) {
+        val tf = tfs(tfIdx)
+        val bs = t.timeMsc - t.timeMsc % tf
+        val cur = forming(tfIdx)
+        if (cur == null)
+          forming(tfIdx) = KernelBar(tf, bs, mid, mid, mid, mid, 1L)
+        else if (cur.barStartMs == bs)
+          forming(tfIdx) = cur.copy(high = math.max(cur.high, mid),
+            low = math.min(cur.low, mid), close = mid,
+            tickCount = cur.tickCount + 1)
+        else {
+          pendingCloses += cur // gap buckets emit nothing (ST3)
+          forming(tfIdx) = KernelBar(tf, bs, mid, mid, mid, mid, 1L)
+        }
+        tfIdx += 1
+      }
+
+      // ---- (2) clipping gate (ST5) ----
+      if (ticksTotal == 1 && t.collectedMsc == 0L) clipEnabled = false
+      val clipped = clipEnabled && {
+        if (t.collectedMsc >= vclock) {
+          vclock = t.collectedMsc + config.tickBudgetMs; false
+        } else true
+      }
+      if (clipped) ticksClipped += 1
+      else {
+        // ---- (3) algo path: decision logic ----
+        // clear AFTER the callback: ctx.closedBars is a lazy view over
+        // pendingCloses and must see this tick's closes when read.
+        // Invalidate once the decisions executed so a retained context
+        // fails loudly instead of reading mutated buffers.
+        val ctx = buildCtx(t, equity)
+        execDecisions(logic.onTick(ctx), t.bid, t.ask, t.timeMsc)
+        ctx.invalidate()
+        pendingCloses.clear()
+      }
+    }
+
+    def finish(): ScenarioResult = {
       // ---- (4) end of scenario: force-close at last price ----
       if (lastTick != null) {
         open.foreach { p =>

@@ -10,8 +10,8 @@ import graft.sim._
   *   grid (`/root/reference/python/framework/optimization/grid_expander.py:16-28`):
   *   keys sorted, value order preserved, combination order reproducible.
   * - [[runSweepFused]] — load-once/run-many: the ticks shuffle ONCE and
-  *   every combination replays against the same buffered scenario — the
-  *   Spark form of the reference's mount-identity reuse
+  *   every combination steps in lockstep over the same streamed scenario
+  *   — the Spark form of the reference's mount-identity reuse
   *   (`batch_orchestrator.py:656-695`: data identity excludes strategy
   *   params, so the mount is shared across the whole sweep).
   *
@@ -44,11 +44,13 @@ object Sweep {
 
   /** Run every combination of the grid against the same tick data in
     * ONE repartition+sort pass ([[SimKernel.runScenariosMultiplexed]]):
-    * each scenario's rows buffer once and replay through every
-    * combination in memory, instead of one full shuffle of the tick data
-    * per combination. `build` maps a combination to (config, strategy) —
-    * the reference's dotted-path parameter override collapses to
-    * ordinary function application here.
+    * each scenario's rows stream through once and every combination
+    * steps through each tick in lockstep, instead of one full shuffle of
+    * the tick data per combination. `build` maps a combination to
+    * (config, strategy) — the reference's dotted-path parameter override
+    * collapses to ordinary function application here. Combinations must
+    * not share mutable [[DecisionLogic]] state: their callbacks
+    * interleave.
     *
     * Each ledger row is bit-identical to that combination's solo
     * [[SimKernel.runScenariosOutcomes]] run (spec'd): the kernel runs

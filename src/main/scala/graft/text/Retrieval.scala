@@ -832,8 +832,6 @@ object Retrieval {
     * correctness backstop. */
   private[text] val LockStaleMs: Long = graft.util.BuildLock.StaleMs
 
-  private[text] def lockBeatMs: Long = graft.util.BuildLock.beatMs
-
   private def withBuildLock[T](spark: SparkSession, indexPath: String)(
       body: => T): T =
     graft.util.BuildLock.withLock(spark, s"$indexPath/_build.lock")(body)

@@ -48,6 +48,15 @@ private class ForcesThenRetains extends DecisionLogic {
   }
 }
 
+/** Trades like [[Scripted]] but throws on tick `idx` of scenario `sid`. */
+private class FailsAt(sid: String, idx: Long) extends DecisionLogic {
+  private val inner = new Scripted(0, 3)
+  def onTick(ctx: DecisionContext): Seq[Decision] =
+    if (ctx.tick.scenarioId == sid && ctx.tickIndex == idx)
+      throw new IllegalStateException(s"scripted failure in $sid")
+    else inner.onTick(ctx)
+}
+
 class SimKernelSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -195,8 +204,8 @@ class SimKernelSpec extends SparkSpecBase {
   }
 
   test("runScenariosMultiplexed: each variant bit-identical to its solo run") {
-    // the sweep-fused contract: one shuffle, per-scenario in-memory
-    // replay per variant — and NOTHING about the results may change
+    // the sweep-fused contract: one shuffle, every variant in lockstep
+    // per streamed scenario — and NOTHING about the results may change
     // (same scenarioId → same latency seed → same fills and stats)
     val base = TickReplay.syntheticTicks(spark, scenarios = 4, totalTicks = 20000L)
     val variants: Seq[(String, SimConfig, DecisionLogic)] = Seq(
@@ -214,6 +223,43 @@ class SimKernelSpec extends SparkSpecBase {
       s"variant $vid diverges between fused and solo runs")
     // the two variants genuinely differ (the parity above isn't vacuous)
     assert(fused("v0") !== fused("v1"))
+  }
+
+  test("runScenariosMultiplexed: a variant failing mid-partition leaves the rest intact") {
+    // two scenarios share the kernel's one partition (pinned below: the
+    // kernel re-shuffles, so the input's layout can't place them);
+    // variant B throws on the 3rd tick of s1 while A steps on, then both
+    // run s2
+    val rows = (1 to 2).flatMap(s => (0 until 6).map(i =>
+      SimTick(s"s$s", 1000L * (i + 1), 1000L * (i + 1), 1.1 + s * 0.01 + i * 1e-4,
+        1.1001 + s * 0.01 + i * 1e-4)))
+    val base = rows.toDS()
+    val variants: Seq[(String, SimConfig, DecisionLogic)] = Seq(
+      ("A", cfg, new Scripted(1, 4)),
+      ("B", cfg, new FailsAt("s1", 2)))
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    val fused =
+      try SimKernel.runScenariosMultiplexed(base, variants).collect().toSeq
+      finally spark.conf.set(key, old)
+    def solo(v: Int) = SimKernel.runScenariosOutcomes(base, variants(v)._2,
+      variants(v)._3).collect().map(o => o.scenarioId -> o).toMap
+    def of(vid: String, sid: String) =
+      fused.collect { case (`vid`, o) if o.scenarioId == sid => o }
+    val (soloA, soloB) = (solo(0), solo(1))
+
+    val failed = of("B", "s1")
+    assert(failed.length === 1)
+    assert(failed.head.result.isEmpty)
+    assert(failed.head.error === "IllegalStateException: scripted failure in s1")
+    assert(of("A", "s1") === Seq(soloA("s1")))
+    assert(of("A", "s2") === Seq(soloA("s2")))
+    assert(of("B", "s2") === Seq(soloB("s2")))
+    assert(soloB("s2").result.exists(_.trades.nonEmpty))
+    // one partition: each scenario emits its outcomes in variant order
+    assert(fused.map { case (vid, o) => (vid, o.scenarioId) } ===
+      Seq(("A", "s1"), ("B", "s1"), ("A", "s2"), ("B", "s2")))
   }
 
   test("RsiBollingerTrend warms up past BOTH lookbacks (rsi > bb regression)") {

@@ -94,58 +94,17 @@ class StreamingBarsSpec extends SparkSpecBase {
     val q = bars.writeStream.outputMode("append")
       .format("memory").queryName("tws_bars").start()
     try {
-      val (first, second) = ticks.splitAt(250)
-      stream.addData(first)
-      q.processAllAvailable()
-      stream.addData(second)
-      q.processAllAvailable()
-      val got = spark.table("tws_bars").orderBy("barStartMs").collect().map(_.toSeq)
-      assert(got.length === 9)
-      assert(got.toSeq === batchBars.take(9).toSeq)
-    } finally q.stop()
-  }
-
-  test("transformWithState warm start seeds the forming bar from history (ST4)") {
-    implicit val sqlCtx = spark.sqlContext
-    val m0 = 1700000000000L - (1700000000000L % 60000L)
-    val warm = Seq(("BTCUSD",
-      IncrementalBars.OpenBar(m0, 100.0, 102.0, 99.0, 101.0, 5.0, 3L))).toDS()
-    val stream = MemoryStream[IncrementalBars.Tick]
-    val q = IncrementalBars.renderTicksWarm(stream.toDS(), 60000L, warm)
-      .writeStream.outputMode("append").format("memory").queryName("tws_warm").start()
-    try {
-      stream.addData(
-        IncrementalBars.Tick("BTCUSD", m0 + 30000L, 98.0, 1.0),
-        IncrementalBars.Tick("BTCUSD", m0 + 60000L, 103.0, 1.0))
-      q.processAllAvailable()
-      val got = spark.table("tws_warm").as[IncrementalBars.Bar].collect()
-      // minute-0 bar: open/high from history, low from the live tick,
-      // volume 5+1, count 3+1 — the live bar CONTINUED the historical one
-      assert(got.toSeq === Seq(IncrementalBars.Bar(
-        "BTCUSD", m0, 100.0, 102.0, 98.0, 98.0, 6.0, 4L)))
-    } finally q.stop()
-  }
-
-  test("incremental stateful renderer emits closed bars exactly once, in order") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[IncrementalBars.Tick]
-    val bars = IncrementalBars.renderTicks(stream.toDS(), 60000L)
-    val q = bars.writeStream.outputMode("append")
-      .format("memory").queryName("inc_bars").start()
-    try {
       // feed in two micro-batches to exercise cross-batch state
       val (first, second) = ticks.splitAt(250)
       stream.addData(first)
       q.processAllAvailable()
       stream.addData(second)
       q.processAllAvailable()
-      val got = spark.table("inc_bars").orderBy("barStartMs").collect().map(_.toSeq)
+      val got = spark.table("tws_bars").orderBy("barStartMs").collect().map(_.toSeq)
       // 600 ticks @1/s from a minute boundary = 10 complete bars; the 10th
       // minute's bar never closes (no tick in a later bucket) -> 9 closed
       assert(got.length === 9)
-      val batch = batchBars
-      // closed bars must equal the batch bars for the same buckets
-      assert(got.toSeq === batch.take(9).toSeq)
+      assert(got.toSeq === batchBars.take(9).toSeq)
     } finally q.stop()
   }
 }

@@ -59,7 +59,7 @@ class SweepSpec extends SparkSpecBase {
 
   test("runSweepFused: ledger bit-identical to the per-combo path") {
     // two scenarios x four combos: the fused kernel (one shuffle, all
-    // combos per buffered scenario) must reproduce each combination's
+    // combos in lockstep per streamed scenario) must reproduce each combination's
     // solo kernel run EXACTLY — same scenarioIds mean same latency seeds,
     // so every netPnl matches to the bit, not within a tolerance
     val ticks = (0 until 30).flatMap { i =>
