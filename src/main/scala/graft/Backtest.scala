@@ -74,19 +74,18 @@ object Backtest {
     * The trade start rides in the scenarioId (`sym#region#block@startMs`)
     * — per-scenario state without any driver-side map. */
   final class WarmupGate(inner: DecisionLogic) extends DecisionLogic {
-    override def onTick(ctx: DecisionContext): Seq[Decision] = {
+    private def gated(timeMsc: Long, ctx: DecisionContext)(
+        decide: => Seq[Decision]): Seq[Decision] = {
       val sid = ctx.tick.scenarioId
       val start = sid.substring(sid.lastIndexOf('@') + 1).toLong
-      if (ctx.tick.timeMsc < start) { inner.onTick(ctx); Seq(Hold) }
-      else inner.onTick(ctx)
+      val ds = decide
+      if (timeMsc < start) Seq(Hold) else ds
     }
+    override def onTick(ctx: DecisionContext): Seq[Decision] =
+      gated(ctx.tick.timeMsc, ctx)(inner.onTick(ctx))
     override def wantsHeartbeat: Boolean = inner.wantsHeartbeat
-    override def onHeartbeat(timeMsc: Long, ctx: DecisionContext): Seq[Decision] = {
-      val sid = ctx.tick.scenarioId
-      val start = sid.substring(sid.lastIndexOf('@') + 1).toLong
-      if (timeMsc < start) { inner.onHeartbeat(timeMsc, ctx); Seq(Hold) }
-      else inner.onHeartbeat(timeMsc, ctx)
-    }
+    override def onHeartbeat(timeMsc: Long, ctx: DecisionContext): Seq[Decision] =
+      gated(timeMsc, ctx)(inner.onHeartbeat(timeMsc, ctx))
   }
 
   case class Summary(
@@ -113,8 +112,7 @@ object Backtest {
     import spark.implicits._
 
     // ---- Phase 1: index & coverage -----------------------------------
-    val coverage = Catalog.coverage(ticks, Seq("symbol"), "ts_ms",
-      statCols = Seq("mid")).cache()
+    val coverage = Catalog.coverage(ticks, Seq("symbol"), "ts_ms").cache()
 
     // ---- Phase 2: availability (requested range = full covered span) -
     val span = coverage.agg(min(col("start_ms")), max(col("end_ms")))

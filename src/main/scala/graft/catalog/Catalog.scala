@@ -105,19 +105,7 @@ object Catalog {
     * indistinguishable from absent (the [[readManifest]] contract). */
   def readKvFile(spark: SparkSession, path: String): Option[Map[String, String]] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    try Some(parseFlatJson(json))
-    catch {
-      case e: Exception => throw new java.io.IOException(
-        s"malformed kv file at $p (${json.length} bytes): ${e.getMessage}", e)
-    }
+    readSmallFile(spark, p).map(parseKvAt(p, "kv file"))
   }
 
   /** Read back a [[writeWithManifest]] manifest as a flat KV map. Read
@@ -131,20 +119,31 @@ object Catalog {
     * not be indistinguishable from an absent one. */
   def readManifest(spark: SparkSession, path: String): Map[String, String] = {
     val p = new org.apache.hadoop.fs.Path(path, "_manifest.json")
+    readSmallFile(spark, p).map(parseKvAt(p, "manifest")).getOrElse(Map.empty)
+  }
+
+  /** The whole file at `p` (any Hadoop-FS scheme) as UTF-8; None when it
+    * does not exist. */
+  private def readSmallFile(spark: SparkSession,
+                            p: org.apache.hadoop.fs.Path): Option[String] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
+    if (!fs.exists(p)) return None
     val in = fs.open(p)
-    val json = try {
+    try {
       val buf = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      new String(buf.toByteArray, "UTF-8")
+      Some(new String(buf.toByteArray, "UTF-8"))
     } finally in.close()
+  }
+
+  /** [[parseFlatJson]] that fails loudly, naming the `what` at `p`. */
+  private def parseKvAt(p: org.apache.hadoop.fs.Path, what: String)(
+      json: String): Map[String, String] =
     try parseFlatJson(json)
     catch {
       case e: Exception => throw new java.io.IOException(
-        s"malformed manifest at $p (${json.length} bytes): ${e.getMessage}", e)
+        s"malformed $what at $p (${json.length} bytes): ${e.getMessage}", e)
     }
-  }
 
   /** Minimal parser for the writer's own output: {"k":"v",...} with
     * backslash escapes inside strings. */
@@ -213,21 +212,11 @@ object Catalog {
   def cachedDerived(spark: SparkSession, path: String,
                     config: Map[String, String])(compute: => DataFrame): DataFrame = {
     val fp = configFingerprint(config)
-    val conf = spark.sparkContext.hadoopConfiguration
     val fpPath = new org.apache.hadoop.fs.Path(path, "_fingerprint")
-    val fs = fpPath.getFileSystem(conf)
-    val hit = fs.exists(fpPath) && {
-      val in = fs.open(fpPath)
-      val got = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-      got == fp
-    }
-    if (!hit) {
+    if (!readSmallFile(spark, fpPath).contains(fp)) {
       compute.write.mode("overwrite").parquet(path)
-      val out = fs.create(fpPath, true)
+      val out = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(fpPath, true)
       try out.write(fp.getBytes("UTF-8")) finally out.close()
     }
     spark.read.parquet(path)

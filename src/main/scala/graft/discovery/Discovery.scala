@@ -99,12 +99,4 @@ object Discovery {
       .withColumn("move_atr_multiple", shortMove)
     longs.unionByName(shorts).drop("__idx", "__n")
   }
-
-  /** Top-N moves per direction by ATR multiple
-    * (`extreme_move_scanner.py:276-277,400-415`). */
-  def topMoves(moves: DataFrame, n: Int, tieBreak: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col("direction"))
-      .orderBy(col("move_atr_multiple").desc +: tieBreak.map(col(_).asc): _*)
-    moves.withColumn("move_rank", row_number().over(w)).filter(col("move_rank") <= n)
-  }
 }

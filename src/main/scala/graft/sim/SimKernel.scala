@@ -32,13 +32,16 @@ import org.apache.spark.sql.Dataset
   *       SL/TP validation and the margin check;
   *   (4) end of scenario: force-close remaining positions at last price.
   *
-  * Fill semantics (ST10, `trade_simulator.py:610-686`): LONG limit fills
-  * when ask <= limit (at the limit price); SHORT limit when bid >= limit;
-  * STOP triggers on breakout (LONG ask >= stop / SHORT bid <= stop) and
-  * fills at market; STOP_LIMIT converts to a limit order at its limit
-  * price on trigger; market fills at ask (LONG) / bid (SHORT) on the
-  * first tick at/after the latency deadline. SL/TP close at the level
-  * when bid/ask crosses.
+  * Fill semantics (ST10, `trade_simulator.py:610-686`), applied in one
+  * place, `ScenarioSim.trigger`: market fills at ask (LONG) / bid (SHORT)
+  * on the first pass at/after the latency deadline; LONG limit fills when
+  * ask <= limit (at the limit price), SHORT limit when bid >= limit; STOP
+  * triggers on breakout (LONG ask >= stop / SHORT bid <= stop) and fills
+  * at market; STOP_LIMIT converts to a limit order at its limit price on
+  * trigger. The latency drain, active-order monitoring and placement
+  * without latency all go through it; a heartbeat ghost pass drains the
+  * latency queue but does not monitor active orders. SL/TP close at the
+  * level when bid/ask crosses.
   */
 object SimKernel {
 
@@ -237,12 +240,6 @@ object SimKernel {
       open(idx) = p.copy(lots = p.lots - closeLots, swapCost = p.swapCost - swapPart)
     }
 
-    private def openAt(positionId: Long, direction: Direction, lots: Double,
-                     price: Double, sl: Double, tp: Double, msc: Long): Unit =
-      open += OpenPosition(positionId, direction, lots, msc, price, sl, tp,
-        maePnl = 0.0, mfePnl = 0.0, maePrice = price, mfePrice = price,
-        swapCost = 0.0, swapAccruedUntilMsc = msc)
-
     // ---- swap accrual (#365, points mode) ----
     private val DayMs = 86400000L
     private val rollMs = config.swapRolloverUtcHour * 3600000L
@@ -324,15 +321,26 @@ object SimKernel {
     private def fillOpen(w: Working, price: Double, msc: Long,
                        bid: Double, ask: Double): Unit =
       if (!marginOk(w.lots, bid, ask)) nRejected += 1
-      else openAt(w.id, w.direction, w.lots, price, w.sl, w.tp, msc)
+      else open += OpenPosition(w.id, w.direction, w.lots, msc, price, w.sl, w.tp,
+        maePnl = 0.0, mfePnl = 0.0, maePrice = price, mfePrice = price,
+        swapCost = 0.0, swapAccruedUntilMsc = msc)
 
-    /** STOP_LIMIT trigger → becomes a limit order at limitPrice; fills
-      * immediately if the limit is already reached. Returns true if
-      * filled (caller drops it from `working`). */
-    private def convertStopLimit(w: Working, bid: Double, ask: Double, msc: Long): Boolean = {
-      w.kind = 1; w.price = w.limitPrice; w.fromStopLimit = true
-      if (limitReached(w, bid, ask)) { fillOpen(w, w.price, msc, bid, ask); true }
-      else { w.active = true; false }
+    /** The ST10 rule for one working order that is due: market fills at
+      * market, a reached LIMIT at its price, a reached STOP at market; a
+      * reached STOP_LIMIT becomes a limit at its limit price and the rule
+      * applies again. An order that does not fill turns active. Returns
+      * true when the order left the book. */
+    private def trigger(w: Working, bid: Double, ask: Double, nowMsc: Long): Boolean = {
+      val market = if (w.direction == Long_) ask else bid
+      w.kind match {
+        case 0 => fillOpen(w, market, nowMsc, bid, ask); true
+        case 1 if limitReached(w, bid, ask) => fillOpen(w, w.price, nowMsc, bid, ask); true
+        case 2 if stopReached(w, bid, ask) => fillOpen(w, market, nowMsc, bid, ask); true
+        case 3 if stopReached(w, bid, ask) =>
+          w.kind = 1; w.price = w.limitPrice; w.fromStopLimit = true
+          trigger(w, bid, ask, nowMsc)
+        case _ => w.active = true; false
+      }
     }
 
     // Phase 0: apply scheduled modify/cancel ops whose delay elapsed.
@@ -353,116 +361,64 @@ object SimKernel {
       }
     }
 
-    // Phase 1: latency-queue drain (on data ticks AND ghost instants).
-    private def drainLatency(bid: Double, ask: Double, nowMsc: Long): Unit = {
+    /** One walk over the book applying [[trigger]] to every due order:
+      * Phase 1 (`drain`) takes queued orders whose latency deadline
+      * passed, on data ticks AND ghost instants; Phases 2+3 take ACTIVE
+      * orders (price monitoring). */
+    private def walkBook(drain: Boolean, bid: Double, ask: Double, nowMsc: Long): Unit = {
       var i = 0
       while (i < working.length) {
         val w = working(i)
-        var removed = false
-        if (!w.active && nowMsc >= w.deadlineMsc) w.kind match {
-          case 0 =>
-            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-            working.remove(i); removed = true
-          case 1 =>
-            if (limitReached(w, bid, ask)) {
-              fillOpen(w, w.price, nowMsc, bid, ask); working.remove(i); removed = true
-            } else w.active = true
-          case 2 =>
-            if (stopReached(w, bid, ask)) {
-              fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-              working.remove(i); removed = true
-            } else w.active = true
-          case _ =>
-            if (stopReached(w, bid, ask)) {
-              if (convertStopLimit(w, bid, ask, nowMsc)) {
-                working.remove(i); removed = true
-              }
-            } else w.active = true
-        }
-        if (!removed) i += 1
-      }
-    }
-
-    // Phases 2+3: price monitoring of ACTIVE limit / stop orders.
-    private def monitorActive(bid: Double, ask: Double, nowMsc: Long): Unit = {
-      var i = 0
-      while (i < working.length) {
-        val w = working(i)
-        var removed = false
-        if (w.active) w.kind match {
-          case 1 if limitReached(w, bid, ask) =>
-            fillOpen(w, w.price, nowMsc, bid, ask); working.remove(i); removed = true
-          case 2 if stopReached(w, bid, ask) =>
-            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-            working.remove(i); removed = true
-          case 3 if stopReached(w, bid, ask) =>
-            if (convertStopLimit(w, bid, ask, nowMsc)) {
-              working.remove(i); removed = true
-            }
-          case _ => ()
-        }
-        if (!removed) i += 1
-      }
-    }
-
-    /** Submit an open order: route through the latency queue when
-      * latency is configured, else run its phase-1 activation inline. */
-    private def submit(w: Working, bid: Double, ask: Double, nowMsc: Long): Unit = {
-      if (w.deadlineMsc > nowMsc) { working += w; return }
-      w.kind match {
-        case 1 =>
-          if (limitReached(w, bid, ask)) fillOpen(w, w.price, nowMsc, bid, ask)
-          else { w.active = true; working += w }
-        case 2 =>
-          if (stopReached(w, bid, ask))
-            fillOpen(w, if (w.direction == Long_) ask else bid, nowMsc, bid, ask)
-          else { w.active = true; working += w }
-        case _ =>
-          if (stopReached(w, bid, ask)) {
-            if (!convertStopLimit(w, bid, ask, nowMsc)) working += w
-          } else { w.active = true; working += w }
+        val due = if (drain) !w.active && nowMsc >= w.deadlineMsc else w.active
+        if (due && trigger(w, bid, ask, nowMsc)) working.remove(i) else i += 1
       }
     }
 
     private def nextDeadline(nowMsc: Long): Long =
       if (config.latencyMaxMs > 0) nowMsc + delay.next() else nowMsc
 
+    /** Place an open order: SL/TP validation against the best fill
+      * approximation (the limit for LIMIT and STOP_LIMIT, the stop for a
+      * STOP, which fills at market; none for market), the margin check,
+      * then the latency queue — or, with no latency pending, [[trigger]]
+      * at once. */
+    private def place(kind: Int, dir: Direction, lots: Double, price: Double,
+        limit: Double, sl: Double, tp: Double, bid: Double, ask: Double,
+        nowMsc: Long): Unit = {
+      val ref = if (kind == 3) limit else price
+      if ((kind != 0 && !validSlTp(dir, ref, sl, tp)) || !marginOk(lots, bid, ask))
+        nRejected += 1
+      else {
+        val w = new Working(nextPositionId, kind, dir, lots, price, limit, sl, tp,
+          nextDeadline(nowMsc), active = false)
+        nextPositionId += 1
+        if (w.deadlineMsc > nowMsc || !trigger(w, bid, ask, nowMsc)) working += w
+      }
+    }
+
+    /** Close `lots` of position `pid` at market (all of it when `lots`
+      * covers the position). */
+    private def closeDecision(pid: Long, lots: Double, bid: Double, ask: Double,
+                              nowMsc: Long): Unit = {
+      val idx = open.indexWhere(_.positionId == pid)
+      if (idx >= 0) {
+        val p = open(idx)
+        val price = if (p.direction == Long_) bid else ask
+        if (lots >= p.lots) {
+          closePosition(p, price, nowMsc, "decision_close"); open.remove(idx)
+        } else partialClose(idx, lots, price, nowMsc)
+      }
+    }
+
     private def execDecisions(ds: Seq[Decision], bid: Double, ask: Double,
                             nowMsc: Long): Unit = ds.foreach {
-      case OpenMarket(dir, lots, sl, tp) =>
-        if (!marginOk(lots, bid, ask)) nRejected += 1
-        else {
-          val pid = nextPositionId; nextPositionId += 1
-          val deadline = nextDeadline(nowMsc)
-          if (deadline <= nowMsc)
-            openAt(pid, dir, lots, if (dir == Long_) ask else bid, sl, tp, nowMsc)
-          else working += new Working(pid, 0, dir, lots, 0, 0, sl, tp,
-            deadline, active = false)
-        }
+      case OpenMarket(dir, lots, sl, tp) => place(0, dir, lots, 0, 0, sl, tp, bid, ask, nowMsc)
       case OpenLimit(dir, lots, limit, sl, tp) =>
-        if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-        else {
-          val pid = nextPositionId; nextPositionId += 1
-          submit(new Working(pid, 1, dir, lots, limit, 0, sl, tp,
-            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-        }
+        place(1, dir, lots, limit, 0, sl, tp, bid, ask, nowMsc)
       case OpenStop(dir, lots, stop, sl, tp) =>
-        // STOP fills at market once triggered — SL/TP validate against
-        // the stop price (best fill approximation)
-        if (!validSlTp(dir, stop, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-        else {
-          val pid = nextPositionId; nextPositionId += 1
-          submit(new Working(pid, 2, dir, lots, stop, 0, sl, tp,
-            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-        }
+        place(2, dir, lots, stop, 0, sl, tp, bid, ask, nowMsc)
       case OpenStopLimit(dir, lots, stop, limit, sl, tp) =>
-        // STOP_LIMIT fills at the limit — SL/TP validate against it
-        if (!validSlTp(dir, limit, sl, tp) || !marginOk(lots, bid, ask)) nRejected += 1
-        else {
-          val pid = nextPositionId; nextPositionId += 1
-          submit(new Working(pid, 3, dir, lots, stop, limit, sl, tp,
-            nextDeadline(nowMsc), active = false), bid, ask, nowMsc)
-        }
+        place(3, dir, lots, stop, limit, sl, tp, bid, ask, nowMsc)
       case ModifyOrder(oid, np, nl, nsl, ntp) =>
         val w = working.find(x => x.id == oid && x.active).orNull
         if (w == null || w.op != 0) nRejected += 1 // not found or busy
@@ -484,23 +440,9 @@ object SimKernel {
         val w = working.find(x => x.id == oid && x.active).orNull
         if (w == null || w.op != 0) nRejected += 1
         else { w.op = 2; w.applyAtMsc = nowMsc + config.modifyCancelDelayMs }
-      case PartialClose(pid, lots) =>
-        val idx = open.indexWhere(_.positionId == pid)
-        if (idx >= 0) {
-          val p = open(idx)
-          val price = if (p.direction == Long_) bid else ask
-          if (lots >= p.lots) {
-            closePosition(p, price, nowMsc, "decision_close"); open.remove(idx)
-          } else partialClose(idx, lots, price, nowMsc)
-        }
+      case PartialClose(pid, lots) => closeDecision(pid, lots, bid, ask, nowMsc)
       case ClosePosition(pid) =>
-        val idx = open.indexWhere(_.positionId == pid)
-        if (idx >= 0) {
-          val p = open(idx)
-          val price = if (p.direction == Long_) bid else ask
-          closePosition(p, price, nowMsc, "decision_close")
-          open.remove(idx)
-        }
+        closeDecision(pid, Double.PositiveInfinity, bid, ask, nowMsc)
       case Hold => ()
     }
 
@@ -539,7 +481,7 @@ object SimKernel {
           var gm = lastTick.timeMsc + config.heartbeatIntervalMs
           while (gm < t.timeMsc) {
             resolveOps(gm)
-            drainLatency(lastTick.bid, lastTick.ask, gm)
+            walkBook(drain = true, lastTick.bid, lastTick.ask, gm)
             accrueSwaps(gm) // #365: ghost resolutions accrue too
             val eq = balance + unrealizedAt(lastTick.bid, lastTick.ask)
             val hbCtx = buildCtx(lastTick, eq)
@@ -556,8 +498,8 @@ object SimKernel {
 
       // ---- (1) broker path: every tick ----
       resolveOps(t.timeMsc)                       // Phase 0 (#318)
-      drainLatency(t.bid, t.ask, t.timeMsc)       // Phase 1 (ST9/ST10)
-      monitorActive(t.bid, t.ask, t.timeMsc)      // Phases 2+3
+      walkBook(drain = true, t.bid, t.ask, t.timeMsc)  // Phase 1 (ST9/ST10)
+      walkBook(drain = false, t.bid, t.ask, t.timeMsc) // Phases 2+3
       accrueSwaps(t.timeMsc)                      // swap up to this tick
       // position updates: unrealized P&L on bid (LONG) / ask (SHORT),
       // excursion on the gross axis; then SL/TP monitoring

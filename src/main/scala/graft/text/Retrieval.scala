@@ -51,44 +51,18 @@ object Retrieval {
     * tokenizer). Documents matching no term score nothing and never leave
     * the map stage.
     *
-    * Plan shape — an honest round-13 engineering record. The decade
-    * ladder initially read q95 at 112 s for sf100 (25× for 10× data) and
-    * two optimization cuts were built and MEASURED against it:
-    *   - per-term tf as higher-order-function columns (no explode, one
-    *     1-row stats+df aggregate): 5× WORSE at sf10full (22.6 s vs
-    *     4.4 s) — HOF lambdas don't reach whole-stage codegen. Dropped.
-    *   - persisting the pre-filtered postings so the df aggregate and
-    *     the scoring join share one corpus pass (Catalyst clones
-    *     DAG-referenced subtrees into independent passes): SLOWER at
-    *     sf0.1 (2.5 s vs 0.6) and sf10full (5.6 s vs 4.4) — cache
-    *     mechanics cost more than the cheap re-pass they save — and a
-    *     wash at sf100 (29.1 s warm). Kept as [[bm25Shared]], off by
-    *     default, with a parity spec.
-    * The alarm itself was a MEASUREMENT artifact: 2-run subset sessions
-    * report median = mean(cold, warm), and the first documents-family
-    * query paid the cold read + codegen of the whole text pipeline
-    * (Bench's warmup now touches every table). Warm 3-run medians put
-    * the original plan's decade exponent back under 1. The r12 shape —
-    * postings filtered to the query terms BEFORE the exchange, df a
-    * ≤|query|-row broadcast, TakeOrderedAndProject top-k — stands.
+    * Plan shape: postings filtered to the query terms BEFORE the
+    * exchange, df a ≤|query|-row broadcast, TakeOrderedAndProject top-k.
+    * The df aggregate re-derives the postings pass: persisting the
+    * postings so df and scoring share one pass measured slower (cache
+    * mechanics cost more than the cheap re-pass), and per-term
+    * higher-order-function columns miss whole-stage codegen.
     */
   def bm25TopK(docs: DataFrame, id: String, text: String, query: Seq[String],
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(query.nonEmpty, "query must have at least one term")
     require(k > 0, "k must be positive")
-    bm25Impl(docs, id, text, query.distinct, k, k1, b, shared = false)
-  }
-
-  /** The rejected shared-postings cut (persist so df + scoring share one
-    * corpus pass) — kept as the measurement/parity control; see
-    * [[bm25TopK]] for the numbers. */
-  private[text] def bm25Shared(docs: DataFrame, id: String, text: String,
-      terms: Seq[String], k: Int, k1: Double, b: Double): DataFrame =
-    bm25Impl(docs, id, text, terms, k, k1, b, shared = true)
-
-  private def bm25Impl(docs: DataFrame, id: String, text: String,
-      terms: Seq[String], k: Int, k1: Double, b: Double,
-      shared: Boolean): DataFrame = {
+    val terms = query.distinct
     val k1p1 = k1 + 1.0
     val oneMinusB = 1.0 - b
 
@@ -101,17 +75,13 @@ object Retrieval {
 
     // Postings restricted to the query terms BEFORE the exchange: the
     // groupBy shuffles only (doc, query-term) hits, map-side combined.
-    val tfPlain = docs
+    val tf = docs
       .select(col(id), tokens(col(text)).as("__toks"))
       .select(col(id), size(col("__toks")).cast("long").as("__dl"),
         explode(col("__toks")).as("__term"))
       .filter(col("__term").isin(terms: _*))
       .groupBy(col(id), col("__dl"), col("__term"))
       .agg(count(lit(1)).cast("long").as("__tf"))
-    val tf =
-      if (shared) tfPlain.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tfPlain
 
     // ≤ |query| rows; broadcast into the per-posting scoring map.
     val dft = tf.groupBy(col("__term"))

@@ -1,6 +1,7 @@
 package graft.sim
 
 import graft.SparkSpecBase
+import scala.jdk.CollectionConverters._
 
 /** Scripted-trade tests for the extended order surface, mirroring the
   * reference suites: `tests/simulation/sltp_limit_validation/`,
@@ -62,6 +63,18 @@ private class TwoOpens(lots: Double) extends DecisionLogic {
   def onTick(ctx: DecisionContext): Seq[Decision] =
     if (ctx.tickIndex == 0) Seq(OpenMarket(Long_, lots), OpenMarket(Long_, lots))
     else Seq(Hold)
+}
+
+/** Places `order` on the first tick and logs, per tick, the `busy` flag
+  * of every order the decision callback sees. */
+private class OpenAt0Logged(order: Decision) extends DecisionLogic {
+  def onTick(ctx: DecisionContext): Seq[Decision] = {
+    OpenAt0Logged.views.add((ctx.tick.timeMsc, ctx.pendingOrders.map(_.busy)))
+    if (ctx.tickIndex == 0) Seq(order) else Seq(Hold)
+  }
+}
+private object OpenAt0Logged {
+  val views = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Boolean])]()
 }
 
 private class HeartbeatCounter(lots: Double = 1.0) extends DecisionLogic {
@@ -253,5 +266,52 @@ class SimOrderTypesSpec extends SparkSpecBase {
       .collect().head
     assert(HeartbeatCounter.calls.isEmpty)            // market said nothing
     assert(res.trades.head.entryTimeMsc === 60000L)   // fills at the data tick
+  }
+
+  test("latency-queued LIMIT/STOP/STOP_LIMIT: fill on the deadline tick or turn active (ST9/ST10)") {
+    // 100 ms latency: placed at 1000, due at 1100, first drained at 2000.
+    // Every trigger is already reached at 1000, so a fill there would mean
+    // the order skipped the queue.
+    val c = cfg.copy(latencyMinMs = 100, latencyMaxMs = 100)
+    val cases = Seq(
+      // (kind, order, reached (bid, ask), unreached (bid, ask), fill price)
+      ("limit", OpenLimit(Long_, 1.0, 1.10040),
+        (1.10020, 1.10030), (1.10050, 1.10060), 1.10040), // at the limit
+      ("stop", OpenStop(Long_, 1.0, 1.10050),
+        (1.10050, 1.10060), (1.10020, 1.10030), 1.10060), // at market ask
+      ("stop_limit", OpenStopLimit(Long_, 1.0, 1.10050, 1.10070),
+        (1.10050, 1.10060), (1.10020, 1.10030), 1.10070)) // at the limit
+    for ((kind, order, hit, miss, fill) <- cases) {
+      // (a) reached on the deadline tick: fills there, at the rule's price
+      // (b) not reached: turns active (visible, not busy) and fills later
+      //     through price monitoring
+      for ((atDeadline, fillMsc, viewAt2000) <-
+          Seq((hit, 2000L, Seq.empty[Boolean]), (miss, 3000L, Seq(false)))) {
+        OpenAt0Logged.views.clear()
+        val t = ticks("s1", (1000L, hit._1, hit._2),
+          (2000L, atDeadline._1, atDeadline._2), (3000L, hit._1, hit._2))
+        val res = SimKernel.runScenarios(t.toDS(), c, new OpenAt0Logged(order))
+          .collect().head
+        val what = s"$kind, fill at $fillMsc"
+        assert(res.trades.length === 1, what)
+        assert(res.trades.head.entryTimeMsc === fillMsc, what)
+        assert(math.abs(res.trades.head.entryPrice - fill) < 1e-9, what)
+        assert(res.stats.nRejected === 0L, what)
+        assert(OpenAt0Logged.views.asScala.toMap.apply(2000L) === viewAt2000, what)
+      }
+    }
+  }
+
+  test("margin is re-checked at fill time for latency-queued market opens") {
+    // leverage 10, contract 100k -> 10000/lot on a 10000 balance. Both
+    // opens pass the submit-time check (nothing is open yet); at the fill
+    // the first takes all free margin and the second is rejected.
+    val c = cfg.copy(leverage = 10.0, contractSize = 100000.0,
+      latencyMinMs = 100, latencyMaxMs = 100)
+    val t = ticks("s1", (1000L, 1.1, 1.1), (2000L, 1.1, 1.1), (3000L, 1.1, 1.1))
+    val res = SimKernel.runScenarios(t.toDS(), c, new TwoOpens(1.0)).collect().head
+    assert(res.trades.length === 1)
+    assert(res.trades.head.entryTimeMsc === 2000L)
+    assert(res.stats.nRejected === 1L)
   }
 }
