@@ -88,10 +88,6 @@ object Backtest {
       gated(timeMsc, ctx)(inner.onHeartbeat(timeMsc, ctx))
   }
 
-  case class Summary(
-      nSymbols: Long, nWindows: Long, nScenarios: Long, nErrors: Long,
-      nTrades: Long, totalNetPnl: Double)
-
   /** The prepared mount (reference `prepare_mount` output, phases 1-6
     * tick tagging): everything a kernel execution needs, independent of
     * the strategy parameters — which is exactly why a sweep can reuse it

@@ -99,12 +99,6 @@ object Dedup {
   private[dedup] def shingleHash: Column =
     conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long")
 
-  /** Hashed [[cappedShingles]]: (id, shingle: long). */
-  private def hashedShingles(df: DataFrame, id: String, text: String, n: Int,
-                             maxDf: Int): DataFrame =
-    capByDf(shingles(df, id, text, n)
-      .select(col(id), shingleHash.as("shingle")), maxDf)
-
   /** In-kernel ordering for the pair-generation id column. Integral ids
     * compare numerically; string ids compare as UTF-8 bytes — the SAME
     * order as Spark's `Column <` (UTF8String binary) and DuckDB's default
@@ -265,34 +259,12 @@ object Dedup {
                                 maxDf: Int,
                                 chunkSize: Int = 4 << 20,
                                 maxCandidates: Int = 16 << 20): (Array[Long], Array[Long]) = {
-    val (hot, stop, _) =
-      hotStopFrequent(arrs, bound, maxDf, 0, chunkSize, maxCandidates)
-    (hot, stop)
-  }
-
-  /** [[hotAndStop]] plus the `prefixTopK` APPROXIMATELY most frequent
-    * shingles by chunk-count S (a df proxy: within-chunk repeats) — free
-    * from the same pass, collected before the per-chunk counts are
-    * released. The frequent set feeds PREFIX ORDERING ONLY (any global
-    * per-shingle property is a valid PPJoin total order, see
-    * [[ppjoinDocsKernel]]), so its approximation — S depends on chunk
-    * boundaries, hence on partitioning — can change candidate volume but
-    * never results. Exact-df sets (hot/stop) are unchanged. */
-  private def hotStopFrequent(arrs: DataFrame, bound: Int,
-                              maxDf: Int,
-                              prefixTopK: Int,
-                              chunkSize: Int = 4 << 20,
-                              maxCandidates: Int = 16 << 20): (Array[Long], Array[Long], Array[Long]) = {
     val b = math.min(bound, maxDf)
     val spark = arrs.sparkSession
     import spark.implicits._
 
-    def fromRows(rows: Array[(Long, Long)],
-                 freq: Array[Long]): (Array[Long], Array[Long], Array[Long]) = {
-      val hot = rows.map(_._1).sorted
-      val stop = rows.filter(_._2 > maxDf).map(_._1).sorted
-      ((hot ++ freq).distinct.sorted, stop, freq)
-    }
+    def fromRows(rows: Array[(Long, Long)]): (Array[Long], Array[Long]) =
+      (rows.map(_._1).sorted, rows.filter(_._2 > maxDf).map(_._1).sorted)
 
     def exactGroupBy(): Array[(Long, Long)] = (
       arrs.select(explode(col("arr")).as("shingle"))
@@ -332,14 +304,10 @@ object Dedup {
       if (k > b) Array.empty
       else chunkCounts.filter(col("s") > b - k)
         .select(col("shingle")).as[Long].collect()
-    val freq: Array[Long] =
-      if (prefixTopK <= 0) Array.empty
-      else chunkCounts.orderBy(col("s").desc, col("shingle"))
-        .limit(prefixTopK).select(col("shingle")).as[Long].collect().sorted
     chunkCounts.unpersist()
 
-    if (k > b || cands.length > maxCandidates) fromRows(exactGroupBy(), freq)
-    else if (cands.isEmpty) fromRows(Array.empty, freq)
+    if (k > b || cands.length > maxCandidates) fromRows(exactGroupBy())
+    else if (cands.isEmpty) fromRows(Array.empty)
     else {
       java.util.Arrays.sort(cands)
       val candBc = spark.sparkContext.broadcast(cands)
@@ -362,7 +330,7 @@ object Dedup {
       candBc.destroy()
       fromRows(cands.indices.iterator
         .filter(ix => dfs(ix) > b)
-        .map(ix => (cands(ix), dfs(ix))).toArray, freq)
+        .map(ix => (cands(ix), dfs(ix))).toArray)
     }
   }
 
@@ -615,37 +583,31 @@ object Dedup {
     * `maxDf` caps shingle document frequency ([[capByDf]] semantics):
     * similarity is computed over the capped shingle universe, keeping
     * per-posting-list fan-out bounded under adversarial skew.
-    * `prefixHotDf` bounds COLD prefix posting lists: shingles with
-    * df > prefixHotDf are ordered LAST per doc, so they enter prefixes
-    * only for docs that are mostly hot phrases. `prefixTopK` (default
-    * off) additionally deprioritizes the approximately most frequent
-    * shingles (chunk-count proxy, free from the df pass) — ordering is
-    * pruning-only, so results are exact for ANY global order (the
-    * frequent set may vary with partitioning; candidate volume does,
-    * results never). Measured dead end on the flat-df synthetic corpus
-    * (sf100: 30.4M candidates for 306k true pairs, max df < 512 so the
-    * binary order degenerates to hash order): top-1M deprioritization
-    * removed only 4% of candidates — the pair volume lives in tens of
-    * millions of df 2-10 posting lists, not in a frequent head. Keep 0
-    * unless the corpus is zipfian (natural language), where the head
-    * carries the volume. */
+    * [[PrefixHotDf]] bounds COLD prefix posting lists: shingles with a
+    * higher df are ordered LAST per doc, so they enter prefixes only for
+    * docs that are mostly hot phrases. Ordering is pruning-only, so
+    * results are exact for ANY global order. Deprioritizing the top-1M
+    * most frequent shingles as well was measured on the flat-df synthetic
+    * corpus (sf100: 30.4M candidates for 306k true pairs, max df < 512 so
+    * the binary order degenerates to hash order) and removed only 4% of
+    * candidates: the pair volume lives in tens of millions of df 2-10
+    * posting lists, not in a frequent head. */
   def ngramJaccard(df: DataFrame, id: String, text: String,
                    n: Int = 3, threshold: Double = 0.5,
-                   maxDf: Int = DefaultMaxDf,
-                   prefixHotDf: Int = 512,
-                   prefixTopK: Int = 0): DataFrame = {
+                   maxDf: Int = DefaultMaxDf): DataFrame = {
     val idType = df.schema(id).dataType
     idOrdering(idType) // loud type validation up-front, both kernel paths
     val arrs = docShingleArrays(df, id, text, n).cache()
-    val (hot, stop) = hotStopFrequent(arrs, prefixHotDf, maxDf, prefixTopK) match {
-      case (order, stopSet, _) => (order, stopSet)
-    }
+    val (hot, stop) = hotAndStop(arrs, PrefixHotDf, maxDf)
     val docs = ppjoinDocsKernel(arrs, id, threshold, hot, stop)
     val prefixed = docs.select(col(id).as("__id"), col("sz"),
       posexplode(col("pre")).as(Seq("pos", "shingle")))
     verifyJaccardArrays(docs.select(col(id), col("arr"), col("sz")),
       id, ppjoinCandidates(prefixed, idType, threshold), threshold)
   }
+
+  /** df above which a shingle is ordered last in [[ngramJaccard]]'s prefixes. */
+  private val PrefixHotDf = 512
 
   // ---- cross-operator reuse of the PPJoin pair stream ----
 
@@ -662,13 +624,10 @@ object Dedup {
     * it once for three consumers is the cheapest 3× available. */
   def ngramJaccardCached(df: DataFrame, id: String, text: String,
                          n: Int = 3, threshold: Double = 0.5,
-                         maxDf: Int = DefaultMaxDf,
-                         prefixHotDf: Int = 512,
-                         prefixTopK: Int = 0): DataFrame =
-    jaccardMemo.getOrCompute(df,
-      (id, text, n, threshold, maxDf, prefixHotDf, prefixTopK),
+                         maxDf: Int = DefaultMaxDf): DataFrame =
+    jaccardMemo.getOrCompute(df, (id, text, n, threshold, maxDf),
       graft.util.SourceSig.contentSig(df)) {
-      ngramJaccard(df, id, text, n, threshold, maxDf, prefixHotDf, prefixTopK)
+      ngramJaccard(df, id, text, n, threshold, maxDf)
     }
 
   /** Edit-distance near-dup pairs: the memoized PPJoin pair stream
@@ -759,31 +718,6 @@ object Dedup {
       .filter(col("edit_sim") >= minEditSim)
       .select(col("id_a"), col("id_b"),
         round(col("jaccard"), 6).as("jaccard"), col("edit_sim"))
-  }
-
-  /** The round-5 DIRECT form of [[ngramJaccard]], kept as the parity
-    * witness for the PPJoin path (DedupSpec proves result equality on
-    * clustered corpora at several thresholds): inverted index → ALL
-    * co-occurring pairs via a two-sided self-join (the oracle's own
-    * shape, generic over id types) → common counts → inclusion-exclusion.
-    * Correct and fully distributed, but its pair-occurrence stream is
-    * super-linear on one box (sf10 exponent 0.72) — use [[ngramJaccard]]. */
-  private[dedup] def ngramJaccardDirect(df: DataFrame, id: String, text: String,
-                                        n: Int = 3, threshold: Double = 0.5,
-                                        maxDf: Int = DefaultMaxDf): DataFrame = {
-    val sh = hashedShingles(df, id, text, n, maxDf)
-    val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("sz"))
-    val common = sh.select(col(id).as("id_a"), col("shingle"))
-      .join(sh.select(col(id).as("id_b"), col("shingle")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col(id).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Mersenne prime 2^31-1: universal-hash modulus for the minhash family.

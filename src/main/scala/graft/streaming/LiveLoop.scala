@@ -4,19 +4,25 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** The live tick loop (SURVEY ST1) as ONE streaming pipeline:
-  * ticks → incremental bars → strategy on each bar close → decisions —
-  * the Spark form of the reference's autotrader loop
+  * ticks (+ signals) → incremental bars → strategy on each bar close →
+  * decisions — the Spark form of the reference's autotrader loop
   * (`/root/reference/python/framework/autotrader/autotrader_tick_loop.py`:
   * WS source → bar render → workers → decision → orders), with the
   * broker/order leg handled downstream by [[graft.sim.SimKernel]] or a
   * live adapter consuming the emitted decision rows.
   *
-  * One `transformWithState` processor per key holds BOTH pieces of
-  * state: the forming bar (`ValueState`) and a bounded bar history
-  * (`ListState`, trimmed to the strategy's lookback — the ST4 warmup
-  * requirement). BAR_CLOSE compute basis (X3): the strategy fires
-  * exactly once per completed bar, never on intra-bar ticks, and sees
-  * only closed bars. All state is checkpoint-restored (ST11).
+  * One `transformWithState` processor, [[LoopProcessor]], is the loop:
+  * [[runWithSignals]] feeds it ticks and signals, and [[run]] is the same
+  * loop without a signal feed. Per key it holds the latest signal, the
+  * forming bar and a bounded bar history (trimmed to the strategy's
+  * lookback — the ST4 warmup requirement). BAR_CLOSE compute basis (X3):
+  * the strategy fires exactly once per completed bar, never on intra-bar
+  * ticks, and sees only closed bars, which carry the summed tick volume.
+  * Each key's micro-batch is stably sorted by (ts, kind), so ticks out of
+  * time order inside one batch still fold in time order; cross-batch
+  * order is the source's contract. All state is checkpoint-restored
+  * (ST11). A [[run]] query keeps an unused `last_signal` state variable
+  * and restarts from checkpoints written before it had one.
   */
 object LiveLoop {
 
@@ -34,54 +40,6 @@ object LiveLoop {
   case class LoopEvent(key: String, barStartMs: Long, kind: String,
                        action: String, close: Double, tickCount: Long)
 
-  class LoopProcessor(barMs: Long, strategy: BarStrategy)
-      extends StatefulProcessor[String, IncrementalBars.Tick, LoopEvent] {
-
-    @transient private var open: ValueState[IncrementalBars.OpenBar] = _
-    @transient private var hist: ListState[IncrementalBars.Bar] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getValueState("open",
-        Encoders.product[IncrementalBars.OpenBar], TTLConfig.NONE)
-      hist = getHandle.getListState("bar_history",
-        Encoders.product[IncrementalBars.Bar], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String,
-                                 rows: Iterator[IncrementalBars.Tick],
-                                 timers: TimerValues): Iterator[LoopEvent] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[LoopEvent]
-      var cur = if (open.exists()) open.get() else null
-
-      def close(bar: IncrementalBars.Bar): Unit = {
-        out += LoopEvent(key, bar.barStartMs, "bar", "", bar.close, bar.tickCount)
-        // bounded history: append, trim to the strategy lookback
-        val bars = (hist.get().toSeq :+ bar).takeRight(strategy.lookbackBars)
-        hist.put(bars.toArray)
-        strategy.onBarClose(bars).foreach { action =>
-          out += LoopEvent(key, bar.barStartMs, "decision", action,
-            bar.close, bar.tickCount)
-        }
-      }
-
-      rows.foreach(t =>
-        cur = IncrementalBars.foldTick(cur, key, t.tsMs, t.price, t.volume, barMs)(close))
-      if (cur != null) open.update(cur)
-      out.iterator
-    }
-  }
-
-  /** Run the loop over a live tick stream. */
-  def run(ticks: Dataset[IncrementalBars.Tick], barMs: Long,
-          strategy: BarStrategy): Dataset[LoopEvent] = {
-    import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.key)
-      .transformWithState(new LoopProcessor(barMs, strategy), TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  // ---- full loop: signal attach + staleness gate in the stream ----
-
   /** Most recent signal as the strategy sees it at a bar close: `ageMs`
     * is measured at the closing instant (the first tick of the next
     * bucket — the event that proves the bar complete), `stale` applies
@@ -96,6 +54,13 @@ object LiveLoop {
                    signal: Option[SignalView]): Seq[String]
   }
 
+  /** A [[BarStrategy]] as a [[SignalBarStrategy]] that ignores the signal. */
+  private final class IgnoreSignal(inner: BarStrategy) extends SignalBarStrategy {
+    def lookbackBars: Int = inner.lookbackBars
+    def onBarClose(history: Seq[IncrementalBars.Bar],
+                   signal: Option[SignalView]): Seq[String] = inner.onBarClose(history)
+  }
+
   /** [[LoopEvent]] plus the signal view at emission time (age/staleness
     * are those of the closing instant; bars without any signal yet carry
     * hasSignal=false). */
@@ -104,14 +69,13 @@ object LiveLoop {
                         hasSignal: Boolean, signalValue: Double,
                         signalAgeMs: Long, signalStale: Boolean)
 
-  /** One processor = the whole reference tick loop per key: as-of signal
-    * state (the [[StreamingAsOf]] ValueState), the forming bar, and the
-    * bounded bar history all live in the SAME keyed state store, so the
-    * loop needs one shuffle of the unioned feed and nothing else. Within
-    * a micro-batch, events apply in (ts, kind) order with signals first
-    * at equal timestamps (backward-join `<=` visibility). */
-  class LoopSignalProcessor(barMs: Long, strategy: SignalBarStrategy,
-                            maxSignalAgeMs: Long)
+  /** The whole reference tick loop per key: as-of signal state (the
+    * [[StreamingAsOf]] ValueState), the forming bar, and the bounded bar
+    * history all live in the SAME keyed state store, so the loop needs one
+    * shuffle of its feed and nothing else. Signals apply before ticks at
+    * equal timestamps (backward-join `<=` visibility). */
+  class LoopProcessor(barMs: Long, strategy: SignalBarStrategy,
+                      maxSignalAgeMs: Long)
       extends StatefulProcessor[String, StreamingAsOf.Event, LoopEventS] {
 
     @transient private var open: ValueState[IncrementalBars.OpenBar] = _
@@ -157,14 +121,24 @@ object LiveLoop {
         if (e.kind == 0) { // signal: last-wins under the monotone clock
           if (sig == null || e.tsMs >= sig.tsMs)
             sig = StreamingAsOf.LastSignal(e.tsMs, e.signalValue)
-        } else { // tick: the event feed carries no volume
-          cur = IncrementalBars.foldTick(cur, key, e.tsMs, e.price, 0.0, barMs)(close(e.tsMs))
-        }
+        } else
+          cur = IncrementalBars.foldTick(cur, key, e.tsMs, e.price, e.volume, barMs)(close(e.tsMs))
       }
       if (cur != null) open.update(cur)
       if (sig != null) last.update(sig)
       out.iterator
     }
+  }
+
+  /** The loop over a live tick stream with no signal feed. */
+  def run(ticks: Dataset[IncrementalBars.Tick], barMs: Long,
+          strategy: BarStrategy): Dataset[LoopEvent] = {
+    import ticks.sparkSession.implicits._
+    StreamingAsOf.ticksAsEvents(ticks)
+      .groupByKey(_.key)
+      .transformWithState(new LoopProcessor(barMs, new IgnoreSignal(strategy), Long.MaxValue),
+        TimeMode.None(), OutputMode.Append())
+      .map(e => LoopEvent(e.key, e.barStartMs, e.kind, e.action, e.close, e.tickCount))
   }
 
   /** The COMPLETE live pipeline of the reference's autotrader loop in one
@@ -180,7 +154,7 @@ object LiveLoop {
     StreamingAsOf.ticksAsEvents(ticks)
       .union(StreamingAsOf.signalsAsEvents(signals))
       .groupByKey(_.key)
-      .transformWithState(new LoopSignalProcessor(barMs, strategy, maxSignalAgeMs),
+      .transformWithState(new LoopProcessor(barMs, strategy, maxSignalAgeMs),
         TimeMode.None(), OutputMode.Append())
   }
 }

@@ -23,10 +23,10 @@ import org.apache.spark.sql.streaming._
   */
 object StreamingAsOf {
 
-  /** One unioned event: kind 0 = signal (value in `signalValue`),
-    * kind 1 = tick (payload in `price`). */
+  /** One unioned event: kind 0 = signal (value in `signalValue`), kind 1
+    * = tick (`price`, `volume`; only [[LiveLoop]] reads `volume`). */
   case class Event(key: String, tsMs: Long, kind: Int,
-                   price: Double, signalValue: Double)
+                   price: Double, volume: Double, signalValue: Double)
 
   case class LastSignal(tsMs: Long, value: Double)
 
@@ -37,12 +37,12 @@ object StreamingAsOf {
 
   def ticksAsEvents(ticks: Dataset[IncrementalBars.Tick]): Dataset[Event] = {
     import ticks.sparkSession.implicits._
-    ticks.map(t => Event(t.key, t.tsMs, 1, t.price, 0.0))
+    ticks.map(t => Event(t.key, t.tsMs, 1, t.price, t.volume, 0.0))
   }
 
   def signalsAsEvents(signals: Dataset[(String, Long, Double)]): Dataset[Event] = {
     import signals.sparkSession.implicits._
-    signals.map { case (k, ts, v) => Event(k, ts, 0, 0.0, v) }
+    signals.map { case (k, ts, v) => Event(k, ts, 0, 0.0, 0.0, v) }
   }
 
   class AsOfProcessor extends StatefulProcessor[String, Event, Enriched] {

@@ -64,8 +64,8 @@ object IncrementalBars {
     * `market_data_types.py:71-83`): open on first, high=max, low=min,
     * close=last, volume+=, count++. A tick in a later bucket first hands
     * the forming bar to `onClose` as a completed [[Bar]] and starts a new
-    * one — gap buckets emit nothing (ST3). The bar operator and both
-    * live loops fold ticks through this one function. */
+    * one — gap buckets emit nothing (ST3). The bar operator and the
+    * live loop fold ticks through this one function. */
   private[streaming] def foldTick(open: OpenBar, key: String, tsMs: Long,
       price: Double, volume: Double, barMs: Long)(onClose: Bar => Unit): OpenBar = {
     val bs = tsMs - tsMs % barMs

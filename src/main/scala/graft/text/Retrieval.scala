@@ -800,8 +800,6 @@ object Retrieval {
     * the same lock; see its scaladoc for the steal protocol and the
     * best-effort caveats). The atomic manifest rename remains the
     * correctness backstop. */
-  private[text] val LockStaleMs: Long = graft.util.BuildLock.StaleMs
-
   private def withBuildLock[T](spark: SparkSession, indexPath: String)(
       body: => T): T =
     graft.util.BuildLock.withLock(spark, s"$indexPath/_build.lock")(body)

@@ -332,7 +332,7 @@ class DedupSpec extends SparkSpecBase {
     for (t <- Seq(0.9, 1.0)) {
       val got = Dedup.ngramJaccard(corpus, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = Dedup.ngramJaccardDirect(corpus, "doc_id", "text", 3, t)
+      val want = JaccardWitness.ngramJaccardDirect(corpus, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want, s"ppjoin lost/invented pairs at t=$t")
       assert(want.nonEmpty, s"degenerate reference set at t=$t")
@@ -350,7 +350,7 @@ class DedupSpec extends SparkSpecBase {
     assert(out.schema("id_a").dataType ===
       org.apache.spark.sql.types.StringType)
     val got = out.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val want = Dedup.ngramJaccardDirect(corpus, "doc_id", "text", 3, 0.4)
+    val want = JaccardWitness.ngramJaccardDirect(corpus, "doc_id", "text", 3, 0.4)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got === want)
     assert(got.contains(("doc-a", "doc-d")))
@@ -376,7 +376,7 @@ class DedupSpec extends SparkSpecBase {
     val corpus = spark.createDataFrame(rows).toDF("doc_id", "text")
     val lsh = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 12, 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = Dedup.ngramJaccardDirect(corpus, "doc_id", "text", 3, 0.5)
+    val exact = JaccardWitness.ngramJaccardDirect(corpus, "doc_id", "text", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(lsh.nonEmpty)
     lsh.foreach { case (pair, j) =>

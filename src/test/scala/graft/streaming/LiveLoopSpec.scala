@@ -26,6 +26,21 @@ private class SignalGate extends LiveLoop.SignalBarStrategy {
     }
 }
 
+/** Reports the closing bar's summed volume as its action, so the test
+  * reads what the strategy saw in `history` from the decision rows. */
+private class VolumeProbe extends LiveLoop.BarStrategy {
+  val lookbackBars = 1
+  def onBarClose(history: Seq[IncrementalBars.Bar]): Seq[String] =
+    Seq(s"vol=${history.last.volume}")
+}
+
+private class SignalVolumeProbe extends LiveLoop.SignalBarStrategy {
+  val lookbackBars = 1
+  def onBarClose(history: Seq[IncrementalBars.Bar],
+                 signal: Option[LiveLoop.SignalView]): Seq[String] =
+    Seq(s"vol=${history.last.volume}")
+}
+
 class LiveLoopSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -135,5 +150,62 @@ class LiveLoopSpec extends SparkSpecBase {
       // SmaCross(3) fires from the 3rd closed bar on, rising closes -> BUY
       assert(decPerKey === Seq(minutes - 3L), s"uneven decision counts: $decPerKey")
     } finally q.stop()
+  }
+
+  test("both loops hand the strategy bars that carry the summed tick volume") {
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1700000000000L - (1700000000000L % 60000L)
+    // 4 minutes, one tick per second, volume 1..7 cycling: bar sums differ
+    val ticks = (0 until 240).map(i =>
+      IncrementalBars.Tick("X", t0 + i * 1000L, 100.0 + i * 0.01, 1.0 + i % 7))
+    val want = ticks.groupBy(t => (t.tsMs - t0) / 60000L).toSeq.sortBy(_._1)
+      .dropRight(1).map { case (_, ts) => s"vol=${ts.map(_.volume).sum}" }
+    def actions(table: String): Seq[String] =
+      spark.table(table).filter($"kind" === "decision").orderBy("barStartMs")
+        .select("action").as[String].collect().toSeq
+
+    val plain = MemoryStream[IncrementalBars.Tick]
+    val q1 = LiveLoop.run(plain.toDS(), 60000L, new VolumeProbe)
+      .writeStream.outputMode("append").format("memory").queryName("live_loop_vol").start()
+    val tickStream = MemoryStream[IncrementalBars.Tick]
+    val sigStream = MemoryStream[(String, Long, Double)]
+    val q2 = LiveLoop.runWithSignals(tickStream.toDS(), sigStream.toDS(), 60000L,
+        new SignalVolumeProbe, maxSignalAgeMs = 100000L)
+      .writeStream.outputMode("append").format("memory").queryName("live_loop_sig_vol").start()
+    try {
+      val (a, b) = ticks.splitAt(150) // mid-bar: the forming volume carries over
+      plain.addData(a); q1.processAllAvailable()
+      plain.addData(b); q1.processAllAvailable()
+      sigStream.addData(("X", t0, 1.0)); q2.processAllAvailable()
+      tickStream.addData(a); q2.processAllAvailable()
+      tickStream.addData(b); q2.processAllAvailable()
+      assert(want === Seq("vol=234.0", "vol=243.0", "vol=238.0"))
+      assert(actions("live_loop_vol") === want)
+      assert(actions("live_loop_sig_vol") === want)
+    } finally { q1.stop(); q2.stop() }
+  }
+
+  test("ticks out of time order within one batch fold as the sorted batch does") {
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1700000000000L - (1700000000000L % 60000L)
+    val ticks = (0 until 300).map(i =>
+      IncrementalBars.Tick("X", t0 + i * 1000L, 100.0 + i * 0.01 + (i * 37 % 101) * 0.001, 1.0))
+    val shuffled = new scala.util.Random(7).shuffle(ticks)
+    assert(shuffled !== ticks)
+    def events(batch: Seq[IncrementalBars.Tick], name: String) = {
+      val stream = MemoryStream[IncrementalBars.Tick]
+      val q = LiveLoop.run(stream.toDS(), 60000L, new SmaCross(2))
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try {
+        stream.addData(batch); q.processAllAvailable()
+        spark.table(name).as[LiveLoop.LoopEvent].collect().toSeq
+          .sortBy(e => (e.barStartMs, e.kind))
+      } finally q.stop()
+    }
+    val sorted = events(ticks, "live_loop_sorted")
+    assert(sorted.count(_.kind == "bar") === 4)
+    assert(sorted.forall(_.tickCount == 60L))
+    assert(sorted.count(_.kind == "decision") === 3)
+    assert(events(shuffled, "live_loop_shuffled") === sorted)
   }
 }

@@ -280,7 +280,7 @@ class RetrievalMaintenanceSpec extends SparkSpecBase {
     assert(Retrieval.readSegmentManifest(spark, idxDir).isEmpty)
     // a STALE lock is a crashed builder's leftover: stolen, build proceeds
     assert(lock.setLastModified(
-      System.currentTimeMillis() - Retrieval.LockStaleMs - 60000L))
+      System.currentTimeMillis() - graft.util.BuildLock.StaleMs - 60000L))
     Retrieval.buildPostingsIndex(spark.read.parquet(corpusDir),
       "doc_id", "text", idxDir, sourceTag = corpusDir)
     assert(Retrieval.lastBuildInfo.mode === "full")
