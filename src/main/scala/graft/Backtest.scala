@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.ingest.TickIngest
@@ -17,8 +18,8 @@ import graft.workers.Workers
   *
   *   0. validate — typed strategy-parameter validation, FAIL-FAST before
   *      any data is touched (`ScenarioValidator.validate_scenario_parameters`);
-  *   1. index/coverage — per-(symbol, file) time bounds + row counts
-  *      (`tick_index_manager`);
+  *   1. index/coverage — per-symbol time bounds + row counts
+  *      (`tick_index_manager`), counting rows the load filter drops;
   *   2. availability — requested range ⊆ covered range per symbol;
   *   3. requirements — warmup lookback derived from the strategy's
   *      workers (`warmupBars`, ST4), converted to a tick-time margin;
@@ -35,12 +36,12 @@ import graft.workers.Workers
   *      concurrently once the kernel outcomes are cached.
   *
   * Scale shape: every phase is a groupBy/window/join plan (no driver
-  * loops); the kernel phase partitions BY SCENARIO — the reference's
-  * process-pool-per-scenario (`batch_orchestrator.py` worker pool)
-  * becomes `repartition(scenarioId) + sortWithinPartitions + mapPartitions`,
-  * so a 1000-executor cluster runs 1000 scenarios concurrently with no
-  * coordinator. Windows are a dimension table (broadcast into the tick
-  * tagging join); ticks shuffle exactly once (into scenario partitions).
+  * loops). Phases 1, 5 and 6's regions are one window per symbol grouped
+  * into a small cached frame; the kernel partitions BY SCENARIO (the
+  * reference's process pool becomes `repartition(scenarioId) +
+  * sortWithinPartitions + mapPartitions`: 1000 executors run 1000
+  * scenarios with no coordinator). Windows are broadcast into the tick
+  * tagging join: ticks are read twice, by the mount pass and the kernel.
   */
 object Backtest {
 
@@ -92,13 +93,10 @@ object Backtest {
     * tick tagging): everything a kernel execution needs, independent of
     * the strategy parameters — which is exactly why a sweep can reuse it
     * across the whole grid (`batch_orchestrator.py:656-695`: mount
-    * identity excludes strategy params). */
+    * identity excludes strategy params). `facts`, one row per (symbol,
+    * region_idx, valid), is the one cached frame: unpersist it to release. */
   case class Mount(simTicks: Dataset[SimTick], windows: DataFrame,
-                   quality: DataFrame, avail: DataFrame)(coverage: DataFrame) {
-    /** Unpersist the frames [[prepareMount]] cached. */
-    def unpersist(): Unit =
-      Seq(coverage, quality, windows).foreach(_.unpersist())
-  }
+                   quality: DataFrame, avail: DataFrame, facts: DataFrame)
 
   /** Phases 1-6 (pre-kernel): coverage, availability, load, quality
     * gate, scenario windows, tick tagging. `warmupMs` is the caller's
@@ -107,39 +105,43 @@ object Backtest {
                    warmupMs: Long): Mount = {
     import spark.implicits._
 
-    // ---- Phase 1: index & coverage -----------------------------------
-    val coverage = Catalog.coverage(ticks, Seq("symbol"), "ts_ms").cache()
-
-    // ---- Phase 2: availability (requested range = full covered span) -
-    val span = coverage.agg(min(col("start_ms")), max(col("end_ms")))
-      .head()
-    val (startMs, endMs) = (span.getLong(0), span.getLong(1))
-    val avail = Catalog.availability(coverage, Seq("symbol"), startMs, endMs)
-
     // ---- Phase 4: load (spread synthesis for mid-only feeds) ---------
-    val loaded = ticks.select(col("symbol"), col("ts_ms"),
-        (col("mid") - cfg.halfSpread).as("bid"),
-        (col("mid") + cfg.halfSpread).as("ask"))
-      .filter(col("ts_ms").isNotNull && col("mid").isNotNull)
+    // a row with no time or mid keeps a null quote: it counts only in
+    // coverage, and the gap-split and quality rules skip it
+    val valid = col("ts_ms").isNotNull && col("mid").isNotNull
+    val quotes = ticks.select(col("symbol"), col("ts_ms"), valid.as("valid"),
+      when(valid, col("mid") - cfg.halfSpread).as("bid"),
+      when(valid, col("mid") + cfg.halfSpread).as("ask"))
 
-    // ---- Phase 5: data quality gate ----------------------------------
-    val quality = TickIngest.qualityReport(
-      loaded.withColumn("broker_type", lit("SIM"))
-        .withColumn("source_file", lit("events"))
-        .withColumn("arrival_idx", col("ts_ms"))
-        .withColumn("spread_pct",
-          (col("ask") - col("bid")) / col("bid") * 100)
-        .withColumnRenamed("symbol", "symbol")).cache()
-    val bad = quality.filter(
-      col("n_invalid_quote") + col("n_excess_spread") >
-        col("n_ticks") * cfg.maxBadQuotePct / 100.0)
-    val nBad = bad.count()
-    require(nBad == 0,
-      s"phase 5: $nBad symbol(s) exceed the ${cfg.maxBadQuotePct}% bad-quote gate")
+    // ---- Phases 1, 5 and 6: one ordered pass over the ticks ----------
+    val w = Window.partitionBy("symbol").orderBy("ts_ms")
+    val facts = ScenarioWindows.withRegionIdx(quotes,
+        when(col("valid"), col("ts_ms")), w, cfg.splitGapMs)
+      .withColumn("spread_pct", (col("ask") - col("bid")) / col("bid") * 100)
+      .select(col("*") +: TickIngest.qualityCounts(lag(col("bid"), 1, null, true).over(w)): _*)
+      .groupBy("symbol", "region_idx", "valid")
+      .agg(min("ts_ms").as("start_ms"), max("ts_ms").as("end_ms") +:
+        count(lit(1)).as("n_rows") +: count("bid").as("n_ticks") +:
+        TickIngest.QualityCounts.map(c => sum(c).as(c)): _*)
+      .cache()
+
+    // ---- Phases 2 + 5: covered span (= requested range) and gate -----
+    val counts = "n_ticks" +: TickIngest.QualityCounts
+    val perSymbol = facts.groupBy("symbol").agg(min("start_ms").as("start_ms"),
+      max("end_ms").as("end_ms") +: counts.map(c => sum(c).as(c)): _*)
+    val gate = perSymbol.agg(min("start_ms"), max("end_ms"), count_if(col("n_invalid_quote") +
+      col("n_excess_spread") > col("n_ticks") * cfg.maxBadQuotePct / 100.0)).head()
+    require(gate.getLong(2) == 0, s"phase 5: ${gate.getLong(2)} symbol(s) " +
+      s"exceed the ${cfg.maxBadQuotePct}% bad-quote gate")
+    val avail = Catalog.availability(facts, Seq("symbol"),
+      gate.getLong(0), gate.getLong(1))
+    val quality = perSymbol.filter(col("n_ticks") > 0).select(
+      lit("SIM").as("broker_type") +: col("symbol") +: counts.map(col): _*)
 
     // ---- Phase 6: scenario windows × kernel execution ----------------
-    val regions = ScenarioWindows.continuousRegions(
-      loaded, Seq("symbol"), "ts_ms", cfg.splitGapMs)
+    val regions = facts.filter(col("valid")).select(col("symbol"),
+      col("region_idx"), col("start_ms").as("region_start_ms"),
+      col("end_ms").as("region_end_ms"))
     val blocks = ScenarioWindows.blocks(regions, Seq("symbol"),
       cfg.blockMs, cfg.minBlockMs)
     val windows = ScenarioWindows.assignRolesTimeOrdered(blocks,
@@ -147,11 +149,10 @@ object Backtest {
       .withColumn("scenario_id", concat_ws("", col("symbol"), lit("#"),
         col("region_idx"), lit("#"), col("block_no"), lit("@"),
         col("block_start_ms")))
-      .cache()
 
     // tag ticks into scenarios: windows are a broadcast dimension; each
     // tick lands in every window whose [start−warmup, end) covers it
-    val simTicks = loaded.join(
+    val simTicks = quotes.filter(col("valid")).join(
         broadcast(windows.select(col("symbol").as("__wsym"),
           col("scenario_id"), col("block_start_ms"), col("block_end_ms"))),
         col("symbol") === col("__wsym") &&
@@ -162,7 +163,7 @@ object Backtest {
         col("bid"), col("ask"))
       .as[SimTick]
 
-    Mount(simTicks, windows, quality, avail)(coverage)
+    Mount(simTicks, windows, quality, avail, facts)
   }
 
   /** The phase-6 kernel config shared by [[run]] and [[sweep]]. */
@@ -186,19 +187,20 @@ object Backtest {
     }.max * cfg.warmupBarMs
   }
 
-  /** Collects `ranking`, then unpersists the call's kernel output and
-    * mount, and returns the rows as a local frame with the same schema.
-    * Spark matches cached file scans by root path, so a later call in
-    * the same session over a tick table rewritten in place would
-    * otherwise be served this call's coverage, quality, windows and
-    * outcomes. */
-  private def collectAndRelease(ranking: DataFrame, kernelOut: Dataset[_],
-                                mount: Mount): DataFrame = {
-    val rows = ranking.collect()
+  /** Collects `ranking` in rank order as a local frame with the same
+    * schema, runs the artifact `writes` given those rows concurrently,
+    * then unpersists the call's kernel output and mount and returns the
+    * rows. Spark matches cached file scans by root path, so a later call
+    * in the same session over a tick table rewritten in place would
+    * otherwise be served this call's mount facts and outcomes. */
+  private def collectAndRelease(ranking: DataFrame, kernelOut: Dataset[_], mount: Mount)(
+      writes: DataFrame => Seq[() => Unit]): DataFrame = {
+    val rows = ranking.sparkSession.createDataFrame(java.util.Arrays.asList(
+      ranking.collect().sortBy(_.getAs[Int]("rank")): _*), ranking.schema)
+    Serve.writeConcurrently(writes(rows))
     kernelOut.unpersist()
-    mount.unpersist()
-    ranking.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), ranking.schema)
+    mount.facts.unpersist()
+    rows
   }
 
   /** Run the full phase 0–7 pipeline. `ticks` must carry (symbol: string,
@@ -216,17 +218,13 @@ object Backtest {
 
     // ---- Phases 1-6 (pre-kernel): the mount --------------------------
     val mount = prepareMount(spark, ticks, cfg, warmup)
-    val (simTicks, windows, quality, avail) =
-      (mount.simTicks, mount.windows, mount.quality, mount.avail)
-
-    val outcomes = SimKernel.runScenariosOutcomes(simTicks, simConfig(cfg),
+    val outcomes = SimKernel.runScenariosOutcomes(mount.simTicks, simConfig(cfg),
       new WarmupGate(logic)).cache()
 
     // ---- Phase 7: summary — report stack + ranking -------------------
-    val stats = outcomes.filter(_.error == "").flatMap(_.result)
-      .map(_.stats).toDF()
-    val trades = outcomes.filter(_.error == "").flatMap(_.result)
-      .flatMap(_.trades).toDF()
+    val ok = outcomes.filter(_.error == "").flatMap(_.result)
+    val stats = ok.map(_.stats).toDF()
+    val trades = ok.flatMap(_.trades).toDF()
     val errors = outcomes.filter(_.error != "")
       .map(o => (o.scenarioId, o.error)).toDF("scenario_id", "error")
 
@@ -243,7 +241,7 @@ object Backtest {
     // per-scenario pnl ⋈ window role → robustness + WFE by symbol
     val perScenario = stats
       .withColumn("net_pnl", col("finalBalance") - cfg.startBalance)
-      .join(broadcast(windows.select(col("scenario_id").as("scenarioId"),
+      .join(broadcast(mount.windows.select(col("scenario_id").as("scenarioId"),
         col("symbol"), col("role"))), Seq("scenarioId"))
     val robustness = Reports.robustnessStats(perScenario, Seq("symbol"), "net_pnl")
     val wfe = Reports.walkForwardEfficiency(perScenario, Seq("symbol"), "net_pnl")
@@ -260,20 +258,20 @@ object Backtest {
     // ---- artifacts ---------------------------------------------------
     // one job replays every scenario into the cache and counts the
     // errors (an RDD count: no aggregate exchange, so no extra job); the
-    // independent writes then only read the cached outcomes
+    // ranking is then collected once, and the independent writes only
+    // read the cached outcomes and the collected ranking
     val nErrors = outcomes.filter(col("error") =!= "").rdd.count()
-    Serve.writeConcurrently(Seq(
-      () => Serve.writeRankingCsv(ranked.orderBy(col("rank")), s"$outDir/ranking"),
+    collectAndRelease(ranked, outcomes, mount) { ranking => Seq(
+      () => Serve.writeRankingCsv(ranking, s"$outDir/ranking"),
       () => Serve.writeReportJson(analytics, outDir, "trade_analytics"),
       () => Serve.writeReportJson(rollup, outDir, "portfolio_rollup"),
-      () => Serve.writeReportJson(robustness.orderBy(col("symbol")), outDir, "robustness"),
-      () => Serve.writeReportJson(wfe.orderBy(col("symbol")), outDir, "wfe"),
-      () => Serve.writeReportJson(avail.orderBy(col("symbol")), outDir, "availability"),
-      () => Serve.writeReportJson(quality.orderBy(col("symbol")), outDir, "quality")) ++
+      () => Serve.writeReportJson(robustness, outDir, "robustness", col("symbol")),
+      () => Serve.writeReportJson(wfe, outDir, "wfe", col("symbol")),
+      () => Serve.writeReportJson(mount.avail, outDir, "availability", col("symbol")),
+      () => Serve.writeReportJson(mount.quality, outDir, "quality", col("symbol"))) ++
       Option.when(nErrors > 0)(() =>
-        Serve.writeReportJson(errors.orderBy(col("scenario_id")), outDir, "errors")))
-
-    collectAndRelease(ranked.orderBy(col("rank")), outcomes, mount)
+        Serve.writeReportJson(errors, outDir, "errors", col("scenario_id")))
+    }
   }
 
   /** Sweep mode (reference warm path, #419): a strategy parameter grid
@@ -323,17 +321,14 @@ object Backtest {
       .select(col("rank"), col("run_id"), col("params"), col("status"),
         col("objective").as("net_pnl"), col("n_trades"), col("worst_drawdown"))
 
-    ledger.rdd.count() // replay the grid into the cache once, before the writes
-    Serve.writeConcurrently(Seq(
+    // the ranking collect replays the grid into the cache before the writes
+    collectAndRelease(ranked, ledger, mount) { ranking => Seq(
       () => Serve.writeRankingCsv(
-        ranked.withColumn("params", to_json(col("params")))
-          .orderBy(col("rank")), s"$outDir/sweep_ranking"),
-      () => Serve.writeReportJson(ledger.orderBy(col("runId"), col("scenarioId")),
-        outDir, "sweep_ledger"),
-      () => Serve.writeReportJson(mount.avail.orderBy(col("symbol")), outDir, "availability"),
-      () => Serve.writeReportJson(mount.quality.orderBy(col("symbol")), outDir, "quality")))
-
-    collectAndRelease(ranked.orderBy(col("rank")), ledger, mount)
+        ranking.withColumn("params", to_json(col("params"))), s"$outDir/sweep_ranking"),
+      () => Serve.writeReportJson(ledger, outDir, "sweep_ledger", col("runId"), col("scenarioId")),
+      () => Serve.writeReportJson(mount.avail, outDir, "availability", col("symbol")),
+      () => Serve.writeReportJson(mount.quality, outDir, "quality", col("symbol")))
+    }
   }
 
   /** Adapter: the driver testdata's events table as a tick feed —

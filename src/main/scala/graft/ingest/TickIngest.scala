@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,12 +52,12 @@ object TickIngest {
 
   /** Broker-type normalization (`tick_importer.py:99-112`): lower, trim,
     * non [a-z0-9_] → '_'. */
-  def normalizeBrokerType(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def normalizeBrokerType(c: Column): Column =
     regexp_replace(lower(trim(c)), "[^a-z0-9_]", "_")
 
   /** Session label from UTC hour — same map as
     * [[graft.discovery.Discovery.sessionFromUtcHour]]. */
-  private def session(tsCol: org.apache.spark.sql.Column) =
+  private def session(tsCol: Column) =
     graft.discovery.Discovery.sessionFromUtcHour(hour(tsCol))
 
   /** Load one or more export JSON files into normalized tick rows.
@@ -108,30 +108,31 @@ object TickIngest {
       .withColumn("session", session(col("timestamp")))
   }
 
-  /** Quality report (`tick_importer.py:569-593`): invalid quotes
-    * (bid<=0 or ask<=0), excessive spread (spread_pct > maxSpreadPct),
-    * price jumps (|pct_change(bid)| > maxJumpPct, per symbol in arrival
-    * order). Returns one row per (broker_type, symbol). */
+  /** Quality report (`tick_importer.py:569-593`): invalid quotes (bid<=0
+    * or ask<=0), excessive spread (spread_pct > maxSpreadPct), price jumps
+    * (|pct_change(bid)| > maxJumpPct in arrival order per (broker_type,
+    * symbol, source_file)). Returns one row per (broker_type, symbol). */
   def qualityReport(ticks: DataFrame, maxSpreadPct: Double = 5.0,
                     maxJumpPct: Double = 10.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("broker_type"), col("symbol"), col("source_file"))
       .orderBy(col("arrival_idx"))
-    val prevBid = lag(col("bid"), 1).over(w)
-    ticks
-      .withColumn("__jump",
-        when(prevBid.isNotNull && prevBid =!= 0.0f,
-          abs(col("bid") / prevBid - 1.0) * 100.0))
+    ticks.select(col("broker_type") +: col("symbol") +:
+        qualityCounts(lag(col("bid"), 1).over(w), maxSpreadPct, maxJumpPct): _*)
       .groupBy(col("broker_type"), col("symbol"))
-      .agg(
-        count(lit(1)).as("n_ticks"),
-        sum(when(col("bid") <= 0.0f || col("ask") <= 0.0f, 1L).otherwise(0L))
-          .as("n_invalid_quote"),
-        sum(when(col("spread_pct") > maxSpreadPct, 1L).otherwise(0L))
-          .as("n_excess_spread"),
-        sum(when(col("__jump") > maxJumpPct, 1L).otherwise(0L))
-          .as("n_price_jumps"))
+      .agg(count(lit(1)).as("n_ticks"), QualityCounts.map(c => sum(c).as(c)): _*)
   }
+
+  /** The quality rule for one tick: 0/1 columns named [[QualityCounts]],
+    * over its `bid`, `ask`, `spread_pct` and `prevBid`, the previous bid. */
+  def qualityCounts(prevBid: Column, maxSpreadPct: Double = 5.0,
+                    maxJumpPct: Double = 10.0): Seq[Column] =
+    Seq(col("bid") <= 0.0f || col("ask") <= 0.0f, col("spread_pct") > maxSpreadPct,
+        prevBid.isNotNull && prevBid =!= 0.0f &&
+          abs(col("bid") / prevBid - 1.0) * 100.0 > maxJumpPct)
+      .zip(QualityCounts).map { case (c, n) => when(c, 1L).otherwise(0L).as(n) }
+
+  val QualityCounts: Seq[String] = Seq("n_invalid_quote", "n_excess_spread", "n_price_jumps")
 
   /** Duplicate-import detection (`tick_importer.py:468-546`): an incoming
     * batch is rejected when its source_file already exists in the manifest

@@ -1,6 +1,6 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thin serving/sink layer (SURVEY S11–S13): the read-API slice semantics
@@ -28,13 +28,12 @@ object Serve {
   }
 
   /** S11: sweep-ranking CSV sink (`optimization_report.py:189-210`) —
-    * a single ordered CSV with header. One file by contract (it feeds a
-    * spreadsheet, not a downstream job), so the coalesce(1) is the point,
-    * not a scale bug; large ledgers should use the parquet ledger instead.
+    * a single rank-ordered CSV with header. One file by contract (it feeds
+    * a spreadsheet, not a downstream job), so the one partition is the
+    * point, not a scale bug; large ledgers should use the parquet ledger.
     */
   def writeRankingCsv(ranking: DataFrame, path: String): Unit =
-    ranking.orderBy(col("rank"))
-      .coalesce(1)
+    ranking.coalesce(1).sortWithinPartitions(col("rank"))
       .write.mode("overwrite").option("header", "true").csv(path)
 
   /** S11: per-event trade stream CSV (`event_stream_csv_writer.py`) —
@@ -48,10 +47,12 @@ object Serve {
 
   /** S13: report store — one JSON document set per report name
     * (`reports_router.py`: reports are written once, listed, and fetched
-    * whole). */
+    * whole), as one file, sorted within it by `sortBy` when given: no
+    * range-sampling job or exchange, unlike `orderBy(...).coalesce(1)`. */
   def writeReportJson(report: DataFrame, storeDir: String,
-                      name: String): Unit =
-    report.coalesce(1).write.mode("overwrite").json(s"$storeDir/$name")
+                      name: String, sortBy: Column*): Unit =
+    report.coalesce(1).sortWithinPartitions(sortBy: _*)
+      .write.mode("overwrite").json(s"$storeDir/$name")
 
   /** Runs independent artifact writes concurrently, one short-lived
     * thread per write, and returns when all have finished. The threads

@@ -1,7 +1,7 @@
 package graft.windows
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Scenario window generation (SURVEY §1 WindowSet, §7 step 6):
@@ -19,20 +19,23 @@ object ScenarioWindows {
   /** Continuous data regions per key: the timeline splits at gaps larger
     * than `splitGapMs` (allowed gap classes — weekend/short — are modeled
     * by choosing the threshold; regions span smaller gaps).
-    * Returns (keys…, region_idx, region_start_ms, region_end_ms, n_events).
-    */
+    * Returns (keys…, region_idx, region_start_ms, region_end_ms, n_events). */
   def continuousRegions(df: DataFrame, keys: Seq[String], tsMs: String,
-                        splitGapMs: Long): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(tsMs))
-    val delta = col(tsMs) - lag(col(tsMs), 1).over(w)
-    df.withColumn("__is_split",
-        when(delta.isNull || delta <= splitGapMs, 0).otherwise(1))
-      .withColumn("region_idx",
-        sum(col("__is_split")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+                        splitGapMs: Long): DataFrame =
+    withRegionIdx(df, col(tsMs),
+        Window.partitionBy(keys.map(col): _*).orderBy(col(tsMs)), splitGapMs)
       .groupBy((keys.map(col) :+ col("region_idx")): _*)
       .agg(min(col(tsMs)).as("region_start_ms"),
         max(col(tsMs)).as("region_end_ms"),
         count(lit(1)).as("n_events"))
+
+  /** The gap-split rule of [[continuousRegions]]: adds `region_idx`, the
+    * count of gaps over `splitGapMs` between non-null `ts` so far in `w`. */
+  def withRegionIdx(df: DataFrame, ts: Column, w: WindowSpec, splitGapMs: Long): DataFrame = {
+    val delta = ts - lag(ts, 1, null, true).over(w)
+    df.withColumn("region_idx", when(delta > splitGapMs, 1).otherwise(0))
+      .withColumn("region_idx",
+        sum(col("region_idx")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
   /** Chronological fixed-duration blocks within each region.

@@ -192,8 +192,11 @@ class BacktestSpec extends SparkSpecBase {
       s"kernel decided ${calls.value} times for $tagged tagged ticks")
   }
 
-  test("every job of a Backtest.run inherits the caller's job group") {
-    val out = java.nio.file.Files.createTempDirectory("backtest_group").toString
+  /** The job group of every job Spark starts while `body` runs, in
+    * start order. The listener bus is FIFO: once the start of a marker
+    * job run after `body` arrives, every job `body` started has been
+    * seen. */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -203,23 +206,60 @@ class BacktestSpec extends SparkSpecBase {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("g", "backtest under a job group")
-      try Backtest.run(spark, syntheticTicks, out, new Scripted, cfg)
-      finally sc.clearJobGroup()
-      // the listener bus is FIFO: once the marker job's start arrives,
-      // every job the run started has been seen
+      body
       sc.setJobGroup("marker", "listener barrier")
       try spark.range(1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (!groups.contains("marker") && System.nanoTime() < deadline)
         Thread.sleep(50)
     } finally sc.removeSparkListener(listener)
-
     val seen = groups.asScala.toSeq
     assert(seen.contains("marker"), "listener never saw the marker job")
-    val inRun = seen.takeWhile(_ != "marker")
+    seen.takeWhile(_ != "marker")
+  }
+
+  test("every job of a Backtest.run inherits the caller's job group") {
+    val out = java.nio.file.Files.createTempDirectory("backtest_group").toString
+    val sc = spark.sparkContext
+    val inRun = jobGroupsOf {
+      sc.setJobGroup("g", "backtest under a job group")
+      try Backtest.run(spark, syntheticTicks, out, new Scripted, cfg)
+      finally sc.clearJobGroup()
+    }
     assert(inRun.size >= 8, s"expected the run's jobs, saw ${inRun.size}")
     assert(inRun.forall(_ == "g"), s"jobs outside group g: ${inRun.filter(_ != "g")}")
+  }
+
+  test("Backtest.run and sweep stay within their job budgets") {
+    // the counts measured on this fixture: the mount's one ordered pass
+    // and gate action (3 jobs), the kernel, one ranking collect and one
+    // single-file write per artifact; a new job anywhere fails the gate
+    val out = java.nio.file.Files.createTempDirectory("backtest_jobs").toString
+    val runJobs = jobGroupsOf(
+      Backtest.run(spark, syntheticTicks, s"$out/run", new Scripted, cfg)).size
+    assert(runJobs <= 28, s"Backtest.run ran $runJobs jobs")
+    val grid = Map("rsi_period" -> Seq("5", "3"), "bb_period" -> Seq("8", "6"))
+    val sweepJobs = jobGroupsOf(Backtest.sweep(spark, syntheticTicks,
+      s"$out/sweep", grid, lots = 1.0, cfg = cfg)).size
+    assert(sweepJobs <= 13, s"Backtest.sweep ran $sweepJobs jobs")
+  }
+
+  test("a row the load filter drops counts in availability only") {
+    val out = java.nio.file.Files.createTempDirectory("backtest_null").toString
+    val t0 = 1700000000000L
+    // a null-mid row two hours before the first valid tick: were it a
+    // tick, its gap (over splitGapMs) would open a region of its own
+    val withNull = syntheticTicks.union(
+      Seq(("EURUSD", t0 - 7200000L, None: Option[Double])).toDF("symbol", "ts_ms", "mid"))
+    def ranked(ticks: org.apache.spark.sql.DataFrame, dir: String) =
+      Backtest.run(spark, ticks, s"$out/$dir", new Scripted, cfg).collect().toSeq
+    // the same scenarios (id = symbol#region#block@start), roles and results
+    assert(ranked(withNull, "with_null") === ranked(syntheticTicks, "without"))
+    val avail = spark.read.json(s"$out/with_null/availability").head()
+    assert(avail.getAs[Long]("n_rows") === 6L * 24 * 60 + 1)
+    assert(avail.getAs[Long]("data_start_ms") === t0 - 7200000L)
+    val quality = spark.read.json(s"$out/with_null/quality").head()
+    assert(quality.getAs[Long]("n_ticks") === 6L * 24 * 60)
   }
 
   test("a tick table rewritten in place is re-read, not served from cache") {

@@ -329,10 +329,28 @@ class DedupSpec extends SparkSpecBase {
       (i.toLong, words.mkString(" "))
     }
     val corpus = spark.createDataFrame(rows).toDF("doc_id", "text")
-    for (t <- Seq(0.9, 1.0)) {
-      val got = Dedup.ngramJaccard(corpus, "doc_id", "text", 3, t)
+    // longer documents at a middle threshold, built so the prefix bound
+    // is tight: each pair's shorter doc holds half of the longer one's
+    // shingles (jaccard exactly 0.5), and every shingle only the longer
+    // doc has sorts (ascending hash) before the shared ones, so a prefix
+    // one shingle short holds no shared shingle and loses the pair
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def hash(ws: Seq[String]) = Dedup.shingleHashesOf(ws.mkString(" "), 3, md).head
+    def grow(doc: Seq[String], tag: String, keep: Long => Boolean) =
+      (0 until 18).foldLeft(doc) { (d, j) =>
+        d :+ Iterator.from(0).map(k => s"$tag$j.$k")
+          .find(w => keep(hash(d.takeRight(2) :+ w))).get
+      }
+    val halves = (0 until 8).flatMap { i =>
+      val short = grow(Seq(s"a$i", s"b$i"), s"s$i.", _ >= (1L << 59))
+      val long = grow(short, s"l$i.", _ < (1L << 59))
+      Seq((100L + 2 * i, short.mkString(" ")), (101L + 2 * i, long.mkString(" ")))
+    }
+    val longer = spark.createDataFrame(halves).toDF("doc_id", "text")
+    for ((docs, t) <- Seq((corpus, 0.9), (corpus, 1.0), (longer, 0.5))) {
+      val got = Dedup.ngramJaccard(docs, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = JaccardWitness.ngramJaccardDirect(corpus, "doc_id", "text", 3, t)
+      val want = JaccardWitness.ngramJaccardDirect(docs, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want, s"ppjoin lost/invented pairs at t=$t")
       assert(want.nonEmpty, s"degenerate reference set at t=$t")

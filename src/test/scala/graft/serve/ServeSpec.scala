@@ -9,6 +9,15 @@ import graft.SparkSpecBase
 class ServeSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** The lines of each `part-*<ext>` file the sink wrote under `dir`. */
+  private def partLines(dir: String, ext: String): Seq[List[String]] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(ext))
+      .map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }
+
   private def bars = (0 until 100).map { i =>
     (1000L + i * 60000L, "M1", 100.0 + i)
   }.toDF("ts_ms", "timeframe", "close")
@@ -37,13 +46,13 @@ class ServeSpec extends SparkSpecBase {
 
   test("ranking CSV sink round-trips ordered with header") {
     val dir = Files.createTempDirectory("serve_csv").toString
-    val ranking = Seq((1, "run_b", 2.5), (2, "run_a", 1.5), (3, "run_c", 0.5))
-      .toDF("rank", "run_id", "objective")
+    // unsorted rows over three partitions: the sink must sort and merge
+    val ranking = Seq((3, "run_c", 0.5), (1, "run_b", 2.5), (2, "run_a", 1.5))
+      .toDF("rank", "run_id", "objective").repartition(3)
+    assert(ranking.rdd.getNumPartitions === 3)
     Serve.writeRankingCsv(ranking, s"$dir/ranking")
-    val back = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(s"$dir/ranking")
-    assert(back.orderBy("rank").select("run_id").as[String].collect().toSeq ===
-      Seq("run_b", "run_a", "run_c"))
+    assert(partLines(s"$dir/ranking", ".csv") === Seq(Seq("rank,run_id,objective",
+      "1,run_b,2.5", "2,run_a,1.5", "3,run_c,0.5")))
   }
 
   test("event stream CSV: every file has the header and is sorted by ts_ms") {
@@ -52,13 +61,8 @@ class ServeSpec extends SparkSpecBase {
     val events = (0 until 60).map(i => (10000L - i * 7L, s"ev$i", i % 2 == 0))
       .toDF("ts_ms", "event", "is_fill").repartition(3)
     Serve.writeEventStreamCsv(events, s"$dir/events")
-    val files = new java.io.File(s"$dir/events").listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-    assert(files.length > 1, "the event stream stays partitioned")
-    val lines = files.toSeq.map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().toList finally src.close()
-    }
+    val lines = partLines(s"$dir/events", ".csv")
+    assert(lines.size > 1, "the event stream stays partitioned")
     assert(lines.forall(_.head == "ts_ms,event,is_fill"))
     val ts = lines.map(_.tail.map(_.split(',')(0).toLong))
     assert(ts.forall(t => t == t.sorted), "rows must be in ts_ms order within a file")
@@ -67,9 +71,9 @@ class ServeSpec extends SparkSpecBase {
 
   test("report JSON store writes, lists, and reads back") {
     val dir = Files.createTempDirectory("serve_json").toString
-    val report = Seq(("EUR", 10, 123.45), ("USD", 7, -1.5))
-      .toDF("currency", "n_trades", "net_pnl")
-    Serve.writeReportJson(report, dir, "portfolio_summary")
+    val report = Seq(("USD", 7, -1.5), ("EUR", 10, 123.45))
+      .toDF("currency", "n_trades", "net_pnl").repartition(2)
+    Serve.writeReportJson(report, dir, "portfolio_summary", col("currency"))
     Serve.writeReportJson(report.limit(1), dir, "another_report")
     assert(Serve.listReports(spark, dir) ===
       Seq("another_report", "portfolio_summary"))
@@ -77,6 +81,9 @@ class ServeSpec extends SparkSpecBase {
     assert(back.count() === 2)
     assert(back.filter(col("currency") === "EUR")
       .select("net_pnl").as[Double].head() === 123.45)
+    // one file, in `currency` order
+    assert(partLines(s"$dir/portfolio_summary", ".json")
+      .map(_.map(_.split('"')(3))) === Seq(Seq("EUR", "USD")))
   }
 
   test("concurrent writes all finish; the first failure in order is re-thrown") {
