@@ -238,13 +238,11 @@ object Backtest {
       stats.select(col("scenarioId").as("scenario_name"),
         col("maxDrawdown").as("max_drawdown")), Seq("scenario_name")))
 
-    // per-scenario pnl ⋈ window role → robustness + WFE by symbol
+    // per-scenario pnl ⋈ window role: the ranking's rows
     val perScenario = stats
       .withColumn("net_pnl", col("finalBalance") - cfg.startBalance)
       .join(broadcast(mount.windows.select(col("scenario_id").as("scenarioId"),
         col("symbol"), col("role"))), Seq("scenarioId"))
-    val robustness = Reports.robustnessStats(perScenario, Seq("symbol"), "net_pnl")
-    val wfe = Reports.walkForwardEfficiency(perScenario, Seq("symbol"), "net_pnl")
 
     // ranking: objective desc with a stable tie-break (A16 semantics)
     val ranked = Reports.sweepRanking(
@@ -259,14 +257,18 @@ object Backtest {
     // one job replays every scenario into the cache and counts the
     // errors (an RDD count: no aggregate exchange, so no extra job); the
     // ranking is then collected once, and the independent writes only
-    // read the cached outcomes and the collected ranking
+    // read the cached outcomes and the collected ranking, whose rows
+    // (symbol, role, net_pnl per scenario) feed robustness and WFE
+    // without another broadcast of the windows
     val nErrors = outcomes.filter(col("error") =!= "").rdd.count()
     collectAndRelease(ranked, outcomes, mount) { ranking => Seq(
       () => Serve.writeRankingCsv(ranking, s"$outDir/ranking"),
       () => Serve.writeReportJson(analytics, outDir, "trade_analytics"),
       () => Serve.writeReportJson(rollup, outDir, "portfolio_rollup"),
-      () => Serve.writeReportJson(robustness, outDir, "robustness", col("symbol")),
-      () => Serve.writeReportJson(wfe, outDir, "wfe", col("symbol")),
+      () => Serve.writeReportJson(Reports.robustnessStats(ranking, Seq("symbol"), "net_pnl"),
+        outDir, "robustness", col("symbol")),
+      () => Serve.writeReportJson(Reports.walkForwardEfficiency(ranking, Seq("symbol"), "net_pnl"),
+        outDir, "wfe", col("symbol")),
       () => Serve.writeReportJson(mount.avail, outDir, "availability", col("symbol")),
       () => Serve.writeReportJson(mount.quality, outDir, "quality", col("symbol"))) ++
       Option.when(nErrors > 0)(() =>

@@ -31,7 +31,15 @@ import org.apache.spark.sql.SparkSession
   *     cannot see runtime sizes, and the sf100 ladder showed both
   *     failure modes (docs-sized build OOM, then a 30M-candidate build
   *     OOM on the q27 verify);
-  *   - UTC so timestamp functions agree with the DuckDB oracle.
+  *   - UTC so timestamp functions agree with the DuckDB oracle;
+  *   - JVM case mappings (`icu.caseMappings.enabled` off), as in Spark
+  *     3.x: with Spark 4's ICU default, the first `lower`/`upper` in a
+  *     JVM runs `CollationAwareUTF8String`'s static initializer, which
+  *     loads ICU's break-iterator and CJK-dictionary data for about a
+  *     second while other task threads wait on its class-init lock — in
+  *     the cold ingest, `TickIngest.normalizeBrokerType`'s `lower`.
+  *     ASCII strings map to the same bytes either way; other strings
+  *     map through `String.toLowerCase`/`toUpperCase`.
   */
 object GraftSession {
 
@@ -49,6 +57,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       // Adaptive sizing (see class doc): plan every shuffle at 8× cores,
       // coalesce to ~64 MB partitions by measured bytes, floor at the
       // core count down to 64 KB-per-core totals. targetSize =

@@ -51,7 +51,10 @@ object TickIngest {
     "spread_pct", "tick_flags", "session")
 
   /** Broker-type normalization (`tick_importer.py:99-112`): lower, trim,
-    * non [a-z0-9_] → '_'. */
+    * non [a-z0-9_] → '_'. `lower` is the JVM's case mapping (the session
+    * turns ICU's off, see [[graft.GraftSession]]). A non-ASCII letter
+    * ends as '_' unless it lowers to ASCII, as the Kelvin sign does to
+    * 'k'. */
   def normalizeBrokerType(c: Column): Column =
     regexp_replace(lower(trim(c)), "[^a-z0-9_]", "_")
 

@@ -209,19 +209,22 @@ object Reports {
   /** A14: per-role aggregate + Walk-Forward Efficiency = OOS mean / IS
     * mean, undefined (null) when IS mean ≤ 0
     * (`robustness_report_builder.py:133-160`). Input: (keys…, role,
-    * metric); roles are IN_SAMPLE / OUT_OF_SAMPLE. */
+    * metric); roles are IN_SAMPLE / OUT_OF_SAMPLE, other rows are
+    * ignored. One aggregate per key with role-conditional `avg`/`count`
+    * (no IS ⋈ OOS join); a key without one of the roles gets null for
+    * that role's mean and count, as a full outer join would; null key
+    * values form one group. */
   def walkForwardEfficiency(windows: DataFrame, keys: Seq[String],
                             metric: String): DataFrame = {
-    val perRole = windows.groupBy((keys.map(col) :+ col("role")): _*)
-      .agg(avg(col(metric)).as("mean_metric"),
-        count(lit(1)).as("n_windows"))
-    val is = perRole.filter(col("role") === "IN_SAMPLE")
-      .select((keys.map(col) :+ col("mean_metric").as("is_mean") :+
-        col("n_windows").as("n_is")): _*)
-    val oos = perRole.filter(col("role") === "OUT_OF_SAMPLE")
-      .select((keys.map(col) :+ col("mean_metric").as("oos_mean") :+
-        col("n_windows").as("n_oos")): _*)
-    is.join(oos, keys, "full_outer")
+    val perRole = Seq("IN_SAMPLE" -> ("is_mean", "n_is"),
+        "OUT_OF_SAMPLE" -> ("oos_mean", "n_oos")).flatMap { case (role, (mean, n)) =>
+      val in = col("role") === role
+      Seq(avg(when(in, col(metric))).as(mean),
+        nullif(count(when(in, lit(1))), lit(0L)).as(n))
+    }
+    windows.filter(col("role").isin("IN_SAMPLE", "OUT_OF_SAMPLE"))
+      .groupBy(keys.map(col): _*)
+      .agg(perRole.head, perRole.tail: _*)
       .withColumn("wfe",
         when(col("is_mean") > 0, col("oos_mean") / col("is_mean")))
   }

@@ -237,7 +237,7 @@ class BacktestSpec extends SparkSpecBase {
     val out = java.nio.file.Files.createTempDirectory("backtest_jobs").toString
     val runJobs = jobGroupsOf(
       Backtest.run(spark, syntheticTicks, s"$out/run", new Scripted, cfg)).size
-    assert(runJobs <= 28, s"Backtest.run ran $runJobs jobs")
+    assert(runJobs <= 22, s"Backtest.run ran $runJobs jobs")
     val grid = Map("rsi_period" -> Seq("5", "3"), "bb_period" -> Seq("8", "6"))
     val sweepJobs = jobGroupsOf(Backtest.sweep(spark, syntheticTicks,
       s"$out/sweep", grid, lots = 1.0, cfg = cfg)).size

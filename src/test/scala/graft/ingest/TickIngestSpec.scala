@@ -5,12 +5,13 @@ import graft.SparkSpecBase
 
 class TickIngestSpec extends SparkSpecBase {
 
-  private def writeExport(offsetHours: Int, brokerType: String = "MT5!"): String = {
+  private def writeExport(offsetHours: Int, brokerType: String = "MT5!",
+                          brokerField: String = "broker_type"): String = {
     val dir = Files.createTempDirectory("graft_ingest").toFile
     val f = new java.io.File(dir, "EURUSD_20260101_ticks.json")
     // 09:00 broker time; extra "server_time" field must be dropped
     val json =
-      s"""{"metadata": {"symbol": "EURUSD", "broker_type": "$brokerType",
+      s"""{"metadata": {"symbol": "EURUSD", "$brokerField": "$brokerType",
          |  "broker_utc_offset_hours": $offsetHours,
          |  "data_format_version": "1.3.0", "market_type": "forex_cfd"},
          | "ticks": [
@@ -72,5 +73,23 @@ class TickIngestSpec extends SparkSpecBase {
     val r = back.map(x => x.getAs[Long]("arrival_idx") -> x).toMap.apply(0L)
     assert(math.abs(r.getAs[Float]("volume") - 5.0f) < 1e-6)
     assert(math.abs(r.getAs[Double]("mid") - 1.105) < 1e-6)
+  }
+
+  test("normalizeBrokerType: trim, lower, everything outside [a-z0-9_] to '_'") {
+    import spark.implicits._
+    val cases = Seq(
+      " MT5-Live " -> "mt5_live",     // surrounding spaces trimmed, '-' replaced
+      "IC.Markets/Raw" -> "ic_markets_raw",
+      "Broker_9" -> "broker_9",
+      "BÄR" -> "b_r",                 // a non-ASCII letter lowers to 'ä', then '_'
+      "\u212AFX" -> "kfx")            // the Kelvin sign lowers to ASCII 'k'
+    val out = cases.map(_._1).toDF("b")
+      .select(TickIngest.normalizeBrokerType($"b")).as[String].collect().toSeq
+    assert(out === cases.map(_._2))
+    // a legacy export names the broker in `data_collector`
+    val legacy = TickIngest.loadExports(spark,
+      Seq(writeExport(0, " MT5-Live ", brokerField = "data_collector")))
+    assert(legacy.select("broker_type").distinct().as[String].collect().toSeq ===
+      Seq("mt5_live"))
   }
 }

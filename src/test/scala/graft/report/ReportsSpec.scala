@@ -28,12 +28,21 @@ class ReportsSpec extends SparkSpecBase {
   test("walkForwardEfficiency: OOS/IS mean, undefined when IS <= 0") {
     val ws = Seq(
       ("s", "IN_SAMPLE", 10.0), ("s", "IN_SAMPLE", 20.0), ("s", "OUT_OF_SAMPLE", 12.0),
-      ("t", "IN_SAMPLE", -5.0), ("t", "OUT_OF_SAMPLE", 3.0))
+      ("t", "IN_SAMPLE", -5.0), ("t", "OUT_OF_SAMPLE", 3.0),
+      ("u", "IN_SAMPLE", 4.0), ("v", "OUT_OF_SAMPLE", 6.0), ("v", "OUT_OF_SAMPLE", 8.0),
+      ("s", "WARMUP", 1000.0), ("w", "WARMUP", 1.0))
       .toDF("strategy", "role", "metric")
-    val out = Reports.walkForwardEfficiency(ws, Seq("strategy"), "metric")
-      .orderBy("strategy").collect()
+    val wfe = Reports.walkForwardEfficiency(ws, Seq("strategy"), "metric")
+    assert(wfe.columns.toSeq ===
+      Seq("strategy", "is_mean", "n_is", "oos_mean", "n_oos", "wfe"))
+    val out = wfe.orderBy("strategy").collect()
+    // a row whose role is neither is ignored: "w" has no row, "s" keeps its means
+    assert(out.map(_.getString(0)).toSeq === Seq("s", "t", "u", "v"))
     assert(math.abs(out(0).getAs[Double]("wfe") - 12.0 / 15.0) < 1e-12)
     assert(out(1).isNullAt(out(1).fieldIndex("wfe"))) // IS mean negative
+    // IS-only and OOS-only keys: the missing role's mean and count are null, not 0
+    assert(out(2).toSeq === Seq("u", 4.0, 1L, null, null, null))
+    assert(out(3).toSeq === Seq("v", null, null, 7.0, 2L, null))
   }
 
   test("sweepSummaries: NULL run_ids span the timestamps but never count as runs") {

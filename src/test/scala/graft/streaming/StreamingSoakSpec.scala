@@ -89,7 +89,10 @@ class StreamingSoakSpec extends SparkSpecBase {
     try {
       val start = System.nanoTime()
       (0 until minutes).foreach { m =>
+        // each feed is processed before the next, so no micro-batch
+        // takes a minute's signals without its ticks
         ticks.addData(minuteTicks(m))
+        q.processAllAvailable()
         signals.addData(minuteSignals(m))
         q.processAllAvailable()
       }
